@@ -122,11 +122,12 @@ object Bench {
 
   /** Round-14 measurement-honesty fix (r13 verdict item 2): between
     * timed reps the bench drops EVERYTHING a query could ride —
-    * catalog cache, the memoShared session artifacts (whose lineage-cut
-    * checkpoints survive `clearCache`), and every persistent RDD block
-    * (localCheckpoint storage included) — so each rep computes the full
-    * query from the parquet inputs and the timed min of a memo consumer
-    * includes its own artifact build. Round 13 benched those consumers
+    * catalog cache, the shared graph artifacts (GraphOps' co-occurrence
+    * edges and HyperBall rounds, whose lineage-cut checkpoints survive
+    * `clearCache`), and every persistent RDD block (localCheckpoint
+    * storage included) — so each rep computes the full query from the
+    * parquet inputs and the timed min of a memo consumer includes its
+    * own artifact build. Round 13 benched those consumers
     * at memo-lookup time (~0.03–0.4 s) because the untimed warm pass
     * built the artifact and nothing evicted it; those numbers measured
     * the lookup, not the query. */
@@ -211,8 +212,17 @@ object Bench {
         // query that is stuck (the JSON contract is unaffected — the
         // driver greps the single [info] metric line)
         System.err.println(s"[bench] start $name")
+        // a query that throws in the warm pass or in any rep is FAILED:
+        // named in both output lines, and the run exits non-zero
+        var ok = true
+        def run(what: String): Unit =
+          try fn(spark, sfDir).count()
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name $what failed: ${e.getMessage}")
+            ok = false
+          }
         if (doWarm) {
-          try fn(spark, sfDir).count() catch { case _: Throwable => () }
+          run("warm pass")
           resetSharedState(spark)
         }
         // the shuffle and plan probes are heavier than the ALU probe, so
@@ -227,17 +237,17 @@ object Bench {
         val samples = (1 to nReps).map { _ =>
           val calib = calibOnce(spark)
           val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              false
-            }
+          run("rep")
+          // a failed rep keeps its time: dropping it would make a crash
+          // read as a speedup of the total
           val sec = (System.nanoTime() - t0) / 1e9
           resetSharedState(spark)
-          (if (ok) sec else -1.0, calib)
+          (sec, calib)
         }
-        (name, samples)
+        (name, samples, ok)
     }
+    val failed = results.filterNot(_._3).map(_._1)
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     def median(xs: Seq[Double]): Double =
       if (xs.isEmpty) -1.0 else { val s = xs.sorted; s(s.size / 2) }
     // ONE scale factor for the whole run, from the shuffle+plan blended
@@ -249,7 +259,7 @@ object Bench {
     // ALU-fast host no longer gets its shuffle-bound queries inflated by
     // the ALU ratio (the round-6 3× artifact), and a core-starved host
     // doesn't get its driver-bound queries over-deflated.
-    val calibMed = median(results.flatMap(_._2.filter(_._1 >= 0).map(_._2)))
+    val calibMed = median(results.flatMap(_._2.map(_._2)))
     val shufMed = median(shuffleProbes.toSeq)
     val planMed = median(planProbes.toSeq)
     val scaleRaw =
@@ -281,8 +291,8 @@ object Bench {
       if (ratio > 1.3 || ratio < 1 / 1.3) fs += "probe_disagreement_gt_1.3"
       fs.map("\"" + _ + "\"").mkString("[", ",", "]")
     }
-    val rows = results.map { case (name, samples) =>
-      val secs = samples.map(_._1).filter(_ >= 0)
+    val rows = results.map { case (name, samples, _) =>
+      val secs = samples.map(_._1)
       val raw = if (secs.nonEmpty) secs.min else -1.0
       val cal = if (secs.nonEmpty) secs.min * scale else -1.0
       val calMedOfReps = if (secs.nonEmpty) median(secs) * scale else -1.0
@@ -300,7 +310,7 @@ object Bench {
     val totalCalMed = rows.map(_._4).filter(_ >= 0).sum
     // full line first: raw series leads (driver contract + continuity
     // anchor), calibrated series follow
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","calib_ref":$CalibRef,"calib_median":$calibMed,"shuffle_calib_ref":$ShuffleCalibRef,"shuffle_calib_median":$shufMed,"plan_calib_ref":$PlanCalibRef,"plan_calib_median":$planMed,"calib_scale":$scale,"calib_scale_unclamped":$scaleRaw,"alu_skew":$aluSkew,"shuffle_skew":$shufSkew,"plan_skew":$planSkew,"calib_flags":$calibFlags,"reps":$reps,"value_calibrated":$totalCal,"queries_calibrated":$qsCal,"queries_calibrated_median":$qsCalMed}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","calib_ref":$CalibRef,"calib_median":$calibMed,"shuffle_calib_ref":$ShuffleCalibRef,"shuffle_calib_median":$shufMed,"plan_calib_ref":$PlanCalibRef,"plan_calib_median":$planMed,"calib_scale":$scale,"calib_scale_unclamped":$scaleRaw,"alu_skew":$aluSkew,"shuffle_skew":$shufSkew,"plan_skew":$planSkew,"calib_flags":$calibFlags,"reps":$reps,"value_calibrated":$totalCal,"queries_calibrated":$qsCal,"queries_calibrated_median":$qsCalMed,"n_failed":${failed.size},"failed":$failedJson}""")
     // compact summary line LAST: the driver's record keeps only the tail
     // of the bench output, so everything cross-round-gradeable (totals,
     // probe diagnostics, the heaviest queries) is restated here in <2000
@@ -330,7 +340,8 @@ object Bench {
       .sortBy(r => -(r._5 / r._2))
       .map(r => "\"" + r._1 + "\":" + r3(r._5 / r._2))
       .mkString("{", ",", "}")
-    println(s"""{"metric":"summary","unit":"sec","sf":"$sfDir","n_queries":${rows.size},"total_raw_min":${r3(total)},"total_raw_median":${r3(totalRawMed)},"total_calibrated_min":${r3(totalCal)},"total_calibrated_median":${r3(totalCalMed)},"calib_median":${r3(calibMed)},"shuffle_calib_median":${r3(shufMed)},"plan_calib_median":${r3(planMed)},"calib_scale":${r3(scale)},"alu_skew":${r3(aluSkew)},"shuffle_skew":${r3(shufSkew)},"plan_skew":${r3(planSkew)},"calib_flags":$calibFlags,"top20_raw_min":$top20MinObj,"top20_by_min_calibrated_median":$top20Obj,"top20_by_min_raw_median":$top20RawObj,"load_spiked":$loadSpiked}""")
+    println(s"""{"metric":"summary","unit":"sec","sf":"$sfDir","n_queries":${rows.size},"total_raw_min":${r3(total)},"total_raw_median":${r3(totalRawMed)},"total_calibrated_min":${r3(totalCal)},"total_calibrated_median":${r3(totalCalMed)},"calib_median":${r3(calibMed)},"shuffle_calib_median":${r3(shufMed)},"plan_calib_median":${r3(planMed)},"calib_scale":${r3(scale)},"alu_skew":${r3(aluSkew)},"shuffle_skew":${r3(shufSkew)},"plan_skew":${r3(planSkew)},"calib_flags":$calibFlags,"top20_raw_min":$top20MinObj,"top20_by_min_calibrated_median":$top20Obj,"top20_by_min_raw_median":$top20RawObj,"load_spiked":$loadSpiked,"n_failed":${failed.size},"failed":$failedJson}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

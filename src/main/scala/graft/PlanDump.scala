@@ -33,25 +33,18 @@ object PlanDump {
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      // Construction-time cut plans too: a memoShared artifact's
-      // lineage cut starts the final plan at an RDD scan, so the
-      // evidence file would otherwise hide exactly the plans the
-      // optimizations changed. Same cutAudit hook PlanPropsSpec's
-      // planWithBuilds uses — evict so the build actually runs.
-      graft.operators.GraphOps.evictShared(spark)
-      val buf = scala.collection.mutable.Buffer.empty[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
-      graft.operators.CurationOps.cutAudit.set(buf)
-      val plan = try {
-        val df = fn(spark, sfDir)
-        val top = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        (top +: buf.toSeq.map { p =>
-          val qe = spark.sessionState.executePlan(p)
-          qe.explainString(org.apache.spark.sql.execution.ExplainMode
-            .fromString("formatted"))
-        }).mkString("\n=== construction-time cut plan ===\n")
-      } finally graft.operators.CurationOps.cutAudit.remove()
+      // Construction-time cut plans too: an artifact's lineage cut
+      // starts the final plan at an RDD scan, so the evidence file
+      // would otherwise hide exactly the plans the optimizations
+      // changed. Same audit helper PlanPropsSpec's planWithBuilds uses;
+      // it evicts the shared graph artifacts so their builds run.
+      val (df, cuts) = graft.operators.CurationOps.auditCuts(spark)(
+        fn(spark, sfDir))
+      val formatted =
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+      val plan = (df.queryExecution.explainString(formatted) +:
+        cuts.map(p => spark.sessionState.executePlan(p).explainString(formatted)))
+        .mkString("\n=== construction-time cut plan ===\n")
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$outDir/$name.txt"),
         plan.getBytes("UTF-8"))

@@ -44,8 +44,9 @@ object TimeQ {
         } else df.count()
         val tag = if (noop) "noop" else s"$n rows"
         println(f"[timeq] $name rep$i: ${(System.nanoTime() - t0) / 1e9}%.3f s ($tag)")
-        // match Bench semantics: intra-query persists don't carry across reps
-        spark.catalog.clearCache()
+        // match Bench semantics: no persist or shared artifact carries
+        // across reps, so rep 2+ times the query, not a memo lookup
+        Bench.resetSharedState(spark)
       }
       if (sys.env.get("TIMEQ_EXPLAIN").contains("1"))
         fn(spark, sfDir).explain("formatted")

@@ -42,6 +42,19 @@ object CurationOps {
     scala.collection.mutable.Buffer[
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]]
 
+  /** Runs `build` with [[cutAudit]] installed and returns its value
+    * with the optimized plan of every lineage cut it ran. The session's
+    * shared graph artifacts are evicted first, so their builds run (and
+    * are recorded) inside this call rather than hiding behind a memo. */
+  private[graft] def auditCuts[T](s: SparkSession)(build: => T)
+      : (T, Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]) = {
+    GraphOps.evictShared(s)
+    val buf = scala.collection.mutable.Buffer.empty[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
+    cutAudit.set(buf)
+    try (build, buf.toSeq) finally cutAudit.remove()
+  }
+
   def cutLineage(df: DataFrame): DataFrame = {
     val audit = cutAudit.get
     if (audit != null) audit += df.queryExecution.optimizedPlan
@@ -250,32 +263,17 @@ object CurationOps {
       .select(col("lbl").as("cluster_id"), col("n_members"))
       .orderBy("cluster_id")
 
-  /** One near-dup cluster-label artifact per (session, fixture dir):
-    * FIVE queries consume the SAME q59 clustering — q59 (cluster
-    * sizes), q110 (representatives), q116 (clean val split), q178
-    * (soft-dedup weights), q213 (ESS clip curve) — and each was
-    * re-running the full LSH pipeline plus the label-propagation
-    * fixpoint (round-13 measurement: 2.7–4.4 s apiece, ~18.5 s of the
-    * bench total for five audits of one clustering). Hoisted to the
-    * [[GraphOps.memoShared]] pattern (the co-activity precedent):
-    * cluster once per session, hang the survivor/audit tables off it.
-    * Oracles are unchanged — each still states the full closure — and
-    * a fresh session recomputes from parquet. */
-  private val dupLabelsShared =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** The per-node cluster labels behind q59/q110: min-label propagation
     * over the MinHash near-dup edges to the fixpoint. Uses the UNSORTED
     * pair stream ([[DedupOps.minhashLshPairs]]) — propagation is
     * order-free, and q31's output sort was a dead range exchange that
     * the propagation's first lineage cut materialized. */
   private def dupLabels(s: SparkSession, dir: String): DataFrame =
-    GraphOps.memoShared(dupLabelsShared, s, dir)(
-      cutLineage(propagateLabels(
-        DedupOps.nearVerified(s, dir, bucketCap = None)
-          .filter(col("jaccard") >= 0.5)
-          .select(col("doc_a"), col("doc_b")),
-        corpusNear(s, dir).select(col("doc_id")))))
+    cutLineage(propagateLabels(
+      DedupOps.nearVerified(s, dir, bucketCap = None)
+        .filter(col("jaccard") >= 0.5)
+        .select(col("doc_a"), col("doc_b")),
+      corpusNear(s, dir).select(col("doc_id"))))
 
   /** Min-label propagation to the fixpoint over an arbitrary
     * (doc_a, doc_b) pair table and node set — the ONE connected-

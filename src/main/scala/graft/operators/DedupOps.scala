@@ -627,50 +627,36 @@ object DedupOps {
         col("band.band_hash").as("band_hash"))
   }
 
-  /** One LSH-pipeline artifact per (session, fixture dir) over
-    * [[corpusNear]]: SIX production queries — q30 (verified 0.6 pairs),
-    * q31 (uncapped LSH), q118 (capped LSH), q156 (method Venn's minhash
-    * and containment streams), q161 (incremental index), q196
-    * (threshold curve) — plus the q59-family label artifact all start
-    * from the same shingles → signatures → band keys chain over the
-    * same corpus, and each was rebuilding it from the parquet scan
-    * (round-13 measurement: ~0.8–1.2 s of identical build inside each).
-    * [[GraphOps.memoShared]] hoist (the co-activity precedent). Tuple =
+  /** The LSH pipeline over [[corpusNear]]: shingles → signatures →
+    * band keys → capped verified candidates, the chain q30, q31, q118,
+    * q156, q161, q196 and the q59-family labels start from. Tuple =
     * (sh, sigs, bands, docSh, verifiedCapped); each element is a
-    * lineage cut, so the artifact survives the harness' per-query
-    * clearCache. Oracles unchanged; fresh sessions recompute from
-    * parquet. */
-  private val nearLshShared = scala.collection.concurrent.TrieMap.empty[
-    (SparkSession, String),
-    (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame)]
-
+    * lineage cut. */
   private[graft] def nearLshArtifacts(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) =
-    GraphOps.memoShared(nearLshShared, s, dir) {
-      // ONE cut on the fused (sig, n_sh, shs) aggregate replaces the
-      // separate sh/sigs/docSh cuts: signatures and shingle arrays
-      // previously each re-shuffled the full shingle stream on doc_id,
-      // and the raw stream itself was checkpointed a third time only to
-      // feed them. sigs/docSh are now in-row projections of the one
-      // artifact, and the (doc_id, shingle) stream consumers re-derive
-      // by exploding the checkpointed arrays (same rows — shingles are
-      // distinct per doc and order-free).
-      val combined = CurationOps.cutLineage(
-        sigsWithDocSh(shingles(corpusNear(s, dir))))
-      val sigs = combined.select(sigCols: _*)
-      val docSh = combined.select(col("doc_id"), col("shs"))
-      val sh = docSh.select(col("doc_id"), explode(col("shs")).as("shingle"))
-      val bands = CurationOps.cutLineage(lshBands(sigs))
-      val verified = CurationOps.cutLineage(
-        verifyPairs(cappedCandidates(bands, Some(LshBucketCap)), docSh))
-      (sh, sigs, bands, docSh, verified)
-    }
+      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
+    // ONE cut on the fused (sig, n_sh, shs) aggregate replaces the
+    // separate sh/sigs/docSh cuts: signatures and shingle arrays
+    // previously each re-shuffled the full shingle stream on doc_id,
+    // and the raw stream itself was checkpointed a third time only to
+    // feed them. sigs/docSh are now in-row projections of the one
+    // artifact, and the (doc_id, shingle) stream consumers re-derive
+    // by exploding the checkpointed arrays (same rows — shingles are
+    // distinct per doc and order-free).
+    val combined = CurationOps.cutLineage(
+      sigsWithDocSh(shingles(corpusNear(s, dir))))
+    val sigs = combined.select(sigCols: _*)
+    val docSh = combined.select(col("doc_id"), col("shs"))
+    val sh = docSh.select(col("doc_id"), explode(col("shs")).as("shingle"))
+    val bands = CurationOps.cutLineage(lshBands(sigs))
+    val verified = CurationOps.cutLineage(
+      verifyPairs(cappedCandidates(bands, Some(LshBucketCap)), docSh))
+    (sh, sigs, bands, docSh, verified)
+  }
 
   /** The verified candidate stream over [[corpusNear]] at an arbitrary
-    * cap, riding [[nearLshArtifacts]]: the production cap returns the
-    * pre-verified artifact directly; other caps re-derive candidates
-    * from the checkpointed band keys (the expensive shingle/signature
-    * chain is never rebuilt). */
+    * cap, built on [[nearLshArtifacts]]: the production cap returns
+    * the pre-verified artifact directly; other caps re-derive
+    * candidates from the checkpointed band keys. */
   private[graft] def nearVerified(s: SparkSession, dir: String,
       bucketCap: Option[Int]): DataFrame = {
     val (_, _, bands, docSh, verifiedCapped) = nearLshArtifacts(s, dir)
@@ -958,37 +944,24 @@ object DedupOps {
       .withColumn("jaccard",
         col("n_inter") / (col("n_a") + col("n_b") - col("n_inter")))
 
-  /** One production-candidate-stream artifact per (session, fixture
-    * dir) over the graded [[corpusSpread]] corpus: FOUR audit queries —
-    * q154 (estimator calibration), q218 (chain audit), q315 (edit
-    * verify), q327 (perm-count curve) — all score THE SAME q118-capped
-    * candidate generation, and each was rebuilding shingles →
-    * signatures → bands → verification from scratch (round-13
-    * measurement: 2.9–7.3 s apiece, ~16.5 s of bench total on one
-    * stream). [[GraphOps.memoShared]] hoist (the co-activity
-    * precedent): generate candidates once per session, hang the audits
-    * off them. Tuple = (sigs, cands, docSh, verified); every element is
-    * a lineage cut, so the artifact survives the harness' per-query
-    * clearCache. Oracles unchanged (each states the full generation);
-    * fresh sessions recompute from parquet. */
-  private val spreadLshShared = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame, DataFrame)]
-
+  /** The production candidate stream over the graded [[corpusSpread]]
+    * corpus: the q118-capped generation the q154, q218, q315 and q327
+    * audits score. Tuple = (sigs, cands, docSh, verified); every
+    * element is a lineage cut. */
   private[graft] def spreadLshArtifacts(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    GraphOps.memoShared(spreadLshShared, s, dir) {
-      // ONE cut on the fused (sig, n_sh, shs) aggregate — signatures
-      // and shingle arrays previously each re-shuffled the full spread
-      // shingle stream on doc_id (see nearLshArtifacts)
-      val combined = CurationOps.cutLineage(
-        sigsWithDocSh(shingles(corpusSpread(s, dir))))
-      val sigs = combined.select(sigCols: _*)
-      val docSh = combined.select(col("doc_id"), col("shs"))
-      val cands = CurationOps.cutLineage(
-        cappedCandidates(lshBands(sigs), Some(LshBucketCap)))
-      val verified = CurationOps.cutLineage(verifyPairs(cands, docSh))
-      (sigs, cands, docSh, verified)
-    }
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    // ONE cut on the fused (sig, n_sh, shs) aggregate — signatures
+    // and shingle arrays previously each re-shuffled the full spread
+    // shingle stream on doc_id (see nearLshArtifacts)
+    val combined = CurationOps.cutLineage(
+      sigsWithDocSh(shingles(corpusSpread(s, dir))))
+    val sigs = combined.select(sigCols: _*)
+    val docSh = combined.select(col("doc_id"), col("shs"))
+    val cands = CurationOps.cutLineage(
+      cappedCandidates(lshBands(sigs), Some(LshBucketCap)))
+    val verified = CurationOps.cutLineage(verifyPairs(cands, docSh))
+    (sigs, cands, docSh, verified)
+  }
 
 
   // --- q196: dedup threshold sensitivity curve ---------------------------

@@ -29,33 +29,20 @@ object GraphOps {
   val Iterations = 3
   val TopK = 20
 
-  /** One distinct trade-pair artifact per (session, fixture dir): SIX
-    * trade-graph queries (q70 PageRank, q314 PPR, q338 k-core, q339
-    * assortativity, q355 HITS, q389 butterflies) all start from the
-    * same `lineitem ⋈ orders → distinct (custkey, suppkey)` collapse —
-    * the only corpus-sized exchange any of them pays — and each was
-    * rebuilding it from the parquet scan (round-13 measurement: ~1–2 s
-    * of identical build inside each of six bench queries). Hoisted to
-    * the [[cooccurEdges]]/[[memoShared]] pattern the round-12 judge
-    * endorsed for the co-activity wing: build once per session, hang
-    * the N graph audits off it. Each query's oracle still states the
-    * full build; a fresh session (every bench/verify invocation)
-    * recomputes from parquet. */
-  private val tradePairsShared =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** The distinct (ck, sk) customer–supplier trade pairs (INT keys —
     * the dedup shuffle moves 16 bytes per row; consumers derive string
-    * prefixes or long packings AFTER the collapse). */
-  private[graft] def tradePairs(s: SparkSession, dir: String): DataFrame =
-    memoShared(tradePairsShared, s, dir) {
-      val li = EtlOps.t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val o = EtlOps.t(s, dir, "orders").select("o_orderkey", "o_custkey")
-      CurationOps.cutLineage(
-        li.join(o, li("l_orderkey") === o("o_orderkey"))
-          .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-          .distinct())
-    }
+    * prefixes or long packings AFTER the collapse). The one
+    * corpus-sized exchange of the six trade-graph queries (q70, q314,
+    * q338, q339, q355, q389); each builds it once, behind a lineage
+    * cut. */
+  private[graft] def tradePairs(s: SparkSession, dir: String): DataFrame = {
+    val li = EtlOps.t(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
+    val o = EtlOps.t(s, dir, "orders").select("o_orderkey", "o_custkey")
+    CurationOps.cutLineage(
+      li.join(o, li("l_orderkey") === o("o_orderkey"))
+        .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
+        .distinct())
+  }
 
   /** The undirected trade graph: distinct (customer, supplier) pairs
     * that ever traded (lineitem ⋈ orders), as directed edges both ways.
@@ -966,80 +953,50 @@ object GraphOps {
     * intersections of O(√m)-bounded neighbor lists — the wedge stream
     * is never materialized or shuffled; the only exchanges are the
     * adjacency groupBy and two m-row joins. */
-  /** One co-activity edge artifact per (session, fixture dir):
-    * q307/q319/q375 all consume the SAME capped co-occurrence graph,
-    * and rebuilding it per query (distinct + cap window + self-join)
-    * was the graph tier's shared bench floor. The artifact is a
-    * localCheckpoint (cutLineage), NOT a catalog-cache persist — the
-    * harness mains clear the catalog cache between queries, while a
-    * checkpointed RDD survives the whole suite run. Per-query oracles
-    * are unchanged: each still states the full build. At cluster
-    * scale this is the "build the graph once, hang N audits off it"
-    * pattern (the q365-rides-q358 discipline, hoisted a level). */
-  private val coocShared =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Every memo map that has ever been consulted, so [[evictShared]]
-    * can drop a session's artifacts without each family registering
-    * itself by hand. IDENTITY-keyed on purpose: mutable maps hash by
-    * content, so a content-keyed set would collapse all empty maps into
-    * one registration and corrupt as they mutate. The value type is
-    * erased (the eviction only removes entries, it never reads them). */
-  private val sharedRegistry: java.util.Set[
-      scala.collection.concurrent.TrieMap[(SparkSession, String), _]] =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.IdentityHashMap[
-          scala.collection.concurrent.TrieMap[(SparkSession, String), _],
-          java.lang.Boolean]))
-
-  /** Memo access for JVM-lifetime shared artifacts keyed by (session,
-    * fixture dir). Assumes fixture dirs are IMMUTABLE within a session
-    * (the testdata contract — the driver never rewrites a sf dir while
-    * a suite runs against it). Entries whose session has stopped are
-    * evicted on every access, so the map is bounded by the live-session
-    * count and stopped sessions don't pin checkpoint blocks. Concurrent
-    * first access may build the artifact twice — benign: both values
-    * are checkpoints of the same deterministic plan, last write wins.
-    *
-    * The key additionally carries the session's lineage-cut mode
-    * ([[CurationOps.CheckpointDirKey]], round-14 fix): a caller that
-    * configures RELIABLE checkpointing must not be handed an artifact
-    * whose cuts were localCheckpoints — the blocks it expects to
-    * survive executor loss would not (CurationOpsSpec pins this). */
-  private[graft] def memoShared[V](
-      map: scala.collection.concurrent.TrieMap[(SparkSession, String), V],
-      s: SparkSession, dir: String)(build: => V): V = {
-    sharedRegistry.add(
-      map.asInstanceOf[scala.collection.concurrent.TrieMap[
-        (SparkSession, String), _]])
-    map.keys.filter(_._1.sparkContext.isStopped).foreach(map.remove)
-    val mode = s.conf.getOption(CurationOps.CheckpointDirKey)
-      .map(" " + _).getOrElse("")
-    map.getOrElseUpdate((s, dir + mode), build)
+  /** The artifacts one session's graph queries share: the capped
+    * co-occurrence edges, which every co-activity query reads (q307,
+    * q319, q375, q380, q382, q390, ...), and the HyperBall register
+    * generations, which q382 reads from q380. Each is built on first
+    * use, behind lineage cuts, so the checkpointed blocks outlive the
+    * catalog cache; later queries of the session read them. Oracles
+    * are unchanged: each still states the full build. */
+  private final class SessionArtifacts(s: SparkSession, dir: String) {
+    lazy val cooc: DataFrame = CurationOps.cutLineage(cooccurEdgesBuild(s, dir))
+    lazy val hb: (Long, IndexedSeq[DataFrame]) = hbRoundsBuild(s, dir)
   }
 
-  /** Drops every shared artifact of `s` from every memo family. The
-    * bench calls this between timed reps so each rep pays the FULL
-    * query cost from the parquet inputs — shared artifacts are a
-    * session-architecture feature ("build the graph once, hang N
-    * audits off it"), not a benchmark subsidy; with eviction the timed
-    * min of every consumer includes its own build again (round-14
-    * measurement-honesty fix). The entries' checkpoint blocks are NOT
-    * unpersisted here (in-flight consumers may still hold the frames);
-    * the bench additionally unpersists all persistent RDDs after each
-    * rep, which frees them deterministically. */
-  private[graft] def evictShared(s: SparkSession): Unit = {
-    val maps = sharedRegistry.synchronized {
-      import scala.jdk.CollectionConverters._
-      sharedRegistry.asScala.toVector
-    }
-    maps.foreach { m => m.keys.filter(_._1 eq s).foreach(m.remove) }
+  /** Memo contract: keyed by (session, fixture dir, lineage-cut mode).
+    *  - Fixture dirs are IMMUTABLE within a session (the testdata
+    *    contract), so a key never goes stale while its session lives.
+    *  - The mode ([[CurationOps.CheckpointDirKey]]) is part of the key:
+    *    a session that configures RELIABLE checkpointing must not be
+    *    handed artifacts whose cuts were localCheckpoints — the blocks
+    *    it expects to survive executor loss would not.
+    *  - Entries of stopped sessions are swept on every access, so the
+    *    map is bounded by the live-session count and a stopped session
+    *    pins no checkpoint blocks.
+    *  - [[evictShared]] drops a session's entries (Bench between reps,
+    *    the cut audit before each build). */
+  private val shared = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, Option[String]), SessionArtifacts]
+
+  private def artifacts(s: SparkSession, dir: String): SessionArtifacts = {
+    shared.keys.filter(_._1.sparkContext.isStopped).foreach(shared.remove)
+    val key = (s, dir, s.conf.getOption(CurationOps.CheckpointDirKey))
+    shared.getOrElseUpdate(key, new SessionArtifacts(s, dir))
   }
+
+  /** Drops every shared artifact of `s`. The bench calls this between
+    * timed reps so each rep pays the FULL query cost from the parquet
+    * inputs. The entries' checkpoint blocks are NOT unpersisted here
+    * (in-flight consumers may still hold the frames); the bench
+    * additionally unpersists all persistent RDDs after each rep, which
+    * frees them deterministically. */
+  private[graft] def evictShared(s: SparkSession): Unit =
+    shared.keys.filter(_._1 eq s).foreach(shared.remove)
 
   private[graft] def cooccurEdges(s: SparkSession, dir: String): DataFrame =
-    memoShared(coocShared, s, dir)(
-      CurationOps.cutLineage(cooccurEdgesBuild(s, dir)))
+    artifacts(s, dir).cooc
 
   /** The co-activity edge list (ua < ub) — exposed so the spec can
     * count triangles independently of the oriented wedge join. */
@@ -1672,27 +1629,10 @@ object GraphOps {
   def boruvkaMst(s: SparkSession, dir: String): DataFrame =
     boruvkaRun(s, dir)._2.orderBy("round")
 
-  /** One MSF artifact per (session, fixture dir): q365's docstring has
-    * always said it reads the curve "STRAIGHT off q358's minimum
-    * spanning forest" — but each call re-ran the whole forest build
-    * (LSH edge stream + Borůvka rounds; round-13 measurement: q358
-    * 8.5 s and q365 9.0 s, i.e. the forest was paid twice). The
-    * [[memoShared]] hoist makes the documented discipline real: ONE
-    * forest per session, both queries read it. Every per-round frame
-    * inside is already a lineage cut (localCheckpoint), so the memoized
-    * tuple survives the harness' per-query clearCache. Oracles
-    * unchanged; fresh sessions recompute from parquet. */
-  private val boruvkaShared = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame, DataFrame)]
-
   /** (chosen edges with round, per-round summaries, final labels, edge
     * frame) — the edge frame feeds the spec's Kruskal equality; the
     * final labels + edges feed q365's forest-completeness assertion. */
   private[graft] def boruvkaRun(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    memoShared(boruvkaShared, s, dir)(boruvkaRunBuild(s, dir))
-
-  private def boruvkaRunBuild(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val e = CurationOps.cutLineage(mstEdges(s, dir)).persist()
     var labels = CurationOps.cutLineage(
@@ -2170,54 +2110,53 @@ object GraphOps {
     * only; production pays sketch cost. */
   /** The HyperBall register generations regs_0..regs_R (per-node
     * m-register ARRAYS, one hop of max-merge growth per round) —
-    * memoized per (session, fixture dir) like [[cooccurEdges]], so
-    * q380's curve and q382's harmonic centrality read the SAME
-    * checkpointed sketch stream and the rounds run once per suite. Array state + native hll_merge_agg is the
+    * memoized per session ([[SessionArtifacts]]) like [[cooccurEdges]],
+    * so q380's curve and q382's harmonic centrality read the SAME
+    * checkpointed sketch stream and the rounds run once per session. Array state + native hll_merge_agg is the
     * measured 9× plan over the relational (node, bkt, r) join form
     * (which fans the edge⋈register join out to |E|·m rows per round);
     * the oracles keep the relational GROUP BY (node, bkt) → max(r)
     * rebuild — same merge law, identical registers (q224 discipline). */
-  private val hbShared = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Long, IndexedSeq[DataFrame])]
-
   private[graft] def hbRounds(s: SparkSession, dir: String)
-      : (Long, IndexedSeq[DataFrame]) =
-    memoShared(hbShared, s, dir) {
-      graft.functions.VectorFunctions.register(s)
-      val m = ProfileOps.HllM
-      val und = cooccurEdges(s, dir)
-      val ed = und.select(col("ua").as("src"), col("ub").as("dst"))
-        .unionAll(und.select(col("ub").as("src"), col("ua").as("dst")))
-        .persist()
-      // byte-packed registers (hb_agg / hb_merge_agg — BINARY(m), ranks
-      // ≤ 53 fit one byte): the per-round edge join + max-merge moves
-      // |2E| whole register vectors, and the array<long> form shipped
-      // 8× the bytes for the same registers. Values and the merge law
-      // are identical (spec-asserted against the hll_* forms); the
-      // relational oracle rebuild is unchanged.
-      var regs = CurationOps.cutLineage(
-        ed.select(col("src").as("node")).distinct()
-          .withColumn("h", call_function("md5_fp60",
-            concat(lit("hb:"), col("node").cast("string"))))
-          .withColumn("bkt", col("h") % m)
-          .withColumn("rnk", expr(ProfileOps.hllRankSql("h")).cast("long"))
-          .groupBy("node")
-          .agg(expr(s"hb_agg(array(bkt, rnk), $m)").as("regs")))
-      val nNodes = regs.count()
-      val gens = scala.collection.mutable.Buffer[DataFrame](regs)
-      for (_ <- 1 to HyperBallRounds) {
-        val nb = ed.join(regs.select(col("node").as("dst"), col("regs")),
-            Seq("dst"))
-          .select(col("src").as("node"), col("regs"))
-        regs = CurationOps.cutLineage(
-          regs.unionAll(nb).groupBy("node")
-            .agg(expr(s"hb_merge_agg(regs, $m)").as("regs")))
-        gens += regs
-      }
-      // every generation is checkpointed — the edge cache is done
-      ed.unpersist()
-      (nNodes, gens.toIndexedSeq)
+      : (Long, IndexedSeq[DataFrame]) = artifacts(s, dir).hb
+
+  private def hbRoundsBuild(s: SparkSession, dir: String)
+      : (Long, IndexedSeq[DataFrame]) = {
+    graft.functions.VectorFunctions.register(s)
+    val m = ProfileOps.HllM
+    val und = cooccurEdges(s, dir)
+    val ed = und.select(col("ua").as("src"), col("ub").as("dst"))
+      .unionAll(und.select(col("ub").as("src"), col("ua").as("dst")))
+      .persist()
+    // byte-packed registers (hb_agg / hb_merge_agg — BINARY(m), ranks
+    // ≤ 53 fit one byte): the per-round edge join + max-merge moves
+    // |2E| whole register vectors, and the array<long> form shipped
+    // 8× the bytes for the same registers. Values and the merge law
+    // are identical (spec-asserted against the hll_* forms); the
+    // relational oracle rebuild is unchanged.
+    var regs = CurationOps.cutLineage(
+      ed.select(col("src").as("node")).distinct()
+        .withColumn("h", call_function("md5_fp60",
+          concat(lit("hb:"), col("node").cast("string"))))
+        .withColumn("bkt", col("h") % m)
+        .withColumn("rnk", expr(ProfileOps.hllRankSql("h")).cast("long"))
+        .groupBy("node")
+        .agg(expr(s"hb_agg(array(bkt, rnk), $m)").as("regs")))
+    val nNodes = regs.count()
+    val gens = scala.collection.mutable.Buffer[DataFrame](regs)
+    for (_ <- 1 to HyperBallRounds) {
+      val nb = ed.join(regs.select(col("node").as("dst"), col("regs")),
+          Seq("dst"))
+        .select(col("src").as("node"), col("regs"))
+      regs = CurationOps.cutLineage(
+        regs.unionAll(nb).groupBy("node")
+          .agg(expr(s"hb_merge_agg(regs, $m)").as("regs")))
+      gens += regs
     }
+    // every generation is checkpointed — the edge cache is done
+    ed.unpersist()
+    (nNodes, gens.toIndexedSeq)
+  }
 
   /** Per-node ball-size estimate from a register-array generation,
     * frozen to floor(est·10³) BIGINT (column `bfp`). */

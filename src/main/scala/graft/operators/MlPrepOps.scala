@@ -618,23 +618,10 @@ object MlPrepOps {
     * ≤ |queries|·[[CtxDepth]] candidate docs; shingles, sizes and the
     * pair intersections all live on that candidate set, so the pair
     * join is |queries|·depth² metadata, never corpus². */
-  /** One context-dominance artifact per (session, fixture dir): q202
-    * (the dedup audit) and q221 (the budget packer) consume THE SAME
-    * keep/drop decisions — the docstring has always said so — but each
-    * call re-ran the BM25 ranking + shingle dominance pipeline.
-    * [[GraphOps.memoShared]] hoist (the co-activity precedent); oracles
-    * unchanged; fresh sessions recompute from parquet. */
-  private val contextKeptShared =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** The per-candidate keep/drop frame behind q202 — factored so
     * q221's budget packer consumes the SAME dominance decisions the
     * dedup audit reports: (term, rank, doc_id, n_toks, kept). */
-  private[graft] def contextKept(s: SparkSession, dir: String): DataFrame =
-    GraphOps.memoShared(contextKeptShared, s, dir)(
-      CurationOps.cutLineage(contextKeptBuild(s, dir)))
-
-  private def contextKeptBuild(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def contextKept(s: SparkSession, dir: String): DataFrame = {
     val cands = bm25Ranked(s, dir)
       .filter(col("rank") <= CtxDepth)
       .select(col("term"), col("rank"), col("doc_id"))
@@ -662,12 +649,12 @@ object MlPrepOps {
       .distinct()
     val tk = docs.select(col("doc_id"),
       size(col("toks")).cast("bigint").as("n_toks"))
-    cands
+    CurationOps.cutLineage(cands
       .join(dom.withColumn("dominated", lit(true)),
         Seq("term", "doc_id"), "left")
       .join(tk, "doc_id")
       .select(col("term"), col("rank"), col("doc_id"), col("n_toks"),
-        col("dominated").isNull.as("kept"))
+        col("dominated").isNull.as("kept")))
   }
 
   def contextDedup(s: SparkSession, dir: String): DataFrame =

@@ -23,25 +23,19 @@ class PlanPropsSpec extends AnyFunSuite {
 
   /** The physical plan INCLUDING every plan the query materializes at
     * construction time (the cut-audit rule the broadcast/window walkers
-    * already follow): a memoShared artifact's lineage cut starts the
-    * final plan at an RDD scan, so structural pins on the hot-bucket
-    * cap / semi joins / shared frames must look at the plans the cuts
-    * execute. The memo is evicted first so the artifact build actually
-    * RUNS under the installed audit hook; each recorded (optimized
+    * already follow): an artifact's lineage cut starts the final plan
+    * at an RDD scan, so structural pins on the hot-bucket cap / semi
+    * joins / shared frames must look at the plans the cuts execute.
+    * [[CurationOps.auditCuts]] evicts the shared graph artifacts, so
+    * every build RUNS under the audit hook; each recorded (optimized
     * logical) plan is re-planned physically so the same string
     * assertions apply. */
   private def planWithBuilds(
       build: => org.apache.spark.sql.DataFrame): String = {
-    GraphOps.evictShared(spark)
-    val buf = scala.collection.mutable.Buffer.empty[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
-    CurationOps.cutAudit.set(buf)
-    try {
-      val top = plan(build)
-      (top +: buf.toSeq.map(p =>
-        spark.sessionState.executePlan(p).executedPlan.toString))
-        .mkString("\n--- construction-time cut ---\n")
-    } finally CurationOps.cutAudit.remove()
+    val (df, cuts) = CurationOps.auditCuts(spark)(build)
+    (plan(df) +: cuts.map(p =>
+      spark.sessionState.executePlan(p).executedPlan.toString))
+      .mkString("\n--- construction-time cut ---\n")
   }
 
   test("ingest cleanup pipeline is shuffle-free (scan → project, no Exchange)") {
@@ -2146,13 +2140,9 @@ class PlanPropsSpec extends AnyFunSuite {
     * there. */
   private def unguardedWindowLeavesWithAudit(
       build: => org.apache.spark.sql.DataFrame): Seq[String] = {
-    val buf = scala.collection.mutable.Buffer.empty[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
-    CurationOps.cutAudit.set(buf)
-    try {
-      val topLevel = unguardedWindowLeaves(build)
-      topLevel ++ buf.flatMap(p => unguardedWindowLeavesIn(p, rawLeavesPhys))
-    } finally CurationOps.cutAudit.remove()
+    val (df, cuts) = CurationOps.auditCuts(spark)(build)
+    unguardedWindowLeaves(df) ++
+      cuts.flatMap(p => unguardedWindowLeavesIn(p, rawLeavesPhys))
   }
 
   /** Shared boundedness walk: the corpus-scaled content of a logical
@@ -2313,13 +2303,8 @@ class PlanPropsSpec extends AnyFunSuite {
     * is walked like the top-level plan. */
   private def unguardedBroadcastLeavesWithAudit(
       build: => org.apache.spark.sql.DataFrame): Seq[String] = {
-    val buf = scala.collection.mutable.Buffer.empty[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
-    CurationOps.cutAudit.set(buf)
-    try {
-      val topLevel = unguardedBroadcastLeaves(build)
-      topLevel ++ buf.flatMap(unguardedBroadcastLeavesIn)
-    } finally CurationOps.cutAudit.remove()
+    val (df, cuts) = CurationOps.auditCuts(spark)(build)
+    unguardedBroadcastLeaves(df) ++ cuts.flatMap(unguardedBroadcastLeavesIn)
   }
 
   /** Documented exemptions from the entity-keyed-aggregate rule: query

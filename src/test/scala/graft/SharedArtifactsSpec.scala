@@ -1,0 +1,48 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators._
+
+/** The contract of GraphOps' shared-artifact memo, pinned on the
+  * co-occurrence edges: within a session a second read is a lookup,
+  * `Bench.resetSharedState` forces a rebuild, and the lineage-cut mode
+  * is part of the key (a reliable-checkpoint session never receives a
+  * localCheckpoint artifact). Cuts are counted with the audit hook:
+  * building the edges runs exactly one lineage cut. */
+class SharedArtifactsSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = TestSession.spark
+  val dir = TestSession.sfDir("0.001")
+
+  test("co-occurrence edges: memoized per session, evicted by resetSharedState, keyed by checkpoint mode") {
+    val ckDir = java.nio.file.Files.createTempDirectory("graft-ck").toString
+    CurationOps.auditCuts(spark) {
+      def recorded = CurationOps.cutAudit.get.size
+      val first = GraphOps.cooccurEdges(spark, dir)
+      assert(recorded == 1, "the first read did not build the edges")
+      val second = GraphOps.cooccurEdges(spark, dir)
+      assert(recorded == 1, "a second read in the same session rebuilt the edges")
+      assert(second eq first)
+
+      Bench.resetSharedState(spark)
+      GraphOps.cooccurEdges(spark, dir)
+      assert(recorded == 2, "the read after resetSharedState did not rebuild")
+
+      spark.conf.set(CurationOps.CheckpointDirKey, ckDir)
+      try {
+        GraphOps.cooccurEdges(spark, dir)
+        assert(recorded == 3,
+          "a reliable-checkpoint session was handed the localCheckpoint edges")
+      } finally spark.conf.unset(CurationOps.CheckpointDirKey)
+      GraphOps.cooccurEdges(spark, dir)
+      assert(recorded == 3, "the checkpoint-mode build replaced the local entry")
+    }
+    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckDir))
+      .filter(p => p.getFileName.toString.startsWith("rdd-"))
+      .count()
+    assert(wrote > 0, s"no rdd checkpoints written under $ckDir")
+    Bench.resetSharedState(spark)
+  }
+}
