@@ -34,7 +34,8 @@ import graft.sources.{FileMarkerLedger, JdbcMarkerLedger, MarkerLedger}
 object IngestMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
-      "usage: IngestMain <ingestion_config.json> <tables.json> <outDir> [--mailbox]")
+      "usage: IngestMain <ingestion_config.json> <tables.json> <outDir> " +
+        "[--mailbox] [--jdbc-url <url>] [--format parquet|orc|csv|json]")
     val Array(cfgPath, tablesPath, outDir) = args.take(3)
     val mailbox = args.contains("--mailbox")
 
@@ -42,19 +43,6 @@ object IngestMain {
       Files.readString(Paths.get(tablesPath)))
     val cfg = JsonConfig.parseIngestionConfig(
       Files.readString(Paths.get(cfgPath)), tables)
-
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false") // naive-us ts reads as LTZ (UTC session)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val jdbcUrl = args.sliding(2).collectFirst {
       case Array("--jdbc-url", u) => u
@@ -72,13 +60,28 @@ object IngestMain {
         (new FileMarkerLedger(Paths.get(outDir, "_marker.tsv")),
           new IngestionJob.ParquetSink(outDir))
     }
-    val report = IngestionJob.run(spark, cfg, ledger, sink,
-      mailbox = mailbox, format = format)
+
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName("graft-ingest")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false") // naive-us ts reads as LTZ (UTC session)
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+
+    val report =
+      try IngestionJob.run(spark, cfg, ledger, sink,
+        mailbox = mailbox, format = format)
+      finally spark.stop()
 
     println(s"[ingest] discovered=${report.discovered} " +
       s"skipped_by_marker=${report.skippedByMarker} " +
       s"ingested_files=${report.ingested.size} rows=${report.rowsWritten}")
     report.ingested.foreach(p => println(s"[ingest]   $p"))
-    spark.stop()
   }
 }

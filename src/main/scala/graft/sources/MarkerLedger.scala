@@ -19,6 +19,10 @@ final case class MarkerEntry(
     parquetSource: String, targetTable: String, environment: String,
     backupDate: LocalDate, insertedDate: LocalDateTime)
 
+/** `IngestionJob.run` calls a ledger only from the thread that called
+  * `run`: `all` once, then each group's `touch`es after that group's sink
+  * write returned, one group at a time, in sorted (entity, environment)
+  * order. */
 trait MarkerLedger {
   /** Keyed existence: is (source, env, table) complete?
     * (`CustomMarkerTable.py:47-59`: SELECT … LIMIT 1) */

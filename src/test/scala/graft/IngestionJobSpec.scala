@@ -2,12 +2,16 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import org.apache.spark.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config._
 import graft.plans.{FreshnessCheck, IngestionJob}
-import graft.sources.{Discovery, InMemoryMarkerLedger}
+import graft.sources.{Discovery, InMemoryMarkerLedger, MarkerEntry, MarkerLedger}
 
 /** End-to-end ingestion over a synthetic partitioned tree (FIXTURES §1):
   * two environments, a disabled table, an out-of-date file, a malformed
@@ -78,6 +82,205 @@ class IngestionJobSpec extends AnyFunSuite {
     val r2 = IngestionJob.run(spark, cfg, ledger, sink)
     assert(r2.ingested.isEmpty && r2.skippedByMarker == 2)
     assert(spark.read.parquet(s"$out/HOST_CIG_Lineitem").count() == 100)
+  }
+
+  // ------------------------------------------------------------------
+  // staged runs: thread contract, failure semantics, job-group inheritance
+  // ------------------------------------------------------------------
+
+  private val copyCfg =
+    tableCfg.copy(targetName = "HOST_CIG_Linecopy", source = "Linecopy")
+  private val RowsPerFile = 25L
+  /** The four groups in the order `run` must visit them: sorted by
+    * (entity, environment); keys are "target/environment". */
+  private val groupOrder = Seq("HOST_CIG_Linecopy/BE", "HOST_CIG_Linecopy/NL",
+    "HOST_CIG_Lineitem/BE", "HOST_CIG_Lineitem/NL")
+
+  private def writeFile(dir: String): Unit =
+    spark.read.parquet(s"${TestSession.sfDir("0.001")}/lineitem.parquet")
+      .limit(RowsPerFile.toInt).coalesce(1)
+      .write.mode("overwrite").parquet(dir)
+
+  /** Two entities × two environments × two days: four groups of two
+    * one-file directories. Returns the tree's root. */
+  private def groupTree(): String = {
+    val root = Files.createTempDirectory("graft-groups").toString
+    for (entity <- Seq("Lineitem", "Linecopy"); env <- Seq("NL", "BE");
+         day <- Seq("03", "04"))
+      writeFile(s"$root/environment=$env/$entity/2019/07/$day")
+    root
+  }
+
+  private def groupCfg(root: String) = IngestionConfig(
+    environments = Seq("NL", "BE"),
+    ingestionDate = LocalDate.of(2019, 7, 3),
+    dataFolder = root,
+    tables = Seq(tableCfg, copyCfg))
+
+  private def helperAlive: Boolean = Thread.getAllStackTraces.keySet.asScala
+    .exists(t => t.getName == "ingest-prepare" && t.isAlive)
+
+  private final class SinkBoom extends RuntimeException("injected sink failure")
+
+  /** Every call into the sink and the ledger, in order, with its thread. */
+  private final class Recorder {
+    val calls = ArrayBuffer[(String, String, Thread)]()
+    def log(kind: String, key: String): Unit =
+      synchronized(calls += ((kind, key, Thread.currentThread())))
+    def of(kind: String): Seq[String] =
+      synchronized(calls.filter(_._1 == kind).map(_._2).toSeq)
+  }
+
+  /** Delegating sink that records each write and throws on write
+    * number `failAt` (0-based) instead of writing. */
+  private final class RecordingSink(inner: IngestionJob.Sink, rec: Recorder,
+      failAt: Int = -1) extends IngestionJob.Sink {
+    private var n = 0
+    val helperSeen = ArrayBuffer[Boolean]()
+    override def write(df: DataFrame, config: TableConfig, env: String): Unit = {
+      val key = s"${config.targetName}/$env"
+      rec.log("write-start", key)
+      helperSeen += helperAlive
+      if (n == failAt) throw new SinkBoom
+      n += 1
+      inner.write(df, config, env)
+      rec.log("write-end", key)
+    }
+  }
+
+  private final class RecordingLedger(inner: MarkerLedger, rec: Recorder)
+      extends MarkerLedger {
+    override def exists(src: String, env: String, table: String): Boolean = {
+      rec.log("exists", s"$table/$env")
+      inner.exists(src, env, table)
+    }
+    override def touch(e: MarkerEntry): Unit = {
+      rec.log("touch", s"${e.targetTable}/${e.environment}")
+      inner.touch(e)
+    }
+    override def all: Seq[MarkerEntry] = { rec.log("all", ""); inner.all }
+  }
+
+  private def markedGroups(ledger: MarkerLedger): Seq[String] =
+    ledger.all.map(e => s"${e.targetTable}/${e.environment}").distinct.sorted
+
+  private def sinkRows(out: String): Map[String, Long] =
+    Seq(tableCfg, copyCfg).map(_.targetName)
+      .filter(t => Files.exists(Paths.get(out, t)))
+      .map(t => t -> spark.read.parquet(s"$out/$t").count()).toMap
+
+  test("staged run: sink and ledger are called on the caller's thread, one group at a time, in order") {
+    val root = groupTree()
+    val out = Files.createTempDirectory("graft-groups-out").toString
+    val rec = new Recorder
+    val sink = new RecordingSink(new IngestionJob.ParquetSink(out), rec)
+    val r = IngestionJob.run(spark, groupCfg(root),
+      new RecordingLedger(new InMemoryMarkerLedger, rec), sink)
+    assert(r.ingested.size == 8 && r.rowsWritten == 8 * RowsPerFile, s"$r")
+
+    val caller = Thread.currentThread()
+    assert(rec.calls.forall(_._3 eq caller),
+      s"calls off the caller's thread: ${rec.calls.filter(_._3 ne caller)}")
+    // the ledger snapshot, then per group: its write, then its two
+    // touches (one per file), before the next group's write starts
+    val expected = ("all", "") +: groupOrder.flatMap(g => Seq(
+      ("write-start", g), ("write-end", g), ("touch", g), ("touch", g)))
+    assert(rec.calls.map(c => (c._1, c._2)).toSeq == expected)
+    // the preparation helper was up during every write
+    assert(sink.helperSeen.toSeq == Seq.fill(4)(true))
+    assert(!helperAlive, "helper thread outlived the run")
+    assert(sinkRows(out) == Map(
+      "HOST_CIG_Linecopy" -> 4 * RowsPerFile, "HOST_CIG_Lineitem" -> 4 * RowsPerFile))
+  }
+
+  test("fault injection: a failing sink write stops the run; a re-run writes exactly the missing groups") {
+    val root = groupTree()
+    val out = Files.createTempDirectory("graft-groups-out").toString
+    val rec = new Recorder
+    val ledger = new InMemoryMarkerLedger
+    intercept[SinkBoom] {
+      IngestionJob.run(spark, groupCfg(root), new RecordingLedger(ledger, rec),
+        new RecordingSink(new IngestionJob.ParquetSink(out), rec, failAt = 2))
+    }
+    assert(!helperAlive, "helper thread outlived the failed run")
+    // groups before the failing one are written and marked; nothing after
+    assert(rec.of("write-start") == groupOrder.take(3))
+    assert(rec.of("write-end") == groupOrder.take(2))
+    assert(markedGroups(ledger) == groupOrder.take(2))
+    assert(sinkRows(out) == Map("HOST_CIG_Linecopy" -> 4 * RowsPerFile))
+
+    val r2 = IngestionJob.run(spark, groupCfg(root), ledger,
+      new IngestionJob.ParquetSink(out))
+    assert(r2.skippedByMarker == 4 && r2.ingested.size == 4, s"$r2")
+    assert(r2.ingested.forall(_.contains("/Lineitem/")))
+    assert(markedGroups(ledger) == groupOrder)
+    // equal to a clean run's rows: no group written twice
+    assert(sinkRows(out) == Map(
+      "HOST_CIG_Linecopy" -> 4 * RowsPerFile, "HOST_CIG_Lineitem" -> 4 * RowsPerFile))
+  }
+
+  test("fault injection: a failing preparation is rethrown unwrapped at its group's turn") {
+    val root = groupTree()
+    val out = Files.createTempDirectory("graft-groups-out").toString
+    // Lineitem/BE, the third group, becomes one corrupt parquet file
+    val bad = Paths.get(root, "environment=BE/Lineitem/2019/07/03")
+    val badFile = bad.resolve("part-0.parquet")
+    val walk = Files.walk(Paths.get(root, "environment=BE/Lineitem"))
+    try walk.iterator.asScala.toSeq.reverse.foreach(Files.delete)
+    finally walk.close()
+    Files.createDirectories(bad)
+    Files.write(badFile, "not a parquet file".getBytes)
+    val direct = intercept[Exception](spark.read.parquet(badFile.toString))
+
+    val rec = new Recorder
+    val ledger = new InMemoryMarkerLedger
+    val e = intercept[Exception] {
+      IngestionJob.run(spark, groupCfg(root), new RecordingLedger(ledger, rec),
+        new RecordingSink(new IngestionJob.ParquetSink(out), rec))
+    }
+    assert(e.getClass == direct.getClass, s"not rethrown as the read threw it: $e")
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException])
+    assert(!helperAlive, "helper thread outlived the failed run")
+    // the failure surfaces before the third write starts
+    assert(rec.of("write-start") == groupOrder.take(2))
+    assert(rec.of("write-end") == groupOrder.take(2))
+    assert(markedGroups(ledger) == groupOrder.take(2))
+
+    // repair the file; the re-run writes the two missing groups only
+    Files.delete(badFile)
+    writeFile(bad.toString)
+    val r2 = IngestionJob.run(spark, groupCfg(root), ledger,
+      new IngestionJob.ParquetSink(out))
+    assert(r2.skippedByMarker == 4 && r2.ingested.size == 3, s"$r2")
+    assert(r2.ingested.forall(_.contains("/Lineitem/")))
+    assert(markedGroups(ledger) == groupOrder)
+    assert(sinkRows(out) == Map(
+      "HOST_CIG_Linecopy" -> 4 * RowsPerFile, "HOST_CIG_Lineitem" -> 3 * RowsPerFile))
+  }
+
+  test("staged run: every job, the helper's schema inference included, carries the caller's job group") {
+    val root = groupTree()
+    val out = Files.createTempDirectory("graft-groups-out").toString
+    val sc = spark.sparkContext
+    val groups = ArrayBuffer[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = groups.synchronized {
+        groups += Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+      }
+    }
+    ListenerBusBridge.drain(sc) // earlier tests' events must not reach it
+    sc.addSparkListener(listener)
+    sc.setJobGroup("ingest-spec", "job-group inheritance")
+    try IngestionJob.run(spark, groupCfg(root), new InMemoryMarkerLedger,
+      new IngestionJob.ParquetSink(out))
+    finally {
+      sc.clearJobGroup()
+      ListenerBusBridge.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    // per group at least the helper's schema-inference job and the write
+    assert(groups.size >= 2 * groupOrder.size, s"jobs: $groups")
+    assert(groups.forall(_ == "ingest-spec"), s"jobs outside the group: $groups")
   }
 
   test("mailbox layout end-to-end: datasource dirs, env from prefix") {
