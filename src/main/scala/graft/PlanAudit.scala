@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit: prints one markdown row per SparkEntry query summarizing
   * its physical plan — scans, pushed filters, exchanges (shuffles),
   * broadcast joins, sort-merge joins, whole-stage-codegen spans. The
@@ -12,20 +10,12 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false") // naive-us ts reads as LTZ (UTC session)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    val sfDir = if (args.nonEmpty) args(0) else LocalSession.sfDir("0.01")
+    val spark = LocalSession.builder()
       // AQE off for the audit: the adaptive wrapper hides codegen spans
       // in the pre-execution plan string; logical structure is the same
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     println("| query | scans | pushed filters | exchanges | broadcasts | SMJ | codegen spans |")
     println("|---|---|---|---|---|---|---|")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Formatted-plan dump for the optimization-round evidence files:
   *
   *   runMain graft.PlanDump <query>[,<query>...] <outDir> [sfDir]
@@ -10,26 +8,15 @@ import org.apache.spark.sql.SparkSession
   * of each named SparkEntry query. Construction-time plan at the given
   * sf (default sf0.01 — plan SHAPE is scale-invariant for everything
   * except AQE's runtime choices, which the committed files note
-  * explicitly where they matter). Mirrors Bench's session config so the
-  * dumped plan is the one the bench executes. */
+  * explicitly where they matter). Builds its session through
+  * [[LocalSession]], as Bench does, so the dumped plan is the one the
+  * bench executes. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val outDir = args(1)
-    val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.driver.maxResultSize", "4g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = if (args.length > 2) args(2) else LocalSession.sfDir("0.01")
+    val spark = LocalSession.builder().getOrCreate()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

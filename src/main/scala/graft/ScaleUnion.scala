@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Synthetic N× scale-up generator for scaling evidence.
@@ -59,19 +58,10 @@ object ScaleUnion {
   val copyTables = Seq("region", "nation")
 
   def main(args: Array[String]): Unit = {
-    val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val srcDir = args.headOption.getOrElse(LocalSession.sfDir("0.1"))
     val outDir = args.lift(1).getOrElse("/tmp/graft_scale10")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false") // naive-us ts reads as LTZ (UTC session)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.builder().getOrCreate()
 
     // one offset per shared-key group, computed from the max across the
     // tables that carry it

@@ -13,9 +13,9 @@ import graft.operators._
   */
 object SparkEntry {
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** Flagship query on the sf0.001 fixture; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    EtlOps.fullIngest(spark, "/root/testdata/sf0.001")
+    EtlOps.fullIngest(spark, LocalSession.sfDir("0.001"))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_full_ingest"        -> (EtlOps.fullIngest _),

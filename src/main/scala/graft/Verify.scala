@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -13,23 +12,17 @@ object Verify {
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
     def sel(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false") // naive-us ts reads as LTZ (UTC session)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.builder().getOrCreate()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(e => sel(e._1)).foreach { case (name, fn) =>
+      // a query that throws must leave no output: an earlier run's
+      // parquet would otherwise be compared and pass
+      val out = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+      out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
       try {
         System.err.println(s"[verify] $name start")
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+          .parquet(out.toString)
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

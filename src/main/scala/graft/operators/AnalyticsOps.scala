@@ -1263,12 +1263,10 @@ object AnalyticsOps {
   // --- q257: Kendall τ-b rank correlation ---------------------------------
 
   /** Per-source pair-stage sample gate: 1-in-mod of docs enter the
-    * quadratic stage. Identity (1) at test scale so the oracle covers
-    * every pair; at volume the knob caps the per-source pair budget —
-    * settable via GRAFT_TAU_MOD for the scale measurements (pairs
-    * shrink ×mod², τ estimates move only within sampling error). */
-  val TauSampleMod: Long =
-    sys.env.getOrElse("GRAFT_TAU_MOD", "1").toLong
+    * quadratic stage. Identity (1), so the oracle covers every pair; a
+    * larger mod caps the per-source pair budget at volume (pairs shrink
+    * ×mod², τ estimates move only within sampling error). */
+  val TauSampleMod: Long = 1L
 
   /** q257 — Kendall τ-b between two per-document quality signals
     * (distinct-token ratio vs length), per source: the RANK-correlation

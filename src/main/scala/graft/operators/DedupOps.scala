@@ -2928,10 +2928,8 @@ object DedupOps {
     * stays ~flat as the candidate stream grows instead of riding it at
     * a fixed fraction (the earlier 1-in-8 rate made the 10× ratio
     * candidate-proportional, 4.5×). The oracle replays the same count
-    * and modulus, so the gate checks the derived sample exactly.
-    * Settable via GRAFT_EDIT_BUDGET (the q257 GRAFT_TAU_MOD pattern). */
-  val EditSampleBudget: Long =
-    sys.env.getOrElse("GRAFT_EDIT_BUDGET", "4096").toLong
+    * and modulus, so the gate checks the derived sample exactly. */
+  val EditSampleBudget: Long = 4096L
 
   /** q315 — second-opinion verification: every pair in the PRODUCTION
     * capped-LSH candidate stream (q118's generation over the graded

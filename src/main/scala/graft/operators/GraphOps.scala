@@ -397,7 +397,7 @@ object GraphOps {
     * buckets keeps mean buckets ≳ 2k at the sf corpus sizes (500–2000
     * vectors) AND matches the executor thread count (the bucket join's
     * parallelism ceiling is the bucket count — 16 buckets left half of
-    * local[32] idle, measured 1.8× slower calibrated); a 100 TB corpus
+    * a 32-core session idle, measured 1.8× slower calibrated); a 100 TB corpus
     * raises
     * planes, not the algorithm. A singleton bucket just yields a
     * neighborless vector — semantically fine, replayed identically by

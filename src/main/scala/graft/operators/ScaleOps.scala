@@ -1161,8 +1161,7 @@ object ScaleOps {
   val MrcTile = 256L
   /** SHARDS-style key-sampling mod (identity at test scale; at volume
     * sample 1-in-mod KEYS and scale distances ×mod). */
-  val MrcSampleMod: Long =
-    sys.env.getOrElse("GRAFT_MRC_MOD", "1").toLong
+  val MrcSampleMod: Long = 1L
 
   /** q277 — LRU miss-ratio curve by Mattson stack distances over the
     * event stream (key = user_id): the hit rate of EVERY cache size in

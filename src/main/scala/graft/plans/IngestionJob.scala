@@ -14,8 +14,8 @@ import graft.transforms.CigTransforms
   * reference's Luigi DAG (`main.py` EP1 / `main_mailbox.py` EP2).
   *
   * Plan per run:
-  *  1. discover ingestion files under the data root (driver-side LIST with
-  *     explicit date-pruned prefixes — no executor listing),
+  *  1. discover ingestion files: a driver-side walk of the whole data
+  *     root (no executor listing); dates are filtered in step 2,
   *  2. filter: entity ∈ config (P3), environment allow-list (P4),
   *     date ≥ ingestion_date + is_enabled (P5),
   *  3. anti-join against the marker ledger (P10) — already-complete

@@ -7,11 +7,9 @@ import java.time.LocalDate
   *
   * Two layouts exist:
   *  - Main: `<root>/environment=<ENV>/<Entity>/<yyyy>/<MM>/<dd>/<file>.parquet`
-  *    (`main.py:88,105`) — `environment=` is genuinely Hive-style, so Spark
-  *    discovers it as a partition column for free; the positional
-  *    `yyyy/MM/dd` tail is NOT Hive-style and is pruned by constructing
-  *    explicit paths (same strategy as the reference's PowerShell mirror,
-  *    `download_from_s3_hosting.ps1:60`).
+  *    (`main.py:88,105`) — `environment=` is genuinely Hive-style; the
+  *    positional `yyyy/MM/dd` tail is NOT, so the date comes from the
+  *    path parse.
   *  - Mailbox: `<root>/<DataSource>/<Entity>/yyyy/MM/dd/<file>.parquet`.
   *    Discovery keeps the FULL DataSource name as `environment` — the
   *    reference allow-lists on DataSource (`main_mailbox.py:41-43`) and
@@ -21,10 +19,9 @@ import java.time.LocalDate
   *    configs and marker-ledger keys therefore use full datasource
   *    names (e.g. `NL_Hosting_Mailbox`, not `NL`).
   *
-  * At 100 TB the list step runs driver-side against the object store
-  * (one LIST per constructed date prefix — no full-bucket scan), and the
-  * resulting explicit file list feeds one `spark.read.parquet(paths: _*)`
-  * per table so executors never re-list.
+  * Both walks list the WHOLE root, driver-side; `IngestionJob.run`
+  * filters by date afterwards. The resulting explicit file list feeds
+  * one `spark.read` per (table, environment), so executors never list.
   */
 object Discovery {
 
@@ -33,29 +30,19 @@ object Discovery {
   final case class IngestionFile(
       environment: String, entity: String, date: LocalDate, path: String)
 
-  /** Construct the explicit date-pruned glob paths to read for one
-    * (environment, entity) from `fromDate` to `toDate` inclusive — the
-    * partition-pruning strategy for the positional date dirs. */
-  def datePaths(root: String, environment: String, entity: String,
-      fromDate: LocalDate, toDate: LocalDate,
-      mailbox: Boolean = false): Seq[String] = {
-    val prefix =
-      if (mailbox) s"$root/$environment" // mailbox: env IS the datasource dir
-      else s"$root/environment=$environment"
-    Iterator.iterate(fromDate)(_.plusDays(1))
-      .takeWhile(!_.isAfter(toDate))
-      .map(d => f"$prefix/$entity/${d.getYear}%04d/${d.getMonthValue}%02d/${d.getDayOfMonth}%02d")
-      .toSeq
-  }
-
   /** Walk a local tree (tests' stand-in for the object-store LIST) and
     * parse every data file found (`ext` selects the source format; the
     * reference is parquet-only, CSV/JSON are format extensions riding
     * the same layout). Malformed paths are dropped, as the reference's
-    * shape predicate does. */
+    * shape predicate does. A root with a URI scheme (`file://`, `s3a://`)
+    * is rejected: `Paths.get` would turn it into a relative path that
+    * does not exist, and the run would find nothing without an error. */
   def discover(root: String, mailbox: Boolean,
       ext: String = ".parquet"): Seq[IngestionFile] = {
     import java.nio.file._
+    if (root.matches("[A-Za-z][A-Za-z0-9+.-]*:.*"))
+      throw new IllegalArgumentException(
+        s"data root '$root' has a URI scheme; list it with Discovery.discoverHadoop")
     val base = Paths.get(root)
     if (!Files.exists(base)) return Nil
     val out = scala.collection.mutable.ArrayBuffer[IngestionFile]()

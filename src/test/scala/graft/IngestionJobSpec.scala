@@ -380,14 +380,21 @@ class IngestionJobSpec extends AnyFunSuite {
     assert(local.nonEmpty && hadoop == local)
   }
 
-  test("date-path construction prunes to explicit day prefixes") {
-    val paths = Discovery.datePaths("/d", "NL", "Accounts",
-      LocalDate.of(2019, 12, 30), LocalDate.of(2020, 1, 2))
-    assert(paths == Seq(
-      "/d/environment=NL/Accounts/2019/12/30",
-      "/d/environment=NL/Accounts/2019/12/31",
-      "/d/environment=NL/Accounts/2020/01/01",
-      "/d/environment=NL/Accounts/2020/01/02"))
+  test("a URI data root is rejected by the local walk, not read as empty") {
+    val root = Files.createTempDirectory("graft-uri").toString
+    buildTree(root)
+    for (uri <- Seq(s"file://$root", "s3a://bucket/root")) {
+      val e = intercept[IllegalArgumentException](
+        Discovery.discover(uri, mailbox = false))
+      assert(e.getMessage.contains("discoverHadoop"), e.getMessage)
+    }
+    val cfg = IngestionConfig(environments = Seq("NL"),
+      ingestionDate = LocalDate.of(2019, 7, 3), dataFolder = s"file://$root",
+      tables = Seq(tableCfg))
+    intercept[IllegalArgumentException](IngestionJob.run(spark, cfg,
+      new InMemoryMarkerLedger, new IngestionJob.ParquetSink(root + "-out")))
+    assert(Discovery.discoverHadoop(s"file://$root", mailbox = false,
+      spark.sparkContext.hadoopConfiguration).nonEmpty)
   }
 
   test("freshness: static and grace exemptions as anti-joins") {

@@ -2,31 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One local session shared across suites. */
+/** One local session shared across suites: [[LocalSession]] at a fixed
+  * 4 cores, so partition counts and plans do not depend on the host. */
 object TestSession {
 
-  /** Fixture root, overridable like the harness mains' SPARK_GRAFT_SF_DIR
-    * — suites derive every scale-factor path from here instead of
-    * hardcoding a machine layout. */
-  val fixtureRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata")
+  def sfDir(sf: String): String = LocalSession.sfDir(sf)
 
-  /** `/…/sfX` fixture dir for a scale factor ("0.001", "0.01", …). */
-  def sfDir(sf: String): String = s"$fixtureRoot/sf$sf"
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false") // naive-us ts reads as LTZ (UTC session)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSession.builder(cores = 4)
+    .config("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    .getOrCreate()
 }
