@@ -7,6 +7,10 @@ import org.apache.spark.sql.SparkSession
   * A short untimed warmup absorbs JVM/session startup so timings reflect
   * steady-state plan execution, which is what scales.
   *
+  * One-query timing is the same main: `SPARK_GRAFT_ONLY=<q,…>
+  * SPARK_GRAFT_REPS=<n> [SPARK_GRAFT_WARM=0] runMain graft.Bench`;
+  * stderr carries one `[bench] <q> rep<i>: <s> s` line per rep.
+  *
   * Cross-round de-noising: host CPU throughput on shared infrastructure
   * swings several-fold minute to minute (measured: identical binaries
   * moved 32s → 48s aggregate across two rounds), so raw seconds are not
@@ -141,20 +145,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", LocalSession.sfDir("0.1"))
     val spark = LocalSession.builder().getOrCreate()
 
-    // diagnostic mode: sample the calibration probe alone (used to pin
-    // CalibRef and to sanity-check host speed before a timed run)
-    if (args.contains("--calib-probe")) {
-      calibOnce(spark); calibShuffleOnce(spark); calibPlanOnce(spark)
-      val xs = (1 to 8).map(_ => calibOnce(spark))
-      val ys = (1 to 8).map(_ => calibShuffleOnce(spark))
-      val zs = (1 to 8).map(_ => calibPlanOnce(spark))
-      println(xs.map(x => f"$x%.4f").mkString("alu samples:     ", " ", " s"))
-      println(ys.map(x => f"$x%.4f").mkString("shuffle samples: ", " ", " s"))
-      println(zs.map(x => f"$x%.4f").mkString("plan samples:    ", " ", " s"))
-      spark.stop()
-      return
-    }
-
     // warmup: JIT + codegen + FS metadata, untimed
     spark.range(1000000).selectExpr("sum(id)").collect()
     // per-query warm pass at the TARGET sf: AQE picks different physical
@@ -171,27 +161,20 @@ object Bench {
     // dropped between reps, so nothing is subsidized across runs.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
     // the heaviest queries dominate cross-round comparisons, so they get
-    // extra reps: more samples tighten both the min and the median of the
-    // rescaled series where agreement matters most
-    val heavyReps = sys.env.getOrElse("SPARK_GRAFT_HEAVY_REPS", (reps + 2).toString).toInt
+    // two extra reps: more samples tighten both the min and the median of
+    // the rescaled series where agreement matters most
+    val heavyReps = reps + 2
     val heavy = Set("q86_knn_graph", "q70_pagerank", "q59_dup_clusters", "q97_digest_drilldown")
     // prime the calibration ops' codegen/JIT so the first paired probes
     // aren't inflated by first-use compile
     calibOnce(spark); calibShuffleOnce(spark); calibPlanOnce(spark)
     // SPARK_GRAFT_ONLY=q86_knn_graph,q70_pagerank → time just those
-    // (single-query iteration; the driver leaves it unset).
-    // SPARK_GRAFT_EXCLUDE=… → skip named queries. Since round 11 no
-    // query NEEDS it: the last two uncapped plans (q30 all-pairs
-    // jaccard, q33 all-pairs cosine) were demoted to spec-only
-    // verifiers and their ids re-pointed at banded forms, so the full
-    // suite runs at synthetic 10× without exclusions.
+    // (single-query iteration; unset, every query runs)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val excl = sys.env.get("SPARK_GRAFT_EXCLUDE")
-      .map(_.split(",").toSet).getOrElse(Set.empty[String])
     val shuffleProbes = scala.collection.mutable.ArrayBuffer.empty[Double]
     val planProbes = scala.collection.mutable.ArrayBuffer.empty[Double]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) && !excl(n) }
+      .filter { case (n, _) => only.forall(_.contains(n)) }
       .map {
       case (name, fn) =>
         // progress marker: when a run stalls, the LAST marker names the
@@ -220,13 +203,14 @@ object Bench {
         // the probes collectively sample host speed across the whole run,
         // and the run-wide medians become the single rescale factor below
         val nReps = if (heavy(name)) heavyReps else reps
-        val samples = (1 to nReps).map { _ =>
+        val samples = (1 to nReps).map { i =>
           val calib = calibOnce(spark)
           val t0 = System.nanoTime()
           run("rep")
           // a failed rep keeps its time: dropping it would make a crash
           // read as a speedup of the total
           val sec = (System.nanoTime() - t0) / 1e9
+          System.err.println(f"[bench] $name rep$i: $sec%.3f s")
           resetSharedState(spark)
           (sec, calib)
         }

@@ -531,8 +531,7 @@ object DedupOps {
     * Scale (100 TB): candidate-proportional — band buckets are capped,
     * so candidate volume is ≤ cap²/2 per bucket (linear in corpus size);
     * the all-pairs shingle self-join never runs. This retired the one
-    * quadratic plan that forced `SPARK_GRAFT_EXCLUDE=q30_ngram_jaccard`
-    * on 10×+ suite runs. */
+    * quadratic plan that forced q30 out of 10×+ suite runs. */
   def ngramJaccard(s: SparkSession, dir: String): DataFrame =
     nearVerified(s, dir, Some(LshBucketCap))
       .filter(col("jaccard") >= 0.6)

@@ -37,7 +37,7 @@ object EtlOps {
     * when the returned (lazy) DataFrame is finally executed — restoring it
     * here would break any later action (verified: only `count()` survives,
     * because it prunes every column). Entry points we own ([[graft.Bench]],
-    * [[graft.Verify]], [[graft.TimeQ]], [[graft.IngestMain]], tests) set it
+    * [[graft.Verify]], [[graft.PlanDump]], [[graft.IngestMain]], tests) set it
     * at session construction; this set covers driver-owned sessions. */
   def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

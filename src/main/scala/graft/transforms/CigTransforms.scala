@@ -14,9 +14,10 @@ import graft.config.{ColumnMeta, TableConfig, TypeClass}
   *    column, so a 427-column table stays a single projection node inside
   *    whole-stage codegen: no shuffle, no per-transform plan nodes, no
   *    analyzer blow-up from hundreds of chained `withColumn`s.
-  *  - `DataFrame`-level wrappers exist for each step so they are
-  *    individually testable and usable à la carte; `pipeline(...)` is the
-  *    fused production path.
+  *  - `pipeline(...)` is the one cleanup path; tests assert each step on
+  *    its per-cell expression. The few `DataFrame`-level steps left (audit
+  *    columns, ordered projection, the sink-boundary P11) are single
+  *    selects over those expressions, not a second pipeline.
   *  - Reference bugs (global `.replace('.0','')` in T2
   *    `CigEolHostingIngestionLogic.py:72`, substring `"None"→''` in T4
   *    `:111`, `environment.length` AttributeError in T0a `:18`) are resolved
@@ -123,12 +124,8 @@ object CigTransforms {
   }
 
   // ---------------------------------------------------------------------
-  // DataFrame-level steps (testable à la carte)
+  // DataFrame-level steps
   // ---------------------------------------------------------------------
-
-  /** Coerce every column of a frame to string (§1.2). */
-  def castAllToString(df: DataFrame): DataFrame =
-    df.select(df.columns.map(c => asString(col(c)).as(c)).toIndexedSeq: _*)
 
   /** T0a/T0b/T0c: inject the three audit columns
     * (`CigEolHostingIngestionLogic.py:16-22`). */
@@ -138,25 +135,6 @@ object CigTransforms {
       .withColumn("CIGCopyTime",
         lit(ingestionDate.format(java.time.format.DateTimeFormatter.ISO_LOCAL_DATE)))
       .withColumn("CIGProcessed", lit("0"))
-
-  /** T0d over all columns. */
-  def normalizeNulls(df: DataFrame): DataFrame =
-    df.select(df.columns.map(c => normalizeNullsExpr(col(c)).as(c)).toIndexedSeq: _*)
-
-  /** T0e over all columns. */
-  def normalizeBools(df: DataFrame): DataFrame =
-    df.select(df.columns.map(c => normalizeBoolsExpr(col(c)).as(c)).toIndexedSeq: _*)
-
-  /** T1: default configured-but-missing columns to the sentinel
-    * (`CigEolHostingIngestionLogic.py:114-118`). */
-  def defaultMissingColumns(df: DataFrame, wanted: Seq[String]): DataFrame = {
-    val present = df.columns.toSet
-    val missing = wanted.filterNot(present)
-    if (missing.isEmpty) df
-    else df.select(
-      (df.columns.map(col).toIndexedSeq ++
-        missing.map(c => lit(NullSentinel).as(c))): _*)
-  }
 
   /** P11 over all columns. */
   def sentinelsToNull(df: DataFrame): DataFrame =

@@ -26,13 +26,13 @@ class CigTransformsSpec extends AnyFunSuite {
 
   test("T0d full-cell null normalization: NaT/nan → sentinel, nanarnia untouched") {
     val df = strDf("c" -> Seq("NaT", "nan", "nanarnia", null, "x"))
-    val out = normalizeNulls(df).as[String].collect()
+    val out = df.select(normalizeNullsExpr($"c")).as[String].collect()
     assert(out.toSeq == Seq("None", "None", "nanarnia", "None", "x"))
   }
 
   test("T0e boolean normalization is full-cell") {
     val df = strDf("c" -> Seq("True", "False", "Truex", "xFalse"))
-    val out = normalizeBools(df).as[String].collect()
+    val out = df.select(normalizeBoolsExpr($"c")).as[String].collect()
     assert(out.toSeq == Seq("1", "0", "Truex", "xFalse"))
   }
 
@@ -93,8 +93,8 @@ class CigTransformsSpec extends AnyFunSuite {
 
   test("T1 missing-column default + P1 ordered projection") {
     val df = strDf("b" -> Seq("1"), "a" -> Seq("2"), "extra" -> Seq("3"))
-    val out = orderedProjection(
-      defaultMissingColumns(df, Seq("a", "b", "m")), Seq("a", "b", "m"))
+    val out = orderedProjection(df.select($"*", cellExpr(ColumnMeta("m"),
+      df.columns.toSet, "NL", LocalDate.of(2019, 7, 3)).as("m")), Seq("a", "b", "m"))
     assert(out.columns.toSeq == Seq("a", "b", "m"))
     assert(out.head() == Row("2", "1", "None"))
   }

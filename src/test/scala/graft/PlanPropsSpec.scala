@@ -22,20 +22,35 @@ class PlanPropsSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
 
   /** The physical plan INCLUDING every plan the query materializes at
-    * construction time (the cut-audit rule the broadcast/window walkers
-    * already follow): an artifact's lineage cut starts the final plan
-    * at an RDD scan, so structural pins on the hot-bucket cap / semi
-    * joins / shared frames must look at the plans the cuts execute.
-    * [[CurationOps.auditCuts]] evicts the shared graph artifacts, so
-    * every build RUNS under the audit hook; each recorded (optimized
-    * logical) plan is re-planned physically so the same string
-    * assertions apply. */
+    * construction time ([[PlanDump.plans]], the cut-audit rule the
+    * broadcast/window walkers already follow): an artifact's lineage cut
+    * starts the final plan at an RDD scan, so structural pins on the
+    * hot-bucket cap / semi joins / shared frames must look at the plans
+    * the cuts execute. */
   private def planWithBuilds(
-      build: => org.apache.spark.sql.DataFrame): String = {
-    val (df, cuts) = CurationOps.auditCuts(spark)(build)
-    (plan(df) +: cuts.map(p =>
-      spark.sessionState.executePlan(p).executedPlan.toString))
+      build: => org.apache.spark.sql.DataFrame): String =
+    PlanDump.plans(spark)(build).map(_.executedPlan.toString)
       .mkString("\n--- construction-time cut ---\n")
+
+  test("PLANS.md rows count the cut plans: a cutting query counts more, a cut-free one its final plan") {
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val pr = PlanDump.row(PlanDump.plans(spark)(
+        SparkEntry.queries("q70_pagerank")(spark, dir)))
+      val prFinal = PlanDump.counts(plan(
+        SparkEntry.queries("q70_pagerank")(spark, dir)))
+      assert(pr.last > 0, s"q70 recorded no cut: $pr")
+      // the cut plans carry the per-round exchanges the final plan hides
+      assert(pr(2) > prFinal(2), s"cut-aware $pr vs final-only $prFinal")
+      val ingest = PlanDump.row(PlanDump.plans(spark)(
+        SparkEntry.queries("q01_full_ingest")(spark, dir)))
+      val ingestFinal = PlanDump.counts(plan(
+        SparkEntry.queries("q01_full_ingest")(spark, dir)))
+      assert(ingest == ingestFinal :+ 0)
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      Bench.resetSharedState(spark)
+    }
   }
 
   test("ingest cleanup pipeline is shuffle-free (scan → project, no Exchange)") {
@@ -340,7 +355,7 @@ class PlanPropsSpec extends AnyFunSuite {
 
   test("bm25 broadcasts the query set and corpus stats; top-k limits before the shuffle") {
     // AQE's pre-execution string hides final join modes — pin the
-    // static plan the way PlanAudit does
+    // static plan the way PlanDump does
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     val p = try plan(MlPrepOps.bm25TopK(spark, dir))
     finally spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -2387,7 +2402,7 @@ class PlanPropsSpec extends AnyFunSuite {
         val bad = try unguardedWindowLeavesWithAudit(fn(spark, dir))
           catch { case e: Throwable => Seq(s"plan build failed: $e") }
         // shared()/persist() at construction time would otherwise leak
-        // InMemoryRelation into later queries' plans (PlanAudit note)
+        // InMemoryRelation into later queries' plans (PlanDump note)
         spark.catalog.clearCache()
         bad.map(leaf => name -> s"$name: unpartitioned window over $leaf")
     }
