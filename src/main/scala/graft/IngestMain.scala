@@ -9,7 +9,7 @@ import graft.sources.{FileMarkerLedger, JdbcMarkerLedger, MarkerLedger}
 /** CLI entry point ≡ the reference's `main.py` / `main_mailbox.py`:
   *
   *   runMain graft.IngestMain <ingestion_config.json> <tables.json> \
-  *     <outDir> [--mailbox] [--jdbc-url <url>] [--format parquet|csv|json]
+  *     <outDir> [--mailbox] [--jdbc-url <url>] [--format parquet|orc|csv|json]
   *
   * With `--mailbox`, the config's `environments` allow-list holds FULL
   * datasource names (`NL_Hosting_Mailbox`), matching the reference's

@@ -43,13 +43,6 @@ final case class TableConfig(
     isEnabled: Boolean,
     columns: Seq[ColumnMeta]) {
   def columnNames: Seq[String] = columns.map(_.name)
-  def columnsOf(tc: TypeClass): Seq[String] =
-    columns.filter(_.typeClass == tc).map(_.name)
-  def nonNullableColumns: Seq[String] =
-    columns.filterNot(_.nullable).map(_.name)
-  def nullableIntColumns: Seq[String] =
-    columns.filter(c => c.typeClass == TypeClass.IntLike && c.nullable)
-      .map(_.name)
 }
 
 /** Environment-level ingestion config (reference:

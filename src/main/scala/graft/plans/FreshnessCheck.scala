@@ -4,6 +4,8 @@ import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Discovery
+
 /** The partition-freshness monitor: Spark re-expression of the
   * reference's `check_bucket_latest_folders.py` (EP3).
   *
@@ -14,10 +16,12 @@ import org.apache.spark.sql.functions._
   * 2019-03-19) and grace maps for 2/7/14/30/60 days (`:143-238`) — via
   * list differences (`:222-229`).
   *
-  * Here the rules are DATA (two small DataFrames) and the cascade is two
-  * broadcast anti-join-shaped predicates; "latest" is a max-aggregate
-  * (lexicographic max ≡ date max for zero-padded paths). That keeps the
-  * monitor one narrow aggregation + two tiny joins at any scale.
+  * Here the partitions come from [[Discovery.discover]], the ingest job's
+  * own walk, whose path parse already yields each file's date; "latest"
+  * is a max-aggregate over them. The rules are DATA (two small
+  * DataFrames) and the cascade is two broadcast anti-join-shaped
+  * predicates. That keeps the monitor one narrow aggregation + two tiny
+  * joins at any scale.
   */
 object FreshnessCheck {
 
@@ -62,11 +66,19 @@ object FreshnessCheck {
       .orderBy("environment", "source_name")
   }
 
-  /** Latest partition date per (environment, source) from a frame of
-    * discovered partition rows (environment, source_name, date). */
-  def latestPerSource(partitions: DataFrame): DataFrame =
-    partitions.groupBy("environment", "source_name")
+  /** Latest partition date per (environment, source) over the files
+    * [[Discovery.discover]] walked — the same walk `IngestionJob.run`
+    * starts from; malformed paths are already dropped there. Columns:
+    * (environment, source_name, latest_date: date), the input of
+    * [[findStale]] and [[checkAndNotify]]. */
+  def latestPerSource(spark: SparkSession,
+      files: Seq[Discovery.IngestionFile]): DataFrame = {
+    import spark.implicits._
+    files.map(f => (f.environment, f.entity, f.date))
+      .toDF("environment", "source_name", "date")
+      .groupBy("environment", "source_name")
       .agg(max(col("date")).as("latest_date"))
+  }
 
   /** The full monitor run (reference `check_bucket_latest_folders.py`
     * tail: assemble the not-up-to-date list and post it): computes the

@@ -58,31 +58,28 @@ object IngestionJob {
     def write(df: DataFrame, config: TableConfig, environment: String): Unit
   }
 
-  /** Parquet sink; with `partitionByEnvironment` the output mirrors the
-    * input's Hive layout (`.../Environment=NL/...`) so downstream reads
-    * prune by environment for free. */
-  final class ParquetSink(outRoot: String,
-      partitionByEnvironment: Boolean = false) extends Sink {
+  /** Parquet sink: appends each group to `<outRoot>/<targetName>`. */
+  final class ParquetSink(outRoot: String) extends Sink {
     override def write(df: DataFrame, config: TableConfig,
-        environment: String): Unit = {
-      val w = df.write.mode(SaveMode.Append)
-      (if (partitionByEnvironment) w.partitionBy("Environment") else w)
-        .parquet(s"$outRoot/${config.targetName}")
-    }
+        environment: String): Unit =
+      df.write.mode(SaveMode.Append).parquet(s"$outRoot/${config.targetName}")
   }
 
-  final class JdbcSink(url: String, props: java.util.Properties,
-      batchSize: Int = 10000, numPartitions: Int = 8) extends Sink {
+  /** JDBC sink: appends each group to `raw.<targetName>` over at most
+    * 8 connections, 10000 rows per executeBatch round-trip. */
+  final class JdbcSink(url: String, props: java.util.Properties) extends Sink {
+    private val BatchSize = 10000
+    private val NumPartitions = 8
     /** Writer options actually applied — SQL Server URLs pick up the
       * dialect set (driver, batching, isolation; JdbcPathSpec pins the
       * exact map), other backends just the batch size. */
     val writerOptions: Map[String, String] =
       if (graft.sources.SqlServerDialect.isSqlServer(url))
-        graft.sources.SqlServerDialect.writerOptions(batchSize)
-      else Map("batchsize" -> batchSize.toString)
+        graft.sources.SqlServerDialect.writerOptions(BatchSize)
+      else Map("batchsize" -> BatchSize.toString)
     override def write(df: DataFrame, config: TableConfig,
         environment: String): Unit =
-      df.coalesce(numPartitions)
+      df.coalesce(NumPartitions)
         .write.mode(SaveMode.Append)
         .options(writerOptions)
         .jdbc(url, s"raw.${config.targetName}", props)

@@ -15,9 +15,9 @@ import graft.config.{ColumnMeta, TableConfig, TypeClass}
   *    whole-stage codegen: no shuffle, no per-transform plan nodes, no
   *    analyzer blow-up from hundreds of chained `withColumn`s.
   *  - `pipeline(...)` is the one cleanup path; tests assert each step on
-  *    its per-cell expression. The few `DataFrame`-level steps left (audit
-  *    columns, ordered projection, the sink-boundary P11) are single
-  *    selects over those expressions, not a second pipeline.
+  *    its per-cell expression. The two `DataFrame`-level steps left (audit
+  *    columns, the sink-boundary P11) are single selects over those
+  *    expressions, not a second pipeline.
   *  - Reference bugs (global `.replace('.0','')` in T2
   *    `CigEolHostingIngestionLogic.py:72`, substring `"None"→''` in T4
   *    `:111`, `environment.length` AttributeError in T0a `:18`) are resolved
@@ -140,12 +140,6 @@ object CigTransforms {
   def sentinelsToNull(df: DataFrame): DataFrame =
     df.select(df.columns.map(c => sentinelToNullExpr(col(c)).as(c)).toIndexedSeq: _*)
 
-  /** P1/T8: the authoritative ordered projection
-    * (`ParquetFileInsertion.py:50`; order is load-bearing, `:30-31`).
-    * Drops extras; missing columns are a plan-time error (prevented by T1). */
-  def orderedProjection(df: DataFrame, columnNames: Seq[String]): DataFrame =
-    df.select(columnNames.map(col).toIndexedSeq: _*)
-
   // ---------------------------------------------------------------------
   // The fused pipeline
   // ---------------------------------------------------------------------
@@ -157,7 +151,9 @@ object CigTransforms {
     * injection, string coercion, null/bool normalization (T0d/T0e),
     * missing-column defaulting (T1), nullable-int and sci-notation fixes
     * (T2/T3), non-nullable defaulting (T4), datetime/NVARCHAR truncation
-    * (T5/T6), odd-column overrides (T7), and the ordered projection (T8).
+    * (T5/T6), odd-column overrides (T7), and the ordered projection (P1/T8:
+    * exactly `config.columnNames`, in that order, extras dropped —
+    * `ParquetFileInsertion.py:50`; order is load-bearing, `:30-31`).
     * The sink-boundary sentinel→NULL (P11) is separate — call
     * [[sentinelsToNull]] right before writing, as the reference does
     * (`ParquetFileInsertion.py:60-75`).

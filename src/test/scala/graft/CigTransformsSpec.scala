@@ -93,8 +93,9 @@ class CigTransformsSpec extends AnyFunSuite {
 
   test("T1 missing-column default + P1 ordered projection") {
     val df = strDf("b" -> Seq("1"), "a" -> Seq("2"), "extra" -> Seq("3"))
-    val out = orderedProjection(df.select($"*", cellExpr(ColumnMeta("m"),
-      df.columns.toSet, "NL", LocalDate.of(2019, 7, 3)).as("m")), Seq("a", "b", "m"))
+    val cfg = TableConfig("HOST_CIG_T", "T", isEnabled = true,
+      columns = Seq(ColumnMeta("a"), ColumnMeta("b"), ColumnMeta("m")))
+    val out = CigTransforms.pipeline(df, cfg, "NL", LocalDate.of(2019, 7, 3))
     assert(out.columns.toSeq == Seq("a", "b", "m"))
     assert(out.head() == Row("2", "1", "None"))
   }

@@ -44,7 +44,7 @@ class JdbcPathSpec extends AnyFunSuite {
     ledger.ensureTable()
     ledger.ensureTable() // idempotent
 
-    val sink = new IngestionJob.JdbcSink(url, props, numPartitions = 2)
+    val sink = new IngestionJob.JdbcSink(url, props)
     val r1 = IngestionJob.run(spark, cfg, ledger, sink)
     assert(r1.ingested.size == 1 && r1.skippedByMarker == 0)
 
@@ -126,10 +126,10 @@ class JdbcPathSpec extends AnyFunSuite {
         |  INSERT (ParquetSource, TargetTable, Environment, BackupDate, InsertedDate)
         |  VALUES (src.ParquetSource, src.TargetTable, src.Environment,
         |          src.BackupDate, src.InsertedDate);""".stripMargin))
-    val sink = new IngestionJob.JdbcSink(ssUrl, new Properties(), batchSize = 5000)
+    val sink = new IngestionJob.JdbcSink(ssUrl, new Properties())
     assert(sink.writerOptions == Map(
       "driver" -> "com.microsoft.sqlserver.jdbc.SQLServerDriver",
-      "batchsize" -> "5000",
+      "batchsize" -> "10000",
       "isolationLevel" -> "READ_COMMITTED"))
 
     // Derby (and any non-sqlserver backend) stays on the portable forms

@@ -149,6 +149,41 @@ class NotifierSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  test("freshness from the discovery walk: discover -> latestPerSource -> checkAndNotify") {
+    // the EP3 input path: the same driver-side walk the ingest job runs.
+    // Discovery only lists and parses paths, so the files stay empty.
+    val spark = TestSession.spark
+    val root = java.nio.file.Files.createTempDirectory("graft-fresh")
+    Seq(
+      "environment=PROD/Accounts/2026/08/01/a.parquet",
+      "environment=PROD/Accounts/2026/08/12/b.parquet",
+      "environment=PROD/Orders/2026/08/05/c.parquet",
+      "environment=ACC/Accounts/2026/07/15/d.parquet",
+      "environment=ACC/Orders/2026/08/10/e.parquet",
+      // malformed (not an `environment=` root): read, it would make
+      // ACC/Accounts fresh
+      "env=ACC/Accounts/2026/08/12/f.parquet").foreach { rel =>
+      val f = root.resolve(rel)
+      java.nio.file.Files.createDirectories(f.getParent)
+      java.nio.file.Files.createFile(f)
+    }
+    val files = graft.sources.Discovery.discover(root.toString, mailbox = false)
+    assert(files.size == 5)
+    val latest = FreshnessCheck.latestPerSource(spark, files)
+    val buf = new BufferingNotifier
+    val stale = FreshnessCheck.checkAndNotify(spark, latest, Nil,
+      Seq(FreshnessCheck.GraceRule("PROD", "Orders", 7)),
+      LocalDate.parse("2026-08-12"), buf)
+    // PROD/Accounts: its later date wins; PROD/Orders: inside its grace
+    assert(stale.toSeq == Seq(
+      ("ACC", "Accounts", "2026-07-15"),
+      ("ACC", "Orders", "2026-08-10")))
+    assert(buf.messages.toSeq == Seq(
+      "Tables not up to date (2):\n" +
+        "ACC/Accounts latest=2026-07-15\n" +
+        "ACC/Orders latest=2026-08-10"))
+  }
+
   test("checkAndNotify stays silent when everything is fresh") {
     val spark = TestSession.spark
     import spark.implicits._

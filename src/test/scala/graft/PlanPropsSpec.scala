@@ -32,6 +32,15 @@ class PlanPropsSpec extends AnyFunSuite {
     PlanDump.plans(spark)(build).map(_.executedPlan.toString)
       .mkString("\n--- construction-time cut ---\n")
 
+  /** The logical plans the window/broadcast walkers inspect, from the
+    * same [[PlanDump.plans]] walk: the final frame's optimized plan, then
+    * each cut's recorded plan (already optimized when the cut ran). */
+  private def auditedPlans(build: => org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
+    val qes = PlanDump.plans(spark)(build)
+    qes.head.optimizedPlan +: qes.tail.map(_.logical)
+  }
+
   test("PLANS.md rows count the cut plans: a cutting query counts more, a cut-free one its final plan") {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -2154,11 +2163,8 @@ class PlanPropsSpec extends AnyFunSuite {
     * as surely as one in the final plan, and is just as invisible
     * there. */
   private def unguardedWindowLeavesWithAudit(
-      build: => org.apache.spark.sql.DataFrame): Seq[String] = {
-    val (df, cuts) = CurationOps.auditCuts(spark)(build)
-    unguardedWindowLeaves(df) ++
-      cuts.flatMap(p => unguardedWindowLeavesIn(p, rawLeavesPhys))
-  }
+      build: => org.apache.spark.sql.DataFrame): Seq[String] =
+    auditedPlans(build).flatMap(unguardedWindowLeavesIn(_, rawLeavesPhys))
 
   /** Shared boundedness walk: the corpus-scaled content of a logical
     * subtree that is about to be single-tasked (window walker) or
@@ -2317,10 +2323,8 @@ class PlanPropsSpec extends AnyFunSuite {
     * hook records every plan the cut is about to execute and each one
     * is walked like the top-level plan. */
   private def unguardedBroadcastLeavesWithAudit(
-      build: => org.apache.spark.sql.DataFrame): Seq[String] = {
-    val (df, cuts) = CurationOps.auditCuts(spark)(build)
-    unguardedBroadcastLeaves(df) ++ cuts.flatMap(unguardedBroadcastLeavesIn)
-  }
+      build: => org.apache.spark.sql.DataFrame): Seq[String] =
+    auditedPlans(build).flatMap(unguardedBroadcastLeavesIn)
 
   /** Documented exemptions from the entity-keyed-aggregate rule: query
     * name → why that query's flagged aggregate is in fact bounded at

@@ -7,6 +7,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.config.{ColumnMeta, TableConfig}
 import graft.transforms.CigTransforms._
 
 /** Property-style tests (SURVEY §5.2): generated string batches compared
@@ -124,17 +125,24 @@ class TransformPropsSpec extends AnyFunSuite {
   }
 
   test("prop: ordered projection returns exactly the requested permutation") {
+    // P1/T8 through the pipeline: whatever order the source holds its
+    // columns in, and whatever extras it carries, the output is exactly
+    // the config's column list in the config's order
     val cols = ('a' to 'j').map(_.toString)
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(cols: _*)), 1),
-      StructType(cols.map(StructField(_, StringType, nullable = true))))
-    val perms = Gen.listOfN(20, Gen.someOf(cols).suchThat(_.nonEmpty))
-      .apply(Gen.Parameters.default, Seed(6)).get
-    perms.foreach { subset =>
-      val want = scala.util.Random.shuffle(subset.toList)
-      val out = orderedProjection(df, want)
-      assert(out.columns.toSeq == want)
-      assert(out.head() == Row(want.map(c => c): _*))
+    val extras = Seq("x1", "x2", "x3")
+    val cfg = TableConfig("HOST_CIG_T", "T", isEnabled = true,
+      columns = cols.map(ColumnMeta(_)))
+    val date = java.time.LocalDate.of(2019, 7, 3)
+    val rng = new scala.util.Random(6)
+    (1 to 20).foreach { _ =>
+      val in = rng.shuffle(cols ++ extras)
+      assert(in.filter(cols.contains) != cols, "shuffle kept the config order")
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(Row(in: _*)), 1),
+        StructType(in.map(StructField(_, StringType, nullable = true))))
+      val out = pipeline(df, cfg, "NL", date)
+      assert(out.columns.toSeq == cfg.columnNames)
+      assert(out.head() == Row(cfg.columnNames: _*))
     }
   }
 }
