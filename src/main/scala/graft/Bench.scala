@@ -3,142 +3,72 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
-  * A short untimed warmup absorbs JVM/session startup so timings reflect
-  * steady-state plan execution, which is what scales.
+  * SPARK_GRAFT_SF_DIR and prints two JSON lines of raw wall seconds:
+  * line 1 with every query's min over `SPARK_GRAFT_REPS` timed reps,
+  * then a compact summary. An untimed warm pass per query absorbs
+  * JIT/codegen; [[resetSharedState]] runs after every rep. Seconds are
+  * host-specific: compare two runs only when both ran this harness on
+  * the same host at the same core count.
   *
   * One-query timing is the same main: `SPARK_GRAFT_ONLY=<q,…>
   * SPARK_GRAFT_REPS=<n> [SPARK_GRAFT_WARM=0] runMain graft.Bench`;
-  * stderr carries one `[bench] <q> rep<i>: <s> s` line per rep.
-  *
-  * Cross-round de-noising: host CPU throughput on shared infrastructure
-  * swings several-fold minute to minute (measured: identical binaries
-  * moved 32s → 48s aggregate across two rounds), so raw seconds are not
-  * comparable across runs. Each timed rep is therefore paired with a
-  * fixed calibration probe run on the same thread pool; the calibrated
-  * series rescales by the RUN-WIDE median of all probes to a fixed
-  * nominal host speed. Pairing each rep with its own probe over-corrects
-  * — taking min over sec·(ref/probe) selects for reps whose probe got
-  * lucky — so a single per-run scale factor is applied to every rep, and
-  * the JSON reports BOTH the min and the median of the rescaled reps.
-  *
-  * Probe PROPORTIONALITY (round-7 fix): a pure-ALU probe over-corrects on
-  * hosts whose ALU speed is far from nominal, because the queries are
-  * shuffle/latency-bound and do not speed up proportionally with ALU
-  * throughput (measured: a 3× ALU-faster host ran the heavy queries only
-  * ~1.0–1.3× faster, so ALU-only calibration inflated them ~3×). The
-  * scale factor is therefore derived from a SHUFFLE-SHAPED probe — a
-  * fixed exchange+hash-aggregate whose cost is dominated by the same
-  * fixed overheads (task launch, 32×32 shuffle-block fetches, row
-  * serialization) that dominate the suite — so the probe ratio tracks the
-  * actual cross-host query-speed ratio instead of the ALU ratio. The ALU
-  * probe is retained as a pure-CPU diagnostic (and rounds-1–6 continuity
-  * reference); both probe skews and their disagreement (`calib_flags`)
-  * are emitted so a drifted run is self-identifying, and the RAW series
-  * stays first in the JSON as the continuity anchor. `queries` stays raw
-  * (driver contract); `queries_calibrated` (min) and
-  * `queries_calibrated_median` are the cross-round-comparable series
-  * (re-based this round; raw bridges). */
+  * stderr carries one `[bench] <q> rep<i>: <s> s` line per rep. */
 object Bench {
 
-  /** Nominal seconds for [[calibOnce]] on an unloaded host — the fixed
-    * reference speed of the ALU probe. Diagnostic only since round 7
-    * (see class doc). Round 8: re-based to the DRIVER host class using
-    * BENCH_r07's suite-context probe medians (alu 0.099, shuffle 0.503,
-    * plan 0.168) — the round-7 pins came from a builder host ~2× slower
-    * than the host that actually grades, so every driver run started
-    * with all three skew flags lit and a 1.27× inflation baked into the
-    * calibrated series. Nominal now means "the grading host, unloaded";
-    * raw medians bridge the re-base (BENCH_NOTES round-8 section). */
-  val CalibRef = 0.10
-
-  /** Nominal seconds for [[calibShuffleOnce]] on an unloaded host
-    * (driver host class, BENCH_r07 suite-context median). */
-  val ShuffleCalibRef = 0.50
-
-  /** Nominal seconds for [[calibPlanOnce]] on an unloaded host
-    * (driver host class, BENCH_r07 suite-context median). */
-  val PlanCalibRef = 0.17
-
-  /** The calibrated series rescales by (ShuffleCalibRef + PlanCalibRef)
-    * / (shuffleMedian + planMedian): a blend of a parallel
-    * shuffle-shaped probe and a single-threaded driver-planning probe,
-    * CLAMPED to [1/1.5, 1.5] (see main). Measured on this suite
-    * (32-core vs 2-core A/B, probes 3.5× apart): shuffle-bound queries
-    * (q59/q70) slow ~2.5–3×, driver-planning-bound queries (q86/q97)
-    * only ~1.1–1.7× — the classes genuinely diverge, so no probe-derived
-    * scalar tracks all queries on a host far from nominal. The blend
-    * corrects same-class load swings; the clamp bounds the worst-case
-    * calibration artifact at 1.5× (the round-6 ALU-only estimator
-    * reached 3×), and a clamped run self-identifies via calib_flags. */
-  val BlendCalibRef: Double = ShuffleCalibRef + PlanCalibRef
-
-  /** ALU component of the probe: Σ id·id over a 32-way parallel range —
-    * saturates the executor thread pool, no I/O, no shuffle; tracks raw
-    * CPU throughput. */
-  def calibOnce(spark: SparkSession): Double = {
-    val t0 = System.nanoTime()
-    spark.range(0, 100000000L, 1, 32)
-      .selectExpr("sum(CAST(id AS DOUBLE) * id)").collect()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Shuffle component of the probe: a fixed exchange + hash aggregate
-    * (hash partitioning, row serialization, fetch, agg) — the cost shape
-    * of groupBy/join stages that dominates the suite. AQE coalescing is
-    * defeated by repartitioning on the group key explicitly. */
-  def calibShuffleOnce(spark: SparkSession): Double = {
-    import org.apache.spark.sql.functions.{col, sum => fsum}
-    val t0 = System.nanoTime()
-    spark.range(0, 3000000L, 1, 32)
-      .selectExpr("id % 65536 AS k", "id AS v")
-      .repartition(32, col("k"))
-      .groupBy("k").agg(fsum("v").as("s"))
-      .selectExpr("count(1) AS n", "sum(s) AS t").collect()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Driver-planning component of the probe: analyze + optimize +
-    * physically plan (no execution) a fixed moderately-wide composed
-    * plan — chained projections, self-unions, a self-join, an
-    * aggregate. Catalyst planning is single-threaded driver work, the
-    * dominant cost of the composed-query tail (q86-class), and is
-    * insensitive to executor core count — exactly the component a
-    * parallel probe cannot see. Fresh Dataset objects per call mean no
-    * plan-cache hits; `executedPlan` stops before codegen/execution so
-    * the Janino cache cannot make later probes cheaper. */
-  def calibPlanOnce(spark: SparkSession): Double = {
-    import org.apache.spark.sql.functions.col
-    val t0 = System.nanoTime()
-    for (_ <- 1 to 3) {
-      var df = spark.range(100).selectExpr("id", "id AS a0")
-      for (i <- 1 to 14)
-        df = df.withColumn(s"a$i", col(s"a${i - 1}") * 2 + 1)
-      val u = df.unionAll(df).unionAll(df)
-      val j = u.join(
-        u.select(col("id").as("id2"), col("a14").as("b")),
-        col("id") === col("id2"))
-      j.groupBy("a3").agg(org.apache.spark.sql.functions.sum("b").as("s"))
-        .queryExecution.executedPlan
-    }
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Round-14 measurement-honesty fix (r13 verdict item 2): between
-    * timed reps the bench drops EVERYTHING a query could ride —
+  /** Drops everything a query could ride into the next run: the
     * catalog cache, the shared graph artifacts (GraphOps' co-occurrence
     * edges and HyperBall rounds, whose lineage-cut checkpoints survive
     * `clearCache`), and every persistent RDD block (localCheckpoint
-    * storage included) — so each rep computes the full query from the
-    * parquet inputs and the timed min of a memo consumer includes its
-    * own artifact build. Round 13 benched those consumers
-    * at memo-lookup time (~0.03–0.4 s) because the untimed warm pass
-    * built the artifact and nothing evicted it; those numbers measured
-    * the lookup, not the query. */
+    * storage included). Bench calls it after every rep, so a memo
+    * consumer's timed min includes its own artifact build; Verify and
+    * PlanDump call it after every query, so cut blocks do not pile up
+    * over a whole-suite walk. */
   def resetSharedState(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     graft.operators.GraphOps.evictShared(spark)
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
+
+  /** One query's timed reps, in seconds, and whether its warm pass and
+    * every rep ran without throwing. */
+  final case class QueryResult(name: String, secs: Seq[Double], ok: Boolean)
+
+  /** The two stdout lines: the full line (`queries` holds each query's
+    * raw min) and the summary. A query with no rep reads -1 and is left
+    * out of the totals; a failed query keeps its time and is named in
+    * `failed` on both lines. */
+  private[graft] def render(sfDir: String, reps: Int,
+      results: Seq[QueryResult]): (String, String) = {
+    val failed = results.filterNot(_.ok).map(_.name)
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
+    // (name, raw min, raw median of reps)
+    val rows = results.map { r =>
+      if (r.secs.isEmpty) (r.name, -1.0, -1.0)
+      else (r.name, r.secs.min, median(r.secs))
+    }
+    def obj(kv: Seq[(String, Double)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val total = rows.map(_._2).filter(_ >= 0).sum
+    val totalMed = rows.map(_._3).filter(_ >= 0).sum
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(rows.map(r => (r._1, r._2)))},"sf":"$sfDir","reps":$reps,"n_failed":${failed.size},"failed":$failedJson}"""
+    // the summary comes LAST and stays short: a record that keeps only
+    // the tail of the output still has the totals and the heaviest
+    // queries
+    def r3(x: Double): Double = math.rint(x * 1000) / 1000
+    def obj3(kv: Seq[(String, Double)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+    // top 20 selected and sorted by raw min, the noise-robust estimate of
+    // a query's cost; a query whose median is >2× its own min in one run
+    // was load-spiked, and is named in `load_spiked`
+    val top20 = rows.filter(_._2 >= 0).sortBy(-_._2).take(20)
+    val loadSpiked = rows
+      .filter(r => r._2 > 0 && r._3 / r._2 > 2.0)
+      .sortBy(r => -(r._3 / r._2))
+      .map(r => "\"" + r._1 + "\":" + r3(r._3 / r._2))
+      .mkString("{", ",", "}")
+    val summary = s"""{"metric":"summary","unit":"sec","sf":"$sfDir","n_queries":${rows.size},"total_raw_min":${r3(total)},"total_raw_median":${r3(totalMed)},"top20_raw_min":${obj3(top20.map(r => (r._1, r._2)))},"top20_by_min_raw_median":${obj3(top20.map(r => (r._1, r._3)))},"load_spiked":$loadSpiked,"n_failed":${failed.size},"failed":$failedJson}"""
+    (full, summary)
   }
 
   def main(args: Array[String]): Unit = {
@@ -150,36 +80,20 @@ object Bench {
     // per-query warm pass at the TARGET sf: AQE picks different physical
     // plans at different data sizes, so warming on a smaller sf leaves
     // the timed pass paying Janino compile for every re-planned stage.
-    // Running the query itself once untimed makes the timed number true
-    // steady-state execution — which is what scales.
     val doWarm = sys.env.getOrElse("SPARK_GRAFT_WARM", "1") == "1"
-    // Per query: min of `reps` timed runs. Host CPU throughput on shared
-    // infrastructure fluctuates several-fold minute to minute (measured:
-    // the same steady-state plan at 3.5s and 16.7s within one session);
-    // the minimum is the standard noise-robust estimator of sustained
-    // plan cost. Each rep pays the full cost — intra-query persists are
-    // dropped between reps, so nothing is subsidized across runs.
+    // Per query: min of `reps` timed runs, the noise-robust estimate of
+    // sustained plan cost. Each rep pays the full cost: the reset after
+    // every rep drops what a query could ride, so nothing is subsidized
+    // across runs.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
-    // the heaviest queries dominate cross-round comparisons, so they get
-    // two extra reps: more samples tighten both the min and the median of
-    // the rescaled series where agreement matters most
-    val heavyReps = reps + 2
-    val heavy = Set("q86_knn_graph", "q70_pagerank", "q59_dup_clusters", "q97_digest_drilldown")
-    // prime the calibration ops' codegen/JIT so the first paired probes
-    // aren't inflated by first-use compile
-    calibOnce(spark); calibShuffleOnce(spark); calibPlanOnce(spark)
     // SPARK_GRAFT_ONLY=q86_knn_graph,q70_pagerank → time just those
     // (single-query iteration; unset, every query runs)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val shuffleProbes = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val planProbes = scala.collection.mutable.ArrayBuffer.empty[Double]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map {
-      case (name, fn) =>
+      .map { case (name, fn) =>
         // progress marker: when a run stalls, the LAST marker names the
-        // query that is stuck (the JSON contract is unaffected — the
-        // driver greps the single [info] metric line)
+        // query that is stuck
         System.err.println(s"[bench] start $name")
         // a query that throws in the warm pass or in any rep is FAILED:
         // named in both output lines, and the run exits non-zero
@@ -194,17 +108,7 @@ object Bench {
           run("warm pass")
           resetSharedState(spark)
         }
-        // the shuffle and plan probes are heavier than the ALU probe, so
-        // they sample once per query (≈146 samples/run — ample for a
-        // run-wide median) rather than once per rep
-        shuffleProbes += calibShuffleOnce(spark)
-        planProbes += calibPlanOnce(spark)
-        // each rep still runs an ALU probe back to back with the query —
-        // the probes collectively sample host speed across the whole run,
-        // and the run-wide medians become the single rescale factor below
-        val nReps = if (heavy(name)) heavyReps else reps
-        val samples = (1 to nReps).map { i =>
-          val calib = calibOnce(spark)
+        val secs = (1 to reps).map { i =>
           val t0 = System.nanoTime()
           run("rep")
           // a failed rep keeps its time: dropping it would make a crash
@@ -212,106 +116,14 @@ object Bench {
           val sec = (System.nanoTime() - t0) / 1e9
           System.err.println(f"[bench] $name rep$i: $sec%.3f s")
           resetSharedState(spark)
-          (sec, calib)
+          sec
         }
-        (name, samples, ok)
-    }
-    val failed = results.filterNot(_._3).map(_._1)
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def median(xs: Seq[Double]): Double =
-      if (xs.isEmpty) -1.0 else { val s = xs.sorted; s(s.size / 2) }
-    // ONE scale factor for the whole run, from the shuffle+plan blended
-    // probe medians. Per-rep pairing divides each rep by its own noisy
-    // probe (min then selects the luckiest pairing); a run-wide median
-    // is stable at ~n_queries samples and rescales all reps identically.
-    // The blend tracks the suite's cost composition — parallel
-    // shuffle-bound stages plus single-threaded driver planning — so an
-    // ALU-fast host no longer gets its shuffle-bound queries inflated by
-    // the ALU ratio (the round-6 3× artifact), and a core-starved host
-    // doesn't get its driver-bound queries over-deflated.
-    val calibMed = median(results.flatMap(_._2.map(_._2)))
-    val shufMed = median(shuffleProbes.toSeq)
-    val planMed = median(planProbes.toSeq)
-    val scaleRaw =
-      if (shufMed > 0 && planMed > 0) BlendCalibRef / (shufMed + planMed)
-      else 1.0
-    // CLAMP the correction to ±1.5×. Measured on a 32-core vs 2-core
-    // A/B (probes 3.5× apart): the heavy queries spread 1.1×–3.0× in
-    // actual slowdown, so NO probe-derived scalar can track all of them
-    // on a host far from nominal — an unbounded scale manufactures
-    // phantom regressions (the round-6 3× artifact). Calibration's job
-    // is de-noising load swings on nominal-class hosts, where the true
-    // scale is near 1; beyond the clamp the run is flagged and graders
-    // should lean on the raw series (always emitted first).
-    val scale = math.max(1.0 / 1.5, math.min(1.5, scaleRaw))
-    // self-diagnostics: how far each probe is from its nominal, and
-    // whether they disagree (>30% → the host's cost composition is far
-    // from nominal and cross-round comparison should lean on raw numbers)
-    val aluSkew = if (calibMed > 0) calibMed / CalibRef else -1.0
-    val shufSkew = if (shufMed > 0) shufMed / ShuffleCalibRef else -1.0
-    val planSkew = if (planMed > 0) planMed / PlanCalibRef else -1.0
-    val calibFlags = {
-      val fs = scala.collection.mutable.ArrayBuffer.empty[String]
-      def off(x: Double) = x > 0 && (x > 1.3 || x < 1 / 1.3)
-      if (off(aluSkew)) fs += "alu_skew_gt_1.3"
-      if (off(shufSkew)) fs += "shuffle_skew_gt_1.3"
-      if (off(planSkew)) fs += "plan_skew_gt_1.3"
-      if (scale != scaleRaw) fs += "calib_scale_clamped"
-      val ratio = if (shufSkew > 0 && aluSkew > 0) aluSkew / shufSkew else 1.0
-      if (ratio > 1.3 || ratio < 1 / 1.3) fs += "probe_disagreement_gt_1.3"
-      fs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    }
-    val rows = results.map { case (name, samples, _) =>
-      val secs = samples.map(_._1)
-      val raw = if (secs.nonEmpty) secs.min else -1.0
-      val cal = if (secs.nonEmpty) secs.min * scale else -1.0
-      val calMedOfReps = if (secs.nonEmpty) median(secs) * scale else -1.0
-      val rawMedOfReps = if (secs.nonEmpty) median(secs) else -1.0
-      (name, raw, cal, calMedOfReps, rawMedOfReps)
-    }
-    def obj(kv: Seq[(String, Double)]): String =
-      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qs = obj(rows.map(r => (r._1, r._2)))
-    val qsCal = obj(rows.map(r => (r._1, r._3)))
-    val qsCalMed = obj(rows.map(r => (r._1, r._4)))
-    val total = rows.map(_._2).filter(_ >= 0).sum
-    val totalCal = rows.map(_._3).filter(_ >= 0).sum
-    val totalRawMed = rows.map(_._5).filter(_ >= 0).sum
-    val totalCalMed = rows.map(_._4).filter(_ >= 0).sum
-    // full line first: raw series leads (driver contract + continuity
-    // anchor), calibrated series follow
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","calib_ref":$CalibRef,"calib_median":$calibMed,"shuffle_calib_ref":$ShuffleCalibRef,"shuffle_calib_median":$shufMed,"plan_calib_ref":$PlanCalibRef,"plan_calib_median":$planMed,"calib_scale":$scale,"calib_scale_unclamped":$scaleRaw,"alu_skew":$aluSkew,"shuffle_skew":$shufSkew,"plan_skew":$planSkew,"calib_flags":$calibFlags,"reps":$reps,"value_calibrated":$totalCal,"queries_calibrated":$qsCal,"queries_calibrated_median":$qsCalMed,"n_failed":${failed.size},"failed":$failedJson}""")
-    // compact summary line LAST: the driver's record keeps only the tail
-    // of the bench output, so everything cross-round-gradeable (totals,
-    // probe diagnostics, the heaviest queries) is restated here in <2000
-    // chars and survives truncation
-    def r3(x: Double): Double = math.rint(x * 1000) / 1000
-    def obj3(kv: Seq[(String, Double)]): String =
-      kv.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    // Round-9 fix: the top-20 is selected and sorted by raw MIN, not
-    // median. The min is the noise-robust estimator of sustained plan
-    // cost (class doc); on a loaded driver host a median-sorted top-20
-    // promoted six 1-scan ETL queries into the permanent cross-round
-    // record (BENCH_r08 q04/q21-q24/q107 — all re-measured at <2s steady
-    // state). A query whose median is >2× its own min inside one run was
-    // load-spiked, not regressed — those are named in `load_spiked` so a
-    // cross-round diff starts from the flag, not from triage.
-    // Round-10 fix: the companion median series keep their values but
-    // their MEMBERSHIP is the raw-MIN-selected set since round 9, so the
-    // keys are versioned (`top20_by_min_*`) — a tool diffing round-8's
-    // median-selected `top20_*_median` against these would silently
-    // compare differently-selected sets.
-    val top20 = rows.filter(_._2 >= 0).sortBy(-_._2).take(20)
-    val top20MinObj = obj3(top20.map(r => (r._1, r._2)))
-    val top20Obj = obj3(top20.map(r => (r._1, r._4)))
-    val top20RawObj = obj3(top20.map(r => (r._1, r._5)))
-    val loadSpiked = rows
-      .filter(r => r._2 > 0 && r._5 / r._2 > 2.0)
-      .sortBy(r => -(r._5 / r._2))
-      .map(r => "\"" + r._1 + "\":" + r3(r._5 / r._2))
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"summary","unit":"sec","sf":"$sfDir","n_queries":${rows.size},"total_raw_min":${r3(total)},"total_raw_median":${r3(totalRawMed)},"total_calibrated_min":${r3(totalCal)},"total_calibrated_median":${r3(totalCalMed)},"calib_median":${r3(calibMed)},"shuffle_calib_median":${r3(shufMed)},"plan_calib_median":${r3(planMed)},"calib_scale":${r3(scale)},"alu_skew":${r3(aluSkew)},"shuffle_skew":${r3(shufSkew)},"plan_skew":${r3(planSkew)},"calib_flags":$calibFlags,"top20_raw_min":$top20MinObj,"top20_by_min_calibrated_median":$top20Obj,"top20_by_min_raw_median":$top20RawObj,"load_spiked":$loadSpiked,"n_failed":${failed.size},"failed":$failedJson}""")
+        QueryResult(name, secs, ok)
+      }
+    val (full, summary) = render(sfDir, reps, results)
+    println(full)
+    println(summary)
     spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    if (results.exists(!_.ok)) sys.exit(1)
   }
 }

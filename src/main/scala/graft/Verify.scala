@@ -26,8 +26,9 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // operators may persist() shared intermediates — scope them per query
-      spark.catalog.clearCache()
+      // operators may persist() shared intermediates and cut lineage
+      // into RDD blocks — scope both per query
+      Bench.resetSharedState(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -45,8 +45,8 @@ object ClusterOps {
     // v feeds both assignment passes and the centroid update of the ONE
     // action the caller runs — the cache engages during that execution,
     // so it cannot be unpersisted here (nothing is materialized yet).
-    // Long-lived sessions reclaim it via clearCache, as Bench/Verify do
-    // per query.
+    // Long-lived sessions reclaim it via clearCache, which
+    // Bench.resetSharedState runs per query in Bench and Verify.
     val v = SimilarityOps.baseVectors(s, dir).persist()
     // limit(K) after the unique-id filter is a results no-op that makes
     // the K-row bound structural (visible to the planner and the

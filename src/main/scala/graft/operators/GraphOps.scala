@@ -122,7 +122,7 @@ object GraphOps {
     // ew is dead once the final generation is materialized — free it so
     // long-lived sessions (libraries, notebooks) don't pin the edge
     // table in storage; the final ranks cache stays, scoped by the
-    // caller (Bench/Verify clearCache per query)
+    // caller (Bench and Verify run Bench.resetSharedState per query)
     ew.unpersist()
     ranks
   }
@@ -466,25 +466,24 @@ object GraphOps {
     val base = knnVectors(s, dir)
     val sig = if (planes == 0) "CAST(0 AS BIGINT)"
       else VecSql.lshSig("emb", planes, spark = true)
-    // localCheckpoint, not persist: the signature + projection subtree
+    // a lineage cut, not persist: the signature + projection subtree
     // is a ~1400-node expression tree, and a persisted frame still
     // carries that full logical plan into every downstream self-join
     // branch — Catalyst re-canonicalizes each copy per optimizer pass
     // and DRIVER planning time, not execution, dominated the composed
     // query (measured 20 s of q86's 24 s at sf0.1). Checkpointing cuts
     // the lineage to a LogicalRDD, so every downstream plan is
-    // constant-size. The index build runs once, eagerly; executor loss
-    // re-running it is the documented localCheckpoint trade-off (same
-    // call CurationOps makes, with reliable checkpoint as the
-    // cluster-mode escape hatch). pnorm is derived in a second step so
-    // CollapseProject can't inline the 16 chains into the sqrt inside
-    // v0's own plan.
+    // constant-size. The index build runs once, eagerly, through
+    // CurationOps.cutLineage (localCheckpoint, or a reliable checkpoint
+    // when a checkpoint dir is configured). pnorm is derived in a second
+    // step so CollapseProject can't inline the 16 chains into the sqrt
+    // inside v0's own plan.
     // wholestage codegen is disabled JUST for this eager materialize:
     // Janino spends ~1 s compiling the 1400-term generated method on
     // every construction (the source embeds fresh expr ids, so the
     // compile cache never hits), while interpreted eval of 2000 rows
     // is <0.1 s — codegen costs 2× what it saves here. The toggle is
-    // safe because localCheckpoint executes before the finally; the
+    // safe because the cut executes before the finally; the
     // interpreted path has identical IEEE semantics.
     // Restore-or-unset: reading the conf returns the DEFAULT for an
     // unset key, so blindly re-setting the read value would leave a
@@ -498,9 +497,8 @@ object GraphOps {
     val codegenWas = s.conf.get(codegenKey, "true")
     s.conf.set(codegenKey, "false")
     val v0 = try {
-      base
-        .selectExpr("vec_id", "emb", "norm", s"$sig AS bucket", projArr)
-        .localCheckpoint()
+      CurationOps.cutLineage(base
+        .selectExpr("vec_id", "emb", "norm", s"$sig AS bucket", projArr))
     } finally {
       if (codegenWasSet) s.conf.set(codegenKey, codegenWas)
       else s.conf.unset(codegenKey)
@@ -573,20 +571,19 @@ object GraphOps {
   def mutualGraphStats(knn: DataFrame): DataFrame = {
     // the kNN edge list feeds BOTH sides of the mutuality self-join,
     // and mut feeds the degree union twice plus the triangle join three
-    // times. localCheckpoint both (they are ~k·n and smaller slim
+    // times. Cut the lineage of both (they are ~k·n and smaller slim
     // tables): a merely-persisted frame keeps its full logical subtree,
     // which (a) Catalyst re-optimizes per consumer branch and (b) Spark
     // recomputes CONCURRENTLY from independent downstream stages that
     // all start before any of them has populated the cache — measured
     // as a 3× blowup of the composed q86. Checkpointing materializes
     // each exactly once and truncates every consumer's plan.
-    val knnC = knn.localCheckpoint()
-    val mut = knnC.as("x")
+    val knnC = CurationOps.cutLineage(knn)
+    val mut = CurationOps.cutLineage(knnC.as("x")
       .join(knnC.as("y"),
         col("x.qa") === col("y.qb") && col("x.qb") === col("y.qa"))
       .filter(col("x.qa") < col("x.qb"))
-      .select(col("x.qa").as("s1"), col("x.qb").as("s2"))
-      .localCheckpoint()
+      .select(col("x.qa").as("s1"), col("x.qb").as("s2")))
     val tri = mut.as("e1")
       .join(mut.as("e2"), col("e1.s2") === col("e2.s1"))
       .join(mut.as("e3"),

@@ -70,13 +70,14 @@ object IngestionJob {
   final class JdbcSink(url: String, props: java.util.Properties) extends Sink {
     private val BatchSize = 10000
     private val NumPartitions = 8
-    /** Writer options actually applied — SQL Server URLs pick up the
-      * dialect set (driver, batching, isolation; JdbcPathSpec pins the
-      * exact map), other backends just the batch size. */
+    /** Writer options actually applied: the batch size, plus the
+      * dialect's driver and isolation on SQL Server URLs (JdbcPathSpec
+      * pins both maps). */
     val writerOptions: Map[String, String] =
-      if (graft.sources.SqlServerDialect.isSqlServer(url))
-        graft.sources.SqlServerDialect.writerOptions(BatchSize)
-      else Map("batchsize" -> BatchSize.toString)
+      Map("batchsize" -> BatchSize.toString) ++
+        (if (graft.sources.SqlServerDialect.isSqlServer(url))
+          graft.sources.SqlServerDialect.writerOptions
+        else Map.empty)
     override def write(df: DataFrame, config: TableConfig,
         environment: String): Unit =
       df.coalesce(NumPartitions)

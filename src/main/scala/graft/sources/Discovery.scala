@@ -19,7 +19,7 @@ import java.time.LocalDate
   *    configs and marker-ledger keys therefore use full datasource
   *    names (e.g. `NL_Hosting_Mailbox`, not `NL`).
   *
-  * Both walks list the WHOLE root, driver-side; `IngestionJob.run`
+  * The walk lists the WHOLE root, driver-side; `IngestionJob.run`
   * filters by date afterwards. The resulting explicit file list feeds
   * one `spark.read` per (table, environment), so executors never list.
   */
@@ -30,51 +30,40 @@ object Discovery {
   final case class IngestionFile(
       environment: String, entity: String, date: LocalDate, path: String)
 
-  /** Walk a local tree (tests' stand-in for the object-store LIST) and
-    * parse every data file found (`ext` selects the source format; the
-    * reference is parquet-only, CSV/JSON are format extensions riding
-    * the same layout). Malformed paths are dropped, as the reference's
-    * shape predicate does. A root with a URI scheme (`file://`, `s3a://`)
-    * is rejected: `Paths.get` would turn it into a relative path that
-    * does not exist, and the run would find nothing without an error. */
+  /** List the data root through the Hadoop `FileSystem` of the active
+    * session's configuration and parse every data file found (`ext`
+    * selects the source format; the reference is parquet-only, CSV/JSON
+    * are format extensions riding the same layout). The same code lists
+    * a local tree, `file://` and `s3a://bucket/...`: one LIST per
+    * directory from the driver, replacing the reference's
+    * PowerShell-mirror + boto walk. Every returned path keeps the root's
+    * own form (a plain root yields plain paths, `s3a://bucket/root`
+    * yields `s3a://bucket/root/…`), so marker-ledger keys and
+    * `spark.read` see the root as configured.
+    * Malformed paths are dropped, as the reference's shape predicate
+    * does; a missing root yields nothing. */
   def discover(root: String, mailbox: Boolean,
       ext: String = ".parquet"): Seq[IngestionFile] = {
-    import java.nio.file._
-    if (root.matches("[A-Za-z][A-Za-z0-9+.-]*:.*"))
-      throw new IllegalArgumentException(
-        s"data root '$root' has a URI scheme; list it with Discovery.discoverHadoop")
-    val base = Paths.get(root)
-    if (!Files.exists(base)) return Nil
-    val out = scala.collection.mutable.ArrayBuffer[IngestionFile]()
-    val stream = Files.walk(base) // must be closed: holds DirectoryStreams
-    try stream.forEach { p =>
-      if (p.toString.endsWith(ext) && Files.isRegularFile(p))
-        parseFilePath(p.toString, mailbox, ext).foreach(out += _)
-    } finally stream.close()
-    out.toSeq.sortBy(f => (f.environment, f.entity, f.path))
-  }
-
-  /** Object-store discovery via the Hadoop FileSystem API — the
-    * production path (S5/S6): the SAME code lists `file://` in tests and
-    * `s3a://bucket/...` on a cluster (one recursive LIST from the
-    * driver; executors never list). Replaces the reference's
-    * PowerShell-mirror + boto walk (S7 is eliminated — Spark reads the
-    * store directly). */
-  def discoverHadoop(root: String, mailbox: Boolean,
-      hadoopConf: org.apache.hadoop.conf.Configuration,
-      ext: String = ".parquet"): Seq[IngestionFile] = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
+    import org.apache.hadoop.fs.Path
     val p = new Path(root)
-    val fs = FileSystem.get(p.toUri, hadoopConf)
+    val fs = p.getFileSystem(
+      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
     if (!fs.exists(p)) return Nil
+    val qualified = fs.makeQualified(p).toString.stripSuffix("/")
+    val base = root.stripSuffix("/")
     val out = scala.collection.mutable.ArrayBuffer[IngestionFile]()
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val path = f.getPath.toUri.getPath
-      if (path.endsWith(ext))
-        parseFilePath(path, mailbox, ext).foreach(out += _)
+    // listStatus per directory, not listFiles: listFiles turns every file
+    // into a LocatedFileStatus, and on the local filesystem without
+    // Hadoop's native library each one forks a shell to read the file's
+    // permissions
+    def walk(dir: Path): Unit = fs.listStatus(dir).foreach { st =>
+      val listed = st.getPath.toString
+      if (st.isDirectory) walk(st.getPath)
+      else if (listed.endsWith(ext) && listed.startsWith(qualified + "/"))
+        parseFilePath(base + listed.substring(qualified.length), mailbox, ext)
+          .foreach(out += _)
     }
+    walk(p)
     out.toSeq.sortBy(f => (f.environment, f.entity, f.path))
   }
 

@@ -53,14 +53,13 @@ object SqlServerDialect {
        |  VALUES (src.ParquetSource, src.TargetTable, src.Environment,
        |          src.BackupDate, src.InsertedDate);""".stripMargin
 
-  /** Spark JDBC writer options for the bulk append into SQL Server —
-    * the DataFrameWriter twin of the reference's `fast_executemany`
-    * pyodbc batching (`ParquetFileInsertion.py:60-65`). `batchsize`
-    * controls rows per executeBatch round-trip; READ_COMMITTED keeps
-    * the write from taking range locks a concurrent freshness check
-    * would block on. */
-  def writerOptions(batchSize: Int): Map[String, String] = Map(
+  /** The dialect's own Spark JDBC writer options for the bulk append
+    * into SQL Server; the sink adds its `batchsize`, the twin of the
+    * reference's `fast_executemany` pyodbc batching
+    * (`ParquetFileInsertion.py:60-65`). READ_COMMITTED keeps the write
+    * from taking range locks a concurrent freshness check would block
+    * on. */
+  val writerOptions: Map[String, String] = Map(
     "driver" -> "com.microsoft.sqlserver.jdbc.SQLServerDriver",
-    "batchsize" -> batchSize.toString,
     "isolationLevel" -> "READ_COMMITTED")
 }

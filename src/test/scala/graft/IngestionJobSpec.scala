@@ -371,30 +371,37 @@ class IngestionJobSpec extends AnyFunSuite {
       mailbox = false).isEmpty)
   }
 
-  test("Hadoop FileSystem discovery matches the local walk") {
+  test("discovery of a file:// root keeps the plain root's files, under file://") {
     val root = Files.createTempDirectory("graft-hfs").toString
     buildTree(root)
-    val local = Discovery.discover(root, mailbox = false)
-    val hadoop = Discovery.discoverHadoop(root, mailbox = false,
-      spark.sparkContext.hadoopConfiguration)
-    assert(local.nonEmpty && hadoop == local)
+    val plain = Discovery.discover(root, mailbox = false)
+    val uri = Discovery.discover(s"file://$root", mailbox = false)
+    def keys(fs: Seq[Discovery.IngestionFile]) =
+      fs.map(f => (f.environment, f.entity, f.date))
+    // the four `environment=` dirs whose paths parse; badshape is dropped
+    assert(plain.nonEmpty && keys(uri) == keys(plain))
+    assert(plain.forall(_.path.startsWith(s"$root/environment=")), plain)
+    assert(uri.map(_.path) == plain.map("file://" + _.path), uri)
   }
 
-  test("a URI data root is rejected by the local walk, not read as empty") {
+  test("IngestionJob.run ingests from a file:// data root") {
     val root = Files.createTempDirectory("graft-uri").toString
+    val out = Files.createTempDirectory("graft-uri-out").toString
     buildTree(root)
-    for (uri <- Seq(s"file://$root", "s3a://bucket/root")) {
-      val e = intercept[IllegalArgumentException](
-        Discovery.discover(uri, mailbox = false))
-      assert(e.getMessage.contains("discoverHadoop"), e.getMessage)
-    }
-    val cfg = IngestionConfig(environments = Seq("NL"),
+    val cfg = IngestionConfig(environments = Seq("NL", "BE"),
       ingestionDate = LocalDate.of(2019, 7, 3), dataFolder = s"file://$root",
       tables = Seq(tableCfg))
-    intercept[IllegalArgumentException](IngestionJob.run(spark, cfg,
-      new InMemoryMarkerLedger, new IngestionJob.ParquetSink(root + "-out")))
-    assert(Discovery.discoverHadoop(s"file://$root", mailbox = false,
-      spark.sparkContext.hadoopConfiguration).nonEmpty)
+    val ledger = new InMemoryMarkerLedger
+    val r = IngestionJob.run(spark, cfg, ledger,
+      new IngestionJob.ParquetSink(out))
+    assert(r.ingested.size == 2 && r.rowsWritten == 100, r)
+    assert(spark.read.parquet(s"$out/HOST_CIG_Lineitem").count() == 100)
+    // the markers carry the root's own form, so a re-run skips them
+    assert(ledger.all.size == 2 &&
+      ledger.all.forall(_.parquetSource.startsWith(s"file://$root/")))
+    val again = IngestionJob.run(spark, cfg, ledger,
+      new IngestionJob.ParquetSink(out))
+    assert(again.ingested.isEmpty && again.skippedByMarker == 2, again)
   }
 
   test("freshness: static and grace exemptions as anti-joins") {

@@ -56,6 +56,11 @@ class PlanPropsSpec extends AnyFunSuite {
       val ingestFinal = PlanDump.counts(plan(
         SparkEntry.queries("q01_full_ingest")(spark, dir)))
       assert(ingest == ingestFinal :+ 0)
+      // q86's three cuts (index build, kNN edges, mutual edges) are
+      // recorded, and the index build's plan carries its parquet scan
+      val knn = PlanDump.row(PlanDump.plans(spark)(
+        SparkEntry.queries("q86_knn_graph")(spark, dir)))
+      assert(knn.last == 3 && knn.head > 0, s"q86 $knn")
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       Bench.resetSharedState(spark)
