@@ -1,18 +1,22 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints two JSON lines of raw wall seconds:
   * line 1 with every query's min over `SPARK_GRAFT_REPS` timed reps,
-  * then a compact summary. An untimed warm pass per query absorbs
-  * JIT/codegen; [[resetSharedState]] runs after every rep. Seconds are
+  * then a compact summary. An untimed warm pass per query absorbs JIT,
+  * and codegen only for a query whose classes fit Spark's 100-entry
+  * compile cache; [[resetSharedState]] runs after every rep. Seconds are
   * host-specific: compare two runs only when both ran this harness on
   * the same host at the same core count.
   *
   * One-query timing is the same main: `SPARK_GRAFT_ONLY=<q,…>
   * SPARK_GRAFT_REPS=<n> [SPARK_GRAFT_WARM=0] runMain graft.Bench`;
-  * stderr carries one `[bench] <q> rep<i>: <s> s` line per rep. */
+  * stderr carries one `[bench] <q> rep<i>: <s> s, <n> compiles, <ms>
+  * ms compile` line per rep (Janino compiles in the JVM, tasks included). */
 object Bench {
 
   /** Drops everything a query could ride into the next run: the
@@ -89,6 +93,7 @@ object Bench {
     // SPARK_GRAFT_ONLY=q86_knn_graph,q70_pagerank → time just those
     // (single-query iteration; unset, every query runs)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
@@ -109,12 +114,16 @@ object Bench {
           resetSharedState(spark)
         }
         val secs = (1 to reps).map { i =>
+          val c0 = compiles.getCount
+          val cNs0 = CodeGenerator.compileTime
           val t0 = System.nanoTime()
           run("rep")
           // a failed rep keeps its time: dropping it would make a crash
           // read as a speedup of the total
           val sec = (System.nanoTime() - t0) / 1e9
-          System.err.println(f"[bench] $name rep$i: $sec%.3f s")
+          val cMs = (CodeGenerator.compileTime - cNs0) / 1e6
+          System.err.println(f"[bench] $name rep$i: $sec%.3f s, " +
+            f"${compiles.getCount - c0} compiles, $cMs%.0f ms compile")
           resetSharedState(spark)
           sec
         }

@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
   *
   * Optional third arg: comma-separated query names — dump (and list in
   * oracle_sql.json) only those, for fast single-query iteration with
-  * tools/compare.py. The driver passes two args and gets everything. */
+  * tools/compare.py. A query that throws is named on stderr, again in a
+  * last `[verify] failed (<n>): <names>` line, and the run exits 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -14,6 +15,7 @@ object Verify {
     def sel(name: String): Boolean = only.isEmpty || only(name)
     val spark = LocalSession.builder().getOrCreate()
     new java.io.File(outDir).mkdirs()
+    val failed = scala.collection.mutable.Buffer.empty[String]
     SparkEntry.queries.filter(e => sel(e._1)).foreach { case (name, fn) =>
       // a query that throws must leave no output: an earlier run's
       // parquet would otherwise be compared and pass
@@ -25,6 +27,7 @@ object Verify {
           .parquet(out.toString)
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       // operators may persist() shared intermediates and cut lineage
       // into RDD blocks — scope both per query
@@ -46,5 +49,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] failed (${failed.size}): ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -69,6 +69,17 @@ object CurationOps {
     }
   }
 
+  /** [[cutLineage]] that also returns `aggs` (non-null BIGINT
+    * aggregates of the cut frame), read by an `Observation` during the
+    * cut's own job: no second job, as IngestionJob counts its rows. */
+  def cutObserved(df: DataFrame, aggs: org.apache.spark.sql.Column*)
+      : (DataFrame, IndexedSeq[Long]) = {
+    val obs = new org.apache.spark.sql.Observation()
+    val named = aggs.zipWithIndex.map { case (a, i) => a.as(s"o$i") }
+    val cut = cutLineage(df.observe(obs, named.head, named.tail: _*))
+    (cut, aggs.indices.map(i => obs.get(s"o$i").asInstanceOf[Long]))
+  }
+
   // --- q56: PII scrubbing ----------------------------------------------
 
   /** Redaction patterns, applied IN ORDER (order is part of the

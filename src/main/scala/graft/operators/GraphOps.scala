@@ -265,43 +265,30 @@ object GraphOps {
     * before treating co-activity as community evidence.
     *
     * Parity: label counts are exact integers and the per-node argmax
-    * is a rank window ordered (count DESC, label ASC); modularity's
-    * per-community term freezes to ×1e9 BIGINT before the cross-
-    * community sum; m, m_c, d_c are exact integers.
+    * is one exact `max(struct(cnt, -nlbl))` aggregate — the largest
+    * count, ties to the smallest label, the oracle's rank window order;
+    * modularity's per-community term freezes to ×1e9 BIGINT before the
+    * cross-community sum; m, m_c, d_c are exact integers, and m is half
+    * the degree sum observed on the degree cut.
     *
-    * Scale (100 TB): per iteration ONE join of the (cached,
-    * pre-partitioned) directed edge table against the |V|-row label
-    * table plus a (node, label) count collapse — the q70 iterate-by-
-    * join discipline with the same cache-truncation; the modularity
-    * tail is two |E|/|V|-bounded joins against final labels. */
+    * Scale (100 TB): per iteration ONE hash join of the directed edge
+    * table — cached once, partitioned on `dst`, never re-shuffled —
+    * against the |V|-row label cut plus a (node, label) count collapse
+    * and the argmax aggregate; the q70 iterate-by-join discipline with
+    * a lineage cut per round. The modularity tail is two |E|/|V|-bounded
+    * joins against the final labels. */
   def lpaCommunities(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val und = cooccurEdges(s, dir).persist()
-    val edges = und.select(col("ua").as("src"), col("ub").as("dst"))
-      .unionAll(und.select(col("ub").as("src"), col("ua").as("dst")))
-      .persist()
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")).persist()
-    val wTop = Window.partitionBy("node")
-      .orderBy(col("cnt").desc, col("nlbl"))
-    for (_ <- 1 to LpaIters) {
-      val next = edges
-        .join(labels.select(col("node").as("dst"), col("lbl").as("nlbl")),
-          "dst")
-        .groupBy(col("src").as("node"), col("nlbl"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("rk", row_number().over(wTop))
-        .filter(col("rk") === 1)
-        .select(col("node"), col("nlbl").as("lbl"))
-        .persist()
-      next.count()
-      labels.unpersist()
-      labels = next
-    }
-    val m = und.count() // |undirected edges| — a scalar
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val comm = labels
-      .join(deg.select(col("src").as("node"), col("deg")), "node")
+    val edges = lpaEdges(und)
+    val (deg, Seq(degSum)) = CurationOps.cutObserved(
+      edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
+      sum(col("deg")))
+    val m = degSum / 2 // |undirected edges| — a scalar
+    var labels = deg.select(col("node"), col("node").as("lbl"))
+    for (_ <- 1 to LpaIters)
+      labels = CurationOps.cutLineage(lpaRound(edges, labels))
+    val comm = labels.join(deg, "node")
       .groupBy("lbl").agg(count(lit(1)).as("size"),
         sum(col("deg")).as("d_c"))
     val intra = und
@@ -332,6 +319,26 @@ object GraphOps {
         col("intra_edges"), col("n_communities_total"), col("modularity"))
       .orderBy("size_band")
   }
+
+  /** q319's directed edges, cached, partitioned on the join key `dst`. */
+  private[graft] def lpaEdges(und: DataFrame): DataFrame =
+    und.select(col("ua").as("src"), col("ub").as("dst"))
+      .unionAll(und.select(col("ub").as("src"), col("ua").as("dst")))
+      .repartition(und.sparkSession.sessionState.conf.numShufflePartitions,
+        col("dst"))
+      .persist()
+
+  /** One synchronous LPA round, exposed for the plan pin. */
+  private[graft] def lpaRound(edges: DataFrame, labels: DataFrame)
+      : DataFrame =
+    edges
+      .join(labels.select(col("node").as("dst"), col("lbl").as("nlbl"))
+        .hint("shuffle_hash"), "dst")
+      .groupBy(col("src").as("node"), col("nlbl"))
+      .agg(count(lit(1)).as("cnt"))
+      .groupBy("node")
+      .agg(max(struct(col("cnt"), (-col("nlbl")).as("neg"))).as("top"))
+      .select(col("node"), (-col("top.neg")).as("lbl"))
 
   def lpaCommunitiesOracle: String = {
     val iters = (1 to LpaIters).map { i =>
@@ -959,7 +966,7 @@ object GraphOps {
     * are unchanged: each still states the full build. */
   private final class SessionArtifacts(s: SparkSession, dir: String) {
     lazy val cooc: DataFrame = CurationOps.cutLineage(cooccurEdgesBuild(s, dir))
-    lazy val hb: (Long, IndexedSeq[DataFrame]) = hbRoundsBuild(s, dir)
+    lazy val hb: HbRounds = hbRoundsBuild(s, dir)
   }
 
   /** Memo contract: keyed by (session, fixture dir, lineage-cut mode).
@@ -1809,16 +1816,16 @@ object GraphOps {
     * the (level, node) key: `rounds` shuffles instead of
     * levels×rounds. The degree rank is [[ScaleOps.withGlobalRank]]
     * (range-partition + per-partition offsets), never a single-task
-    * global window. */
+    * global window. |V| and the per-level kept-edge counts are
+    * observed on the rank and edge-level cuts, not counted by jobs. */
   def attackRobustness(s: SparkSession, dir: String): DataFrame = {
     val und = cooccurEdges(s, dir) // already a shared checkpoint artifact
     val deg = und.select(col("ua").as("u"))
       .unionAll(und.select(col("ub").as("u")))
       .groupBy("u").agg(count(lit(1)).as("deg"))
-    val ranked = CurationOps.cutLineage(
-      ScaleOps.withGlobalRank(deg, "rk", col("deg").desc, col("u")))
-      .persist()
-    val nv = ranked.count()
+    val (ranked, Seq(nv)) = CurationOps.cutObserved(
+      ScaleOps.withGlobalRank(deg, "rk", col("deg").desc, col("u")),
+      count(lit(1)))
     val nRemoves = AttackFracs.map(f => math.ceil(f * nv.toDouble).toLong)
     // removal sets are NESTED (fracs ascend), so a node's survival
     // across all levels is ONE integer: the last level whose removed-set
@@ -1829,9 +1836,7 @@ object GraphOps {
     val nodeMax = ranked.select(col("u"), ml.as("max_lvl"))
     val levels = AttackFracs.zipWithIndex.map { case (f, i) =>
       (i, f, nv - nRemoves(i)) }
-    val out = survivalCurve(und, nodeMax, levels)
-    ranked.unpersist()
-    out
+    survivalCurve(und, nodeMax, levels)
   }
 
   /** Level-batched percolation curve shared by q375's targeted attack
@@ -1845,8 +1850,8 @@ object GraphOps {
     * chain instead of |levels| chains (the r12 form ran
     * |levels|×rounds ≈ 32 tiny eager jobs; this runs `rounds`).
     *
-    * `levels` = (level id, removal fraction, kept-node count — the one
-    * metadata scalar per level the driver holds). */
+    * `levels` = (level id, removal fraction, kept-node count); the
+    * kept-edge count joins them as a fourth long per level. */
   private def survivalCurve(und: DataFrame, nodeMaxLvl: DataFrame,
       levels: Seq[(Int, Double, Long)]): DataFrame = {
     val e = und
@@ -1855,9 +1860,10 @@ object GraphOps {
       .join(nodeMaxLvl.select(col("u").as("ub"), col("max_lvl").as("lb")),
         Seq("ub"))
       .select(col("ua"), col("ub"), least(col("la"), col("lb")).as("mx"))
-    val eLvl = CurationOps.cutLineage(
+    val (eLvl, nEdges) = CurationOps.cutObserved(
       e.select(explode(sequence(lit(0), col("mx"))).as("level"),
-        col("ua"), col("ub")))
+        col("ua"), col("ub")),
+      levels.map(l => count(when(col("level") === l._1, true))): _*)
     val ed = eLvl.select(col("level"), col("ua").as("src"),
         col("ub").as("dst"))
       .unionAll(eLvl.select(col("level"), col("ub").as("src"),
@@ -1888,12 +1894,11 @@ object GraphOps {
     val compAgg = lbl.groupBy("level", "lbl").agg(count(lit(1)).as("sz"))
       .groupBy("level").agg(count(lit(1)).as("n_comp"),
         max("sz").as("giant"), sum("sz").as("n_conn"))
-    val eAgg = eLvl.groupBy("level").agg(count(lit(1)).as("n_edges"))
     // |levels| literal rows — a LocalRelation, broadcast by stats
-    val grid = und.sparkSession.createDataFrame(levels)
-      .toDF("level", "frac_removed", "n_kept_nodes")
+    val grid = und.sparkSession.createDataFrame(levels.zip(nEdges).map {
+        case ((i, f, k), n) => (i, f, k, n) })
+      .toDF("level", "frac_removed", "n_kept_nodes", "n_edges")
     grid.join(compAgg, Seq("level"), "left")
-      .join(eAgg, Seq("level"), "left")
       .join(unstable, Seq("level"), "left")
       .selectExpr(
         "CAST(frac_removed AS DOUBLE) AS frac_removed",
@@ -2099,106 +2104,100 @@ object GraphOps {
     * the per-node estimate freezes to floor(est·10³) BIGINT before the
     * order-free global sum.
     *
-    * Scale (100 TB): rides the shared co-activity artifact; per round
-    * ONE edge⋈register join (sharded on the node key) and ONE
-    * map-combinable (node, bkt) max-aggregate — register state is
-    * |V|·m rows, never materializing pairs; per-round lineage cuts
-    * (the q338 discipline). The exact-BFS audit lives in the spec
-    * only; production pays sketch cost. */
-  /** The HyperBall register generations regs_0..regs_R (per-node
-    * m-register ARRAYS, one hop of max-merge growth per round) —
-    * memoized per session ([[SessionArtifacts]]) like [[cooccurEdges]],
-    * so q380's curve and q382's harmonic centrality read the SAME
-    * checkpointed sketch stream and the rounds run once per session. Array state + native hll_merge_agg is the
-    * measured 9× plan over the relational (node, bkt, r) join form
-    * (which fans the edge⋈register join out to |E|·m rows per round);
-    * the oracles keep the relational GROUP BY (node, bkt) → max(r)
-    * rebuild — same merge law, identical registers (q224 discipline). */
-  private[graft] def hbRounds(s: SparkSession, dir: String)
-      : (Long, IndexedSeq[DataFrame]) = artifacts(s, dir).hb
+    * Scale (100 TB): rides [[hbRounds]]: per round ONE edge⋈register
+    * join (edges cached on the join key) and ONE node-keyed merge —
+    * state is |V| register vectors plus R+1 longs per node, never
+    * pairs; per-round lineage cuts (the q338 discipline) whose observed
+    * longs are the report, a LocalRelation. The exact-BFS audit lives
+    * in the spec only; production pays sketch cost. */
+  /** The HyperBall rounds — memoized per session ([[SessionArtifacts]])
+    * like [[cooccurEdges]], so q380's curve and q382's harmonic
+    * centrality read the SAME checkpointed sketch stream and the rounds
+    * run once per session. Every generation has one fixed shape, so
+    * every round plan compiles to the same classes: per node the
+    * m-register vector `regs`, `bs: array<bigint>` — the frozen ball
+    * estimate floor(est·10³) of every generation so far — and `chg`,
+    * whether the round changed the registers (they only grow, so
+    * changed ⟺ the vector differs). `obs` holds each generation's
+    * observed (nodes, changed nodes, Σ ball estimate). Array state +
+    * native hb_merge_agg is the measured 9× plan over the relational
+    * (node, bkt, r) join form (which fans the edge⋈register join out to
+    * |E|·m rows per round); the oracles keep the relational GROUP BY
+    * (node, bkt) → max(r) rebuild — same merge law, identical registers
+    * (q224 discipline). */
+  private[graft] final case class HbRounds(fin: DataFrame,
+      obs: IndexedSeq[IndexedSeq[Long]])
 
-  private def hbRoundsBuild(s: SparkSession, dir: String)
-      : (Long, IndexedSeq[DataFrame]) = {
+  private[graft] def hbRounds(s: SparkSession, dir: String): HbRounds =
+    artifacts(s, dir).hb
+
+  private def hbRoundsBuild(s: SparkSession, dir: String): HbRounds = {
     graft.functions.VectorFunctions.register(s)
     val m = ProfileOps.HllM
     val und = cooccurEdges(s, dir)
     val ed = und.select(col("ua").as("src"), col("ub").as("dst"))
       .unionAll(und.select(col("ub").as("src"), col("ua").as("dst")))
+      .repartition(s.sessionState.conf.numShufflePartitions, col("dst"))
       .persist()
+    // hb_sketch reads (sp, vz) off the packed vector in one native loop;
+    // the estimate itself is the SAME shared SQL text as the oracle
+    val bfp = "CAST(floor((" +
+      ProfileOps.hllEstSql("sk.sp", "sk.vz", spark = true) +
+      ") * 1000.0) AS BIGINT)"
+    def cutGen(g: DataFrame): (DataFrame, IndexedSeq[Long]) =
+      CurationOps.cutObserved(
+        g.withColumn("sk", call_function("hb_sketch", col("regs")))
+          .selectExpr("node", "regs", s"concat(bs, array($bfp)) AS bs", "chg"),
+        count(lit(1)), count(when(col("chg"), true)),
+        sum(element_at(col("bs"), -1)))
     // byte-packed registers (hb_agg / hb_merge_agg — BINARY(m), ranks
     // ≤ 53 fit one byte): the per-round edge join + max-merge moves
     // |2E| whole register vectors, and the array<long> form shipped
     // 8× the bytes for the same registers. Values and the merge law
     // are identical (spec-asserted against the hll_* forms); the
     // relational oracle rebuild is unchanged.
-    var regs = CurationOps.cutLineage(
+    val gen0 = cutGen(
       ed.select(col("src").as("node")).distinct()
         .withColumn("h", call_function("md5_fp60",
           concat(lit("hb:"), col("node").cast("string"))))
         .withColumn("bkt", col("h") % m)
         .withColumn("rnk", expr(ProfileOps.hllRankSql("h")).cast("long"))
         .groupBy("node")
-        .agg(expr(s"hb_agg(array(bkt, rnk), $m)").as("regs")))
-    val nNodes = regs.count()
-    val gens = scala.collection.mutable.Buffer[DataFrame](regs)
-    for (_ <- 1 to HyperBallRounds) {
-      val nb = ed.join(regs.select(col("node").as("dst"), col("regs")),
+        .agg(expr(s"hb_agg(array(bkt, rnk), $m)").as("regs"))
+        .select(col("node"), col("regs"),
+          array().cast("array<bigint>").as("bs"), lit(true).as("chg")))
+    val gens = (1 to HyperBallRounds).scanLeft(gen0) { case ((gen, _), _) =>
+      val nb = ed.join(gen.select(col("node").as("dst"), col("regs")),
           Seq("dst"))
-        .select(col("src").as("node"), col("regs"))
-      regs = CurationOps.cutLineage(
-        regs.unionAll(nb).groupBy("node")
-          .agg(expr(s"hb_merge_agg(regs, $m)").as("regs")))
-      gens += regs
+        .select(col("src").as("node"), col("regs"),
+          lit(null).cast("array<bigint>").as("bs"),
+          lit(null).cast("binary").as("rp"))
+      // a node's own row alone carries `bs` and its previous registers
+      // `rp`, so max() passes each through
+      cutGen(gen.select(col("node"), col("regs"), col("bs"),
+          col("regs").as("rp"))
+        .unionAll(nb).groupBy("node")
+        .agg(expr(s"hb_merge_agg(regs, $m)").as("regs"),
+          max(col("bs")).as("bs"), max(col("rp")).as("rp"))
+        .select(col("node"), col("regs"), col("bs"),
+          (col("regs") =!= col("rp")).as("chg")))
     }
     // every generation is checkpointed — the edge cache is done
     ed.unpersist()
-    (nNodes, gens.toIndexedSeq)
+    HbRounds(gens.last._1, gens.map(_._2))
   }
 
-  /** Per-node ball-size estimate from a register-array generation,
-    * frozen to floor(est·10³) BIGINT (column `bfp`). */
-  private def hbBallFp(rs: DataFrame): DataFrame =
-    // hb_sketch reads (sp, vz) off the packed vector in one native loop
-    // (the filter()/aggregate() HOF pair ran 512 interpreted lambda
-    // dispatches per node per generation); the estimate itself stays in
-    // the SAME shared SQL text as the oracle (hllEstSql)
-    rs.select(col("node"),
-        call_function("hb_sketch", col("regs")).as("sk"))
-      .selectExpr("node", "sk.sp AS sp", "sk.vz AS vz")
-      .selectExpr("node", "CAST(floor((" +
-        ProfileOps.hllEstSql("sp", "vz", spark = true) +
-        ") * 1000.0) AS BIGINT) AS bfp")
-
   def hyperball(s: SparkSession, dir: String): DataFrame = {
-    val (nNodes, gens) = hbRounds(s, dir)
-    def nhatFp(rs: DataFrame): DataFrame =
-      hbBallFp(rs).agg(sum(col("bfp")).as("nhat_fp"))
-    val rows = scala.collection.mutable.Buffer.empty[DataFrame]
-    rows += nhatFp(gens(0)).selectExpr("CAST(0 AS BIGINT) AS round",
-      s"CAST($nNodes AS BIGINT) AS n_nodes",
-      s"CAST($nNodes AS BIGINT) AS changed_nodes", "nhat_fp")
-    for (t <- 1 to HyperBallRounds) {
-      // registers only grow (max-merge of a superset), so changed ⟺
-      // the array differs — an exact integer count
-      val changed = gens(t).join(gens(t - 1).select(col("node"),
-          col("regs").as("rp")), Seq("node"))
-        .filter(col("regs") =!= col("rp"))
-        .agg(count(lit(1)).as("chg"))
-      rows += nhatFp(gens(t)).crossJoin(broadcast(changed))
-        .selectExpr(s"CAST($t AS BIGINT) AS round",
-          s"CAST($nNodes AS BIGINT) AS n_nodes",
-          "chg AS changed_nodes", "nhat_fp")
-    }
-    val curve = rows.reduce(_ unionAll _)
-    val fin = curve.filter(col("round") === HyperBallRounds.toLong)
-      .select(col("nhat_fp").as("final_fp")).limit(1)
-    curve.crossJoin(broadcast(fin))
+    val obs = hbRounds(s, dir).obs
+    // R+1 local rows in round order: the plan folds to a LocalRelation
+    s.createDataFrame(obs.zipWithIndex.map { case (o, t) =>
+        (t.toLong, o(0), o(1), o(2), obs.last(2)) })
+      .toDF("round", "n_nodes", "changed_nodes", "nhat_fp", "final_fp")
       .selectExpr("round", "n_nodes", "changed_nodes",
         "round(CAST(nhat_fp AS DOUBLE) / 1000.0, 3) AS nhat_pairs",
         "round(CAST(nhat_fp AS DOUBLE) / CAST(final_fp AS DOUBLE), 6)" +
           " AS reach_frac",
         "changed_nodes = 0 AS converged")
-      .orderBy("round")
   }
 
   def hyperballOracle: String = {
@@ -2286,19 +2285,16 @@ object GraphOps {
     * artifact, identical on both engines.
     *
     * Scale (100 TB): rides [[hbRounds]] (shared artifact + register
-    * stream); the per-node frame is |V| rows joined across R
-    * generations on the node key; top-k is orderBy+limit (TakeOrdered
+    * stream); the final generation's `bs` array already holds every
+    * round's ball size b0..bR per node, so the per-node frame is one
+    * scan of |V| rows with no join; top-k is orderBy+limit (TakeOrdered
     * — never a single-task global window). */
   def harmonicCentrality(s: SparkSession, dir: String): DataFrame = {
-    val (_, gens) = hbRounds(s, dir)
-    val per = (0 to HyperBallRounds).map(t =>
-      hbBallFp(gens(t)).withColumnRenamed("bfp", s"b$t"))
-    val joined = per.reduce((a, b) => a.join(b, "node"))
     val hChain = (1 to HyperBallRounds).map(t =>
-      s"(CAST(b$t - b${t - 1} AS DOUBLE) / 1000.0) / $t.0")
+      s"(CAST(bs[$t] - bs[${t - 1}] AS DOUBLE) / 1000.0) / $t.0")
       .mkString(" + ")
-    joined.selectExpr("node", s"($hChain) AS hraw",
-        s"b$HyperBallRounds")
+    hbRounds(s, dir).fin.selectExpr("node", s"($hChain) AS hraw",
+        s"bs[$HyperBallRounds] AS b$HyperBallRounds")
       .orderBy(col("hraw").desc, col("node"))
       .limit(HarmonicTopK)
       .withColumn("rnk", row_number().over(
@@ -2391,28 +2387,22 @@ object GraphOps {
   def randomFailure(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)
     val und = cooccurEdges(s, dir)
-    val nodes = CurationOps.cutLineage(
+    val thrs = FailFracs.map(f => math.round(f * 1000).toInt)
+    // the kept-node count at every threshold, observed on the node cut
+    val (nodes, kept) = CurationOps.cutObserved(
       und.select(col("ua").as("u"))
         .unionAll(und.select(col("ub").as("u"))).distinct()
         .withColumn("coin", call_function("md5_fp60",
-          concat(lit("rf:"), col("u").cast("string"))) % 1000))
-      .persist()
-    val thrs = FailFracs.map(f => math.round(f * 1000).toInt)
-    // ONE metadata row: the kept-node count at every threshold
-    val keptExprs = thrs.map(t =>
-      sum(when(col("coin") >= t, 1L).otherwise(0L)))
-    val keptRow = nodes.agg(keptExprs.head, keptExprs.tail: _*).head()
+          concat(lit("rf:"), col("u").cast("string"))) % 1000),
+      thrs.map(t => count(when(col("coin") >= t, true))): _*)
     // coin thresholds ascend, so the removal sets are NESTED — same
     // one-integer survival encoding as q375's rank
     var ml: Column = lit(0)
     for (i <- 1 until FailFracs.size)
       ml = when(col("coin") >= thrs(i), lit(i)).otherwise(ml)
     val nodeMax = nodes.select(col("u"), ml.as("max_lvl"))
-    val levels = FailFracs.zipWithIndex.map { case (f, i) =>
-      (i, f, keptRow.getLong(i)) }
-    val out = survivalCurve(und, nodeMax, levels)
-    nodes.unpersist()
-    out
+    val levels = FailFracs.zipWithIndex.map { case (f, i) => (i, f, kept(i)) }
+    survivalCurve(und, nodeMax, levels)
   }
 
   def randomFailureOracle: String = {
@@ -2865,7 +2855,9 @@ object GraphOps {
     * graph (one doc per tight cluster neighborhood), seed distributed
     * graph coloring, thin a crawl frontier.
     * Per round: selected count, running MIS size, removed, alive,
-    * convergence flag.
+    * convergence flag — each round's counts are observed on the cuts
+    * of its winner and alive sets, so the report is a LocalRelation of
+    * local longs.
     *
     * Parity: priorities are 60-bit md5 integers built from identical
     * strings; counts are exact; the oracle unrolls the
@@ -2886,33 +2878,32 @@ object GraphOps {
       .unionAll(und.select(col("ub").as("u"), col("ua").as("v")))
       .repartition(np, col("v"))
       .persist()
-    var alive = CurationOps.cutLineage(ed.select("u").distinct())
-    var prevAlive = alive.agg(count(lit(1)).as("n_prev"))
-    var misSoFar = s.range(1).select(lit(0L).as("mis"))
-    val rows = scala.collection.mutable.Buffer.empty[DataFrame]
-    (1 to LubyRounds).foreach { r =>
-      val sel = CurationOps.cutLineage(misWinners(ed, alive, r))
+    var (alive, Seq(nPrev)) =
+      CurationOps.cutObserved(ed.select("u").distinct(), count(lit(1)))
+    var mis = 0L
+    val rows = (1 to LubyRounds).map { r =>
+      val (sel, Seq(nSel)) =
+        CurationOps.cutObserved(misWinners(ed, alive, r), count(lit(1)))
       val nbrSel = ed
         .join(sel.withColumnRenamed("u", "v").hint("shuffle_hash"),
           Seq("v"))
         .select("u").distinct()
-      val next = CurationOps.cutLineage(alive
+      val (next, Seq(nAlive)) = CurationOps.cutObserved(alive
         .join(sel, Seq("u"), "left_anti")
-        .join(nbrSel, Seq("u"), "left_anti"))
-      val selCnt = sel.agg(count(lit(1)).as("n_selected"))
-      val aliveCnt = next.agg(count(lit(1)).as("n_alive"))
-      rows += selCnt.crossJoin(misSoFar).crossJoin(prevAlive)
-        .crossJoin(aliveCnt)
-        .selectExpr(s"CAST($r AS BIGINT) AS round", "n_selected",
-          "mis + n_selected AS mis_size", "n_prev - n_alive AS n_removed",
-          "n_alive", "n_alive = 0 AS converged")
-      misSoFar = misSoFar.crossJoin(selCnt)
-        .selectExpr("mis + n_selected AS mis")
-      prevAlive = aliveCnt.withColumnRenamed("n_alive", "n_prev")
+        .join(nbrSel, Seq("u"), "left_anti"), count(lit(1)))
+      val row = (r.toLong, nSel, mis, nPrev, nAlive)
+      mis += nSel
+      nPrev = nAlive
       alive = next
+      row
     }
     ed.unpersist()
-    rows.reduce(_ unionAll _).orderBy("round")
+    // local rows in round order: the plan folds to a LocalRelation
+    s.createDataFrame(rows).toDF("round", "n_selected", "mis", "n_prev",
+        "n_alive")
+      .selectExpr("round", "n_selected", "mis + n_selected AS mis_size",
+        "n_prev - n_alive AS n_removed", "n_alive",
+        "n_alive = 0 AS converged")
   }
 
   def lubyMisOracle: String = {

@@ -1813,6 +1813,36 @@ class PlanPropsSpec extends AnyFunSuite {
       s"edge/label generations not cached:\n${p.take(1800)}")
   }
 
+  test("q319 lpa round: struct-max argmax (no Window) over the dst-partitioned edge cache, never re-shuffled") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // a shuffle fed by the edge cache with no join in between
+    // re-partitions the |E| rows themselves
+    def rawCache(n: SparkPlan): Boolean = n match {
+      case _: InMemoryTableScanExec => true
+      case _: Exchange | _: BaseJoinExec => false
+      case o => o.children.exists(rawCache)
+    }
+    val edges = GraphOps.lpaEdges(GraphOps.cooccurEdges(spark, dir))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val labels = CurationOps.cutLineage(edges.select(col("src").as("node"))
+        .distinct().select(col("node"), col("node").as("lbl")))
+      val p = GraphOps.lpaRound(edges, labels).queryExecution.executedPlan
+      assert(!p.toString.contains("Window"), s"round ranks with a window:\n$p")
+      assert(p.find(_.isInstanceOf[InMemoryTableScanExec]).isDefined,
+        s"round does not read the edge cache:\n$p")
+      val reshuffles = p.collect { case x: ShuffleExchangeExec => x }
+        .filter(x => rawCache(x.child))
+      assert(reshuffles.isEmpty, s"edge cache re-shuffled per round:\n$p")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      edges.unpersist()
+    }
+  }
+
   test("q320 shingle width: corpus tokenized once; truth joins on the base key") {
     val p = plan(DedupOps.shingleWidthCurve(spark, dir))
     assert(!p.contains("CartesianProduct"),
@@ -2015,6 +2045,14 @@ class PlanPropsSpec extends AnyFunSuite {
     assert(p.contains("md5_fp60"),
       s"priorities not in-row md5 — joined from a table?:\n${p.take(1800)}")
     ed.unpersist()
+  }
+
+  test("q380/q390 reports are local rows: the returned plans hold no Exchange and no file scan") {
+    for (q <- Seq("q380_hyperball", "q390_luby_mis")) {
+      val p = plan(SparkEntry.queries(q)(spark, dir))
+      assert(!p.contains("Exchange") && !p.contains("Scan parquet"),
+        s"$q report re-reads the data:\n$p")
+    }
   }
 
   test("q391 pass@k: per-k blocks are 1-row aggregates over the lineage-cut problem frame; estimator arithmetic in-row") {

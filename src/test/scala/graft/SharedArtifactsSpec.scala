@@ -45,4 +45,23 @@ class SharedArtifactsSpec extends AnyFunSuite {
     assert(wrote > 0, s"no rdd checkpoints written under $ckDir")
     Bench.resetSharedState(spark)
   }
+
+  test("HyperBall rounds: memoized per session, rebuilt after resetSharedState") {
+    CurationOps.auditCuts(spark) {
+      def recorded = CurationOps.cutAudit.get.size
+      val first = GraphOps.hbRounds(spark, dir)
+      // the co-occurrence edges, generation 0 and one cut per round
+      val built = recorded
+      assert(built == GraphOps.HyperBallRounds + 2, s"first read ran $built cuts")
+      val second = GraphOps.hbRounds(spark, dir)
+      assert(recorded == built, "a second read in the same session ran a cut")
+      assert(second eq first)
+
+      Bench.resetSharedState(spark)
+      GraphOps.hbRounds(spark, dir)
+      assert(recorded == 2 * built,
+        "the read after resetSharedState did not build the rounds again")
+    }
+    Bench.resetSharedState(spark)
+  }
 }
