@@ -23,14 +23,14 @@ object Bench {
     * catalog cache, the shared graph artifacts (GraphOps' co-occurrence
     * edges and HyperBall rounds, whose lineage-cut checkpoints survive
     * `clearCache`), and every persistent RDD block (localCheckpoint
-    * storage included). Bench calls it after every rep, so a memo
-    * consumer's timed min includes its own artifact build; Verify and
-    * PlanDump call it after every query, so cut blocks do not pile up
-    * over a whole-suite walk. */
+    * storage included, freed without a warning per cut). Bench calls
+    * it after every rep, so a memo consumer's timed min includes its own
+    * artifact build; Verify and PlanDump call it after every query, so
+    * cut blocks do not pile up over a whole-suite walk. */
   def resetSharedState(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     graft.operators.GraphOps.evictShared(spark)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    org.apache.spark.RddBlocks.unpersistAll(spark.sparkContext)
   }
 
   /** One query's timed reps, in seconds, and whether its warm pass and

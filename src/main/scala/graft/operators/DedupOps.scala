@@ -808,7 +808,10 @@ object DedupOps {
     * there; prefixes are free), exploding |pairs|×3 slim rows into a
     * 3-group aggregate. */
   def permCountCurve(s: SparkSession, dir: String): DataFrame = {
-    val (sigs, cands, docSh, _) = spreadLshArtifacts(s, dir)
+    val (cutSigs, cands, cutDocSh, _) = spreadLshArtifacts(s, dir)
+    // each pair side reads both frames: persisted once for the query
+    val sigs = shared(cutSigs)
+    val docSh = shared(cutDocSh)
     def sigSide(side: String) = sigs.select(
       (col("doc_id").as(s"doc_$side") +:
         (0 until NumPerms).map(i => col(s"h$i").as(s"${side}_h$i"))): _*)

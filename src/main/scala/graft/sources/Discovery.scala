@@ -1,6 +1,8 @@
 package graft.sources
 
 import java.time.LocalDate
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{concat, lit, raise_error, substring_index, when}
 
 /** Partition-path discovery: the reference's file-tree walk + path parse
   * (`main.py:87-124`, `main_mailbox.py:90-122`) as a pure path model.
@@ -21,7 +23,8 @@ import java.time.LocalDate
   *
   * The walk lists the WHOLE root, driver-side; `IngestionJob.run`
   * filters by date afterwards. The resulting explicit file list feeds
-  * one `spark.read` per (table, environment), so executors never list.
+  * one `spark.read` per target table, so executors never list, and
+  * [[environmentColumn]] gives each row read its file's environment.
   */
 object Discovery {
 
@@ -65,6 +68,33 @@ object Discovery {
     }
     walk(p)
     out.toSeq.sortBy(f => (f.environment, f.entity, f.path))
+  }
+
+  /** Per row of a frame read over `files`, `value` of the environment
+    * [[parseFilePath]] parsed for that row's file. `filePath` is the
+    * reader's `_metadata.file_path`, a URI: its head directory (the sixth
+    * segment from the end) is matched, still URI-encoded, against the
+    * heads of `files` as Hadoop's `Path.toUri` encodes them. A row of any
+    * other file raises an error instead of getting a value; when every
+    * file has the same value, it is a literal. */
+  def environmentColumn(filePath: Column, files: Seq[IngestionFile],
+      value: String => String): Column = {
+    val byValue = files.groupBy(f => value(f.environment)).toSeq.sortBy(_._1)
+    if (byValue.size == 1) lit(byValue.head._1)
+    else {
+      val head = substring_index(substring_index(filePath, "/", -6), "/", 1)
+      byValue.foldRight(raise_error(concat(lit("not a discovered file: "), filePath))) {
+        case ((v, fs), otherwise) =>
+          when(head.isin(fs.map(f => encodedHead(f.path)).distinct: _*), lit(v))
+            .otherwise(otherwise)
+      }
+    }
+  }
+
+  private def encodedHead(path: String): String = {
+    val seg = new org.apache.hadoop.fs.Path(path).toUri.getRawPath
+      .split('/').filter(_.nonEmpty)
+    seg(seg.length - 6)
   }
 
   /** Parse a …/<head>/<Entity>/<yyyy>/<MM>/<dd>/<file><ext> path. */

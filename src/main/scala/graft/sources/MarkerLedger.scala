@@ -20,9 +20,9 @@ final case class MarkerEntry(
     backupDate: LocalDate, insertedDate: LocalDateTime)
 
 /** `IngestionJob.run` calls a ledger only from the thread that called
-  * `run`: `all` once, then each group's `touch`es after that group's sink
-  * write returned, one group at a time, in sorted (entity, environment)
-  * order. */
+  * `run`: `all` once, then, one target table at a time in sorted entity
+  * order, one `touch` per file of the table (each with the file's own
+  * environment) after that table's sink write returned. */
 trait MarkerLedger {
   /** Keyed existence: is (source, env, table) complete?
     * (`CustomMarkerTable.py:47-59`: SELECT … LIMIT 1) */

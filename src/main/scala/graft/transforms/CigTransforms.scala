@@ -9,11 +9,16 @@ import graft.config.{ColumnMeta, TableConfig, TypeClass}
   * as pure column expressions.
   *
   * Design notes (scale-first):
-  *  - Every transform is a narrow, per-cell `Column` expression — the whole
-  *    T0..T8 chain compiles to ONE `select` with one expression per output
-  *    column, so a 427-column table stays a single projection node inside
-  *    whole-stage codegen: no shuffle, no per-transform plan nodes, no
-  *    analyzer blow-up from hundreds of chained `withColumn`s.
+  *  - Every transform is a narrow, per-cell `Column` expression, and the
+  *    T0..T8 chain is one `select` per step, each reading its input column
+  *    by reference: a column's expression grows with the number of steps,
+  *    not with their product. Nested in one expression, each step repeats
+  *    its input 2–6 times (a nullable int column's cleanup + P11: 1295
+  *    expression nodes nested, 74 as steps). `CollapseProject` does not
+  *    merge a step into the next one that references it more than once,
+  *    so the plan stays a short chain of projections inside whole-stage
+  *    codegen: no shuffle, and no analyzer blow-up from hundreds of
+  *    chained `withColumn`s.
   *  - `pipeline(...)` is the one cleanup path; tests assert each step on
   *    its per-cell expression. The two `DataFrame`-level steps left (audit
   *    columns, the sink-boundary P11) are single selects over those
@@ -117,10 +122,16 @@ object CigTransforms {
 
   /** T7: odd columns (`CigEolHostingIngestionLogic.py:120-127`):
     * `Geolocation` → constant POINT, `Logo`/`Picture` → sentinel. */
-  def oddColumnExpr(name: String, c: Column): Column = name match {
-    case "Geolocation"      => lit("POINT (0 0)")
-    case "Logo" | "Picture" => lit(NullSentinel)
-    case _                  => c
+  def oddColumnExpr(name: String, c: Column): Column =
+    oddColumnValue(name).getOrElse(c)
+
+  /** T7's constant for an odd column. The reference applies T7 after T1
+    * has added every missing target column, so a configured odd column
+    * gets its constant whether or not the source file carries it. */
+  private def oddColumnValue(name: String): Option[Column] = name match {
+    case "Geolocation"      => Some(lit("POINT (0 0)"))
+    case "Logo" | "Picture" => Some(lit(NullSentinel))
+    case _                  => None
   }
 
   // ---------------------------------------------------------------------
@@ -141,67 +152,79 @@ object CigTransforms {
     df.select(df.columns.map(c => sentinelToNullExpr(col(c)).as(c)).toIndexedSeq: _*)
 
   // ---------------------------------------------------------------------
-  // The fused pipeline
+  // The pipeline
   // ---------------------------------------------------------------------
 
-  /** Full T0→T8 chain for one table as a single projection.
-    *
-    * For each configured column, builds one expression applying — in the
-    * reference's order (`CigEolHostingIngestionLogic.py:32-40`) — audit
-    * injection, string coercion, null/bool normalization (T0d/T0e),
-    * missing-column defaulting (T1), nullable-int and sci-notation fixes
-    * (T2/T3), non-nullable defaulting (T4), datetime/NVARCHAR truncation
-    * (T5/T6), odd-column overrides (T7), and the ordered projection (P1/T8:
-    * exactly `config.columnNames`, in that order, extras dropped —
-    * `ParquetFileInsertion.py:50`; order is load-bearing, `:30-31`).
-    * The sink-boundary sentinel→NULL (P11) is separate — call
-    * [[sentinelsToNull]] right before writing, as the reference does
-    * (`ParquetFileInsertion.py:60-75`).
-    */
+  /** Full T0→T8 chain for one table, with one environment for every row
+    * (T0a's value is `shortEnvironment(environment)`). */
   def pipeline(df: DataFrame, config: TableConfig, environment: String,
-      ingestionDate: java.time.LocalDate,
-      nvarcharLimit: Int = NvarcharMaxLimit): DataFrame = {
+      ingestionDate: java.time.LocalDate): DataFrame =
+    pipeline(df, config, lit(shortEnvironment(environment)), ingestionDate)
+
+  /** Full T0→T8 chain for one table; `environment` is T0a's value for
+    * each row, already shortened (a literal, or an expression over `df`
+    * such as one of its file's environment).
+    *
+    * Each configured column starts from its string-coerced source column
+    * (T0 audit columns from their values, T1/T4 missing columns from
+    * their default, T7 odd columns from their constant) and then takes,
+    * in the reference's order (`CigEolHostingIngestionLogic.py:32-40`),
+    * the steps its type class and nullability call for: null/bool
+    * normalization (T0d/T0e), nullable-int and sci-notation fixes
+    * (T2/T3), datetime/NVARCHAR truncation (T5/T6) and non-nullable
+    * defaulting (T4). The result is exactly `config.columnNames`, in that
+    * order, extras dropped (P1/T8, `ParquetFileInsertion.py:50`; order is
+    * load-bearing, `:30-31`). The sink-boundary sentinel→NULL (P11) is
+    * separate — call [[sentinelsToNull]] right before writing, as the
+    * reference does (`ParquetFileInsertion.py:60-75`).
+    */
+  def pipeline(df: DataFrame, config: TableConfig, environment: Column,
+      ingestionDate: java.time.LocalDate): DataFrame = {
     val present = df.columns.toSet
-    val exprs = config.columns.map { meta =>
-      cellExpr(meta, present, environment, ingestionDate, nvarcharLimit)
-        .as(meta.name)
+    val chains = config.columns.map(m =>
+      m.name -> cellSteps(m, present, environment, ingestionDate))
+    val start = df.select(chains.map { case (n, (first, _)) => first.as(n) }: _*)
+    val depth = (0 +: chains.map(_._2._2.size)).max
+    (0 until depth).foldLeft(start) { (d, i) =>
+      d.select(chains.map { case (n, (_, steps)) =>
+        steps.lift(i).fold(col(n))(step => step(col(n))).as(n)
+      }: _*)
     }
-    df.select(exprs.toIndexedSeq: _*)
   }
 
-  /** The per-column expression used by [[pipeline]]. Public so tests can
-    * assert each composition in isolation. */
-  def cellExpr(meta: ColumnMeta, present: Set[String], environment: String,
-      ingestionDate: java.time.LocalDate,
-      nvarcharLimit: Int = NvarcharMaxLimit): Column = {
+  /** One column's first value and the steps that follow it, each a
+    * function of the previous step's output. */
+  private def cellSteps(meta: ColumnMeta, present: Set[String],
+      environment: Column, ingestionDate: java.time.LocalDate)
+      : (Column, Seq[Column => Column]) = {
     import java.time.format.DateTimeFormatter
     val name = meta.name
-    // T0a/T0b/T0c: audit columns are pure literals.
-    val audit: Option[Column] = name match {
-      case "Environment"  => Some(lit(shortEnvironment(environment)))
+    val fixed: Option[Column] = name match {
+      // T0a/T0b/T0c: audit columns
+      case "Environment"  => Some(environment)
       case "CIGCopyTime"  =>
         Some(lit(ingestionDate.format(DateTimeFormatter.ISO_LOCAL_DATE)))
       case "CIGProcessed" => Some(lit("0"))
-      case _              => None
+      case _              => oddColumnValue(name)
     }
-    audit.getOrElse {
-      if (!present(name)) {
+    fixed.map(c => (c, Nil)).getOrElse {
+      if (!present(name))
         // T1 (or T4 for non-nullable): missing column default.
-        if (meta.nullable) lit(NullSentinel) else lit("")
-      } else {
-        val base = normalizeBoolsExpr(normalizeNullsExpr(asString(col(name))))
-        val typed = meta.typeClass match {
+        (if (meta.nullable) lit(NullSentinel) else lit(""), Nil)
+      else {
+        val typed: Seq[Column => Column] = meta.typeClass match {
+          // T2 then T3 (reference order `:36-37`).
           case TypeClass.IntLike if meta.nullable =>
-            // T2 then T3 (reference order `:36-37`).
-            canonicalizeSciNotationExpr(stripTrailingDotZeroExpr(base))
-          case TypeClass.IntLike  => base
-          case TypeClass.DateTime => truncateDatetimeExpr(base)
-          case TypeClass.TextMax  => truncateNvarcharMaxExpr(base, nvarcharLimit)
-          case TypeClass.Str      => base
+            Seq(stripTrailingDotZeroExpr, canonicalizeSciNotationExpr)
+          case TypeClass.IntLike | TypeClass.Str => Nil
+          case TypeClass.DateTime => Seq(truncateDatetimeExpr)
+          case TypeClass.TextMax  => Seq(c => truncateNvarcharMaxExpr(c))
         }
-        val notNull =
-          if (meta.nullable) typed else notNullableFixExpr(typed)
-        oddColumnExpr(name, notNull)
+        val notNull: Seq[Column => Column] =
+          if (meta.nullable) Nil else Seq(notNullableFixExpr)
+        (asString(col(name)),
+          Seq[Column => Column](normalizeNullsExpr, normalizeBoolsExpr) ++
+            typed ++ notNull)
       }
     }
   }

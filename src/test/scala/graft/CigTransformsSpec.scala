@@ -133,4 +133,31 @@ class CigTransformsSpec extends AnyFunSuite {
     assert(sunk(1) == Row(null, "0", null, null, "ok", null,
       "POINT (0 0)", "NL", "2019-07-03", "0"))
   }
+
+  test("cleanup expressions grow with the number of steps, not their product") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    def nodes(p: LogicalPlan): Int =
+      p.collect { case n => n.expressions.map(_.collect { case e => e }.size).sum }.sum
+    val df = strDf("c" -> Seq("1.0", "NaT", "2e+3", "True"))
+    // (type class, nullable) → steps after the string coercion, P11 included
+    val kinds = Seq(
+      (TypeClass.IntLike, true) -> 5, (TypeClass.IntLike, false) -> 4,
+      (TypeClass.DateTime, true) -> 4, (TypeClass.TextMax, false) -> 5,
+      (TypeClass.Str, true) -> 3, (TypeClass.Str, false) -> 4)
+    for (((tc, nullable), steps) <- kinds) {
+      val cfg = TableConfig("T", "T", isEnabled = true,
+        columns = Seq(ColumnMeta("c", tc, nullable)))
+      val out = sentinelsToNull(
+        CigTransforms.pipeline(df, cfg, "NL", LocalDate.of(2019, 7, 3)))
+      val qe = out.queryExecution
+      for ((phase, plan) <- Seq("analyzed" -> qe.analyzed, "optimized" -> qe.optimizedPlan)) {
+        val n = nodes(plan)
+        info(s"$tc nullable=$nullable $phase: $n nodes")
+        // each step names its input at most 4 times, and with ~20 nodes;
+        // nesting the steps multiplies instead (1295 for a nullable int)
+        assert(n <= 24 * (steps + 1), s"$tc nullable=$nullable $phase: $n nodes")
+      }
+      out.collect() // and it still runs
+    }
+  }
 }

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, concat, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config._
@@ -20,11 +21,16 @@ class IngestionJobSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = TestSession.spark
 
+  /** Each file's `l_returnflag` is its environment's T0a value, so a
+    * sink row whose `Environment` differs from it came from another
+    * environment's file. */
   private def buildTree(root: String): Unit = {
     val li = spark.read
       .parquet(s"${TestSession.sfDir("0.001")}/lineitem.parquet").limit(50)
     def drop(rel: String): Unit =
-      li.write.mode("overwrite").parquet(s"$root/$rel")
+      li.withColumn("l_returnflag",
+          lit(rel.split('/').head.stripPrefix("environment=")))
+        .write.mode("overwrite").parquet(s"$root/$rel")
     drop("environment=NL/Lineitem/2019/07/03")
     drop("environment=BE/Lineitem/2019/07/04")
     drop("environment=NL/Disabled/2019/07/03")  // disabled table
@@ -73,6 +79,7 @@ class IngestionJobSpec extends AnyFunSuite {
     val envs = written.select("Environment").distinct().collect()
       .map(_.getString(0)).toSet
     assert(envs == Set("NL", "BE"))
+    assertOwnEnvironment(written)
     // T1-defaulted column arrives as NULL after P11
     assert(written.filter(written("MissingCol").isNotNull).count() == 0)
     assert(written.select("CIGCopyTime").distinct().head().getString(0)
@@ -84,28 +91,43 @@ class IngestionJobSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/HOST_CIG_Lineitem").count() == 100)
   }
 
+  /** Every row's `Environment` is the one its file's `l_returnflag`
+    * was written with. */
+  private def assertOwnEnvironment(written: DataFrame): Unit = {
+    val wrong = written.filter(written("Environment") =!= written("l_returnflag"))
+    assert(wrong.isEmpty, s"rows under another environment: ${wrong.collect().take(5).toSeq}")
+  }
+
   // ------------------------------------------------------------------
-  // staged runs: thread contract, failure semantics, job-group inheritance
+  // staged runs: thread contract, failure semantics, job-group inheritance;
+  // a run's unit of work ("group") is one target table
   // ------------------------------------------------------------------
 
   private val copyCfg =
     tableCfg.copy(targetName = "HOST_CIG_Linecopy", source = "Linecopy")
+  private val partCfg =
+    tableCfg.copy(targetName = "HOST_CIG_Linepart", source = "Linepart")
   private val RowsPerFile = 25L
-  /** The four groups in the order `run` must visit them: sorted by
-    * (entity, environment); keys are "target/environment". */
-  private val groupOrder = Seq("HOST_CIG_Linecopy/BE", "HOST_CIG_Linecopy/NL",
-    "HOST_CIG_Lineitem/BE", "HOST_CIG_Lineitem/NL")
+  /** The three tables in the order `run` must visit them: sorted by
+    * entity. */
+  private val tableOrder =
+    Seq("HOST_CIG_Linecopy", "HOST_CIG_Lineitem", "HOST_CIG_Linepart")
+  /** A table's sink key, "target/environments": one write per table
+    * names both of its environments. */
+  private def writeKey(table: String) = s"$table/BE,NL"
+  /** A table's marker keys, "target/environment", one per environment. */
+  private def markerKeys(table: String) = Seq(s"$table/BE", s"$table/NL")
 
   private def writeFile(dir: String): Unit =
     spark.read.parquet(s"${TestSession.sfDir("0.001")}/lineitem.parquet")
       .limit(RowsPerFile.toInt).coalesce(1)
       .write.mode("overwrite").parquet(dir)
 
-  /** Two entities × two environments × two days: four groups of two
+  /** Three entities × two environments × two days: three tables of four
     * one-file directories. Returns the tree's root. */
   private def groupTree(): String = {
     val root = Files.createTempDirectory("graft-groups").toString
-    for (entity <- Seq("Lineitem", "Linecopy"); env <- Seq("NL", "BE");
+    for (entity <- Seq("Lineitem", "Linecopy", "Linepart"); env <- Seq("NL", "BE");
          day <- Seq("03", "04"))
       writeFile(s"$root/environment=$env/$entity/2019/07/$day")
     root
@@ -115,7 +137,7 @@ class IngestionJobSpec extends AnyFunSuite {
     environments = Seq("NL", "BE"),
     ingestionDate = LocalDate.of(2019, 7, 3),
     dataFolder = root,
-    tables = Seq(tableCfg, copyCfg))
+    tables = Seq(tableCfg, copyCfg, partCfg))
 
   private def helperAlive: Boolean = Thread.getAllStackTraces.keySet.asScala
     .exists(t => t.getName == "ingest-prepare" && t.isAlive)
@@ -165,9 +187,10 @@ class IngestionJobSpec extends AnyFunSuite {
     ledger.all.map(e => s"${e.targetTable}/${e.environment}").distinct.sorted
 
   private def sinkRows(out: String): Map[String, Long] =
-    Seq(tableCfg, copyCfg).map(_.targetName)
-      .filter(t => Files.exists(Paths.get(out, t)))
+    tableOrder.filter(t => Files.exists(Paths.get(out, t)))
       .map(t => t -> spark.read.parquet(s"$out/$t").count()).toMap
+
+  private val fullSink = tableOrder.map(_ -> 4 * RowsPerFile).toMap
 
   test("staged run: sink and ledger are called on the caller's thread, one group at a time, in order") {
     val root = groupTree()
@@ -176,21 +199,22 @@ class IngestionJobSpec extends AnyFunSuite {
     val sink = new RecordingSink(new IngestionJob.ParquetSink(out), rec)
     val r = IngestionJob.run(spark, groupCfg(root),
       new RecordingLedger(new InMemoryMarkerLedger, rec), sink)
-    assert(r.ingested.size == 8 && r.rowsWritten == 8 * RowsPerFile, s"$r")
+    assert(r.ingested.size == 12 && r.rowsWritten == 12 * RowsPerFile, s"$r")
 
     val caller = Thread.currentThread()
     assert(rec.calls.forall(_._3 eq caller),
       s"calls off the caller's thread: ${rec.calls.filter(_._3 ne caller)}")
-    // the ledger snapshot, then per group: its write, then its two
-    // touches (one per file), before the next group's write starts
-    val expected = ("all", "") +: groupOrder.flatMap(g => Seq(
-      ("write-start", g), ("write-end", g), ("touch", g), ("touch", g)))
+    // the ledger snapshot, then per table: its one write, then its four
+    // touches (one per file, in environment order), before the next
+    // table's write starts
+    val expected = ("all", "") +: tableOrder.flatMap(t =>
+      Seq(("write-start", writeKey(t)), ("write-end", writeKey(t))) ++
+        markerKeys(t).flatMap(m => Seq(("touch", m), ("touch", m))))
     assert(rec.calls.map(c => (c._1, c._2)).toSeq == expected)
     // the preparation helper was up during every write
-    assert(sink.helperSeen.toSeq == Seq.fill(4)(true))
+    assert(sink.helperSeen.toSeq == Seq.fill(3)(true))
     assert(!helperAlive, "helper thread outlived the run")
-    assert(sinkRows(out) == Map(
-      "HOST_CIG_Linecopy" -> 4 * RowsPerFile, "HOST_CIG_Lineitem" -> 4 * RowsPerFile))
+    assert(sinkRows(out) == fullSink)
   }
 
   test("fault injection: a failing sink write stops the run; a re-run writes exactly the missing groups") {
@@ -200,29 +224,30 @@ class IngestionJobSpec extends AnyFunSuite {
     val ledger = new InMemoryMarkerLedger
     intercept[SinkBoom] {
       IngestionJob.run(spark, groupCfg(root), new RecordingLedger(ledger, rec),
-        new RecordingSink(new IngestionJob.ParquetSink(out), rec, failAt = 2))
+        new RecordingSink(new IngestionJob.ParquetSink(out), rec, failAt = 1))
     }
     assert(!helperAlive, "helper thread outlived the failed run")
-    // groups before the failing one are written and marked; nothing after
-    assert(rec.of("write-start") == groupOrder.take(3))
-    assert(rec.of("write-end") == groupOrder.take(2))
-    assert(markedGroups(ledger) == groupOrder.take(2))
-    assert(sinkRows(out) == Map("HOST_CIG_Linecopy" -> 4 * RowsPerFile))
+    // the table before the failing one is written and marked; the
+    // failing table and the one after it are neither
+    assert(rec.of("write-start") == tableOrder.take(2).map(writeKey))
+    assert(rec.of("write-end") == tableOrder.take(1).map(writeKey))
+    assert(markedGroups(ledger) == markerKeys(tableOrder.head))
+    assert(sinkRows(out) == Map(tableOrder.head -> 4 * RowsPerFile))
 
     val r2 = IngestionJob.run(spark, groupCfg(root), ledger,
       new IngestionJob.ParquetSink(out))
-    assert(r2.skippedByMarker == 4 && r2.ingested.size == 4, s"$r2")
-    assert(r2.ingested.forall(_.contains("/Lineitem/")))
-    assert(markedGroups(ledger) == groupOrder)
-    // equal to a clean run's rows: no group written twice
-    assert(sinkRows(out) == Map(
-      "HOST_CIG_Linecopy" -> 4 * RowsPerFile, "HOST_CIG_Lineitem" -> 4 * RowsPerFile))
+    assert(r2.skippedByMarker == 4 && r2.ingested.size == 8, s"$r2")
+    assert(r2.ingested.forall(!_.contains("/Linecopy/")))
+    assert(markedGroups(ledger) == tableOrder.flatMap(markerKeys))
+    // equal to a clean run's rows: no table written twice
+    assert(sinkRows(out) == fullSink)
   }
 
   test("fault injection: a failing preparation is rethrown unwrapped at its group's turn") {
     val root = groupTree()
     val out = Files.createTempDirectory("graft-groups-out").toString
-    // Lineitem/BE, the third group, becomes one corrupt parquet file
+    // Lineitem's BE files, in the second table, become one corrupt
+    // parquet file
     val bad = Paths.get(root, "environment=BE/Lineitem/2019/07/03")
     val badFile = bad.resolve("part-0.parquet")
     val walk = Files.walk(Paths.get(root, "environment=BE/Lineitem"))
@@ -241,21 +266,21 @@ class IngestionJobSpec extends AnyFunSuite {
     assert(e.getClass == direct.getClass, s"not rethrown as the read threw it: $e")
     assert(!e.isInstanceOf[java.util.concurrent.ExecutionException])
     assert(!helperAlive, "helper thread outlived the failed run")
-    // the failure surfaces before the third write starts
-    assert(rec.of("write-start") == groupOrder.take(2))
-    assert(rec.of("write-end") == groupOrder.take(2))
-    assert(markedGroups(ledger) == groupOrder.take(2))
+    // the failure surfaces before the second write starts; none of the
+    // failed table's files is marked, the NL ones included
+    assert(rec.of("write-start") == tableOrder.take(1).map(writeKey))
+    assert(rec.of("write-end") == tableOrder.take(1).map(writeKey))
+    assert(markedGroups(ledger) == markerKeys(tableOrder.head))
 
-    // repair the file; the re-run writes the two missing groups only
+    // repair the file; the re-run writes the two missing tables only
     Files.delete(badFile)
     writeFile(bad.toString)
     val r2 = IngestionJob.run(spark, groupCfg(root), ledger,
       new IngestionJob.ParquetSink(out))
-    assert(r2.skippedByMarker == 4 && r2.ingested.size == 3, s"$r2")
-    assert(r2.ingested.forall(_.contains("/Lineitem/")))
-    assert(markedGroups(ledger) == groupOrder)
-    assert(sinkRows(out) == Map(
-      "HOST_CIG_Linecopy" -> 4 * RowsPerFile, "HOST_CIG_Lineitem" -> 3 * RowsPerFile))
+    assert(r2.skippedByMarker == 4 && r2.ingested.size == 7, s"$r2")
+    assert(r2.ingested.forall(!_.contains("/Linecopy/")))
+    assert(markedGroups(ledger) == tableOrder.flatMap(markerKeys))
+    assert(sinkRows(out) == fullSink.updated("HOST_CIG_Lineitem", 3 * RowsPerFile))
   }
 
   test("staged run: every job, the helper's schema inference included, carries the caller's job group") {
@@ -278,8 +303,8 @@ class IngestionJobSpec extends AnyFunSuite {
       ListenerBusBridge.drain(sc)
       sc.removeSparkListener(listener)
     }
-    // per group at least the helper's schema-inference job and the write
-    assert(groups.size >= 2 * groupOrder.size, s"jobs: $groups")
+    // per table the helper's schema-inference job and the write
+    assert(groups.size >= 2 * tableOrder.size, s"jobs: $groups")
     assert(groups.forall(_ == "ingest-spec"), s"jobs outside the group: $groups")
   }
 
@@ -288,21 +313,62 @@ class IngestionJobSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft-mailbox-out").toString
     val li = spark.read
       .parquet(s"${TestSession.sfDir("0.001")}/lineitem.parquet").limit(30)
-    li.write.mode("overwrite")
-      .parquet(s"$root/NL_Hosting_Mailbox/Lineitem/2019/07/03")
-    li.write.mode("overwrite")
-      .parquet(s"$root/BE_Hosting_Mailbox/Lineitem/2019/07/03")
+    // the second datasource's name needs URI escapes (space, '+', '%')
+    val sources = Seq("NL_Hosting_Mailbox" -> "NL", "B E_Hosting+%41" -> "B E",
+      "DE_Hosting_Mailbox" -> "DE")
+    for ((ds, short) <- sources)
+      li.withColumn("l_returnflag", lit(short)).write.mode("overwrite")
+        .parquet(s"$root/$ds/Lineitem/2019/07/03")
     val cfg = IngestionConfig(
-      environments = Seq("NL_Hosting_Mailbox"), // allow-list is by datasource
+      // allow-list is by datasource
+      environments = Seq("NL_Hosting_Mailbox", "B E_Hosting+%41"),
       ingestionDate = LocalDate.of(2019, 7, 3),
       dataFolder = root,
       tables = Seq(tableCfg))
     val r = IngestionJob.run(spark, cfg, new InMemoryMarkerLedger,
       new IngestionJob.ParquetSink(out), mailbox = true)
-    assert(r.rowsWritten == 30 && r.ingested.size == 1, s"$r")
+    assert(r.rowsWritten == 60 && r.ingested.size == 2, s"$r")
     val written = spark.read.parquet(s"$out/HOST_CIG_Lineitem")
-    // environment column is the datasource prefix before '_'
-    assert(written.select("Environment").distinct().head().getString(0) == "NL")
+    // environment column is the datasource prefix before '_', per row
+    assert(written.groupBy("Environment").count().collect()
+      .map(x => x.getString(0) -> x.getLong(1)).toMap == Map("NL" -> 30, "B E" -> 30))
+    assertOwnEnvironment(written)
+  }
+
+  test("one read per table: a column only one environment's files carry gets each row its own environment's value") {
+    val root = Files.createTempDirectory("graft-merge").toString
+    val li = spark.read
+      .parquet(s"${TestSession.sfDir("0.001")}/lineitem.parquet").limit(40)
+      .selectExpr("l_orderkey", "l_linenumber", "l_returnflag")
+    // BE, whose files are read first, lacks the three extra columns; NL
+    // carries them
+    li.write.mode("overwrite").parquet(s"$root/environment=BE/Lineitem/2019/07/03")
+    li.selectExpr("*", "concat('m-', l_orderkey) AS MissingCol",
+        "concat('r-', l_linenumber) AS ReqCol", "concat(l_linenumber, '.0') AS NumCol")
+      .write.mode("overwrite").parquet(s"$root/environment=NL/Lineitem/2019/07/04")
+    val cfg = tableCfg.copy(columns = tableCfg.columns ++ Seq(
+      ColumnMeta("ReqCol", TypeClass.Str, nullable = false),
+      ColumnMeta("NumCol", TypeClass.IntLike)))
+    def ingest(envs: Seq[String]): DataFrame = {
+      val out = Files.createTempDirectory("graft-merge-out").toString
+      IngestionJob.run(spark, IngestionConfig(envs, LocalDate.of(2019, 7, 3),
+        root, Seq(cfg)), new InMemoryMarkerLedger, new IngestionJob.ParquetSink(out))
+      spark.read.parquet(s"$out/HOST_CIG_Lineitem")
+    }
+    val both = ingest(Seq("NL", "BE"))
+    // what a run over each environment alone writes
+    val apart = ingest(Seq("NL")).unionByName(ingest(Seq("BE")))
+    assert(both.count() == 80)
+    assert(both.exceptAll(apart).isEmpty && apart.exceptAll(both).isEmpty)
+    val be = both.filter(col("Environment") === "BE")
+    val nl = both.filter(col("Environment") === "NL")
+    // BE: the T1 default (NULL after P11), T4's "" for the non-nullable
+    assert(be.count() == 40 && be.filter(col("MissingCol").isNotNull ||
+      col("NumCol").isNotNull || col("ReqCol") =!= "").isEmpty)
+    // NL: its own values, through T2
+    assert(nl.filter(col("MissingCol") === concat(lit("m-"), col("l_orderkey")) &&
+      col("ReqCol") === concat(lit("r-"), col("l_linenumber")) &&
+      col("NumCol") === col("l_linenumber")).count() == 40)
   }
 
   test("CSV source format rides the same layout through the same pipeline") {
@@ -330,6 +396,35 @@ class IngestionJobSpec extends AnyFunSuite {
       IngestionJob.run(spark, cfg, new InMemoryMarkerLedger,
         new IngestionJob.ParquetSink(out), format = "avro")
     }
+  }
+
+  test("CSV: a table whose environments' headers differ fails whole; no cell lands under another column") {
+    val root = Files.createTempDirectory("graft-csv-headers").toString
+    val out = Files.createTempDirectory("graft-csv-headers-out").toString
+    val li = spark.read
+      .parquet(s"${TestSession.sfDir("0.001")}/lineitem.parquet").limit(20)
+    li.selectExpr("l_orderkey", "l_linenumber", "l_returnflag").coalesce(1)
+      .write.mode("overwrite").option("header", "true")
+      .csv(s"$root/environment=BE/Lineitem/2019/07/03")
+    // same column count, another order: read positionally under the
+    // first file's header, NL's l_returnflag would land in l_orderkey
+    li.selectExpr("l_returnflag", "l_orderkey", "l_linenumber").coalesce(1)
+      .write.mode("overwrite").option("header", "true")
+      .csv(s"$root/environment=NL/Lineitem/2019/07/03")
+    val ledger = new InMemoryMarkerLedger
+    val e = intercept[Exception] {
+      IngestionJob.run(spark, IngestionConfig(Seq("NL", "BE"),
+        LocalDate.of(2019, 7, 3), root, Seq(tableCfg)), ledger,
+        new IngestionJob.ParquetSink(out), format = "csv")
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).mkString("\n")
+    assert(messages.contains("CSV header"), messages)
+    assert(ledger.all.isEmpty)
+    // the aborted write left no data file behind
+    val walk = Files.walk(Paths.get(out))
+    try assert(!walk.iterator.asScala.exists(_.toString.endsWith(".parquet")))
+    finally walk.close()
   }
 
   test("ORC source format ingests through the same pipeline") {
@@ -395,7 +490,10 @@ class IngestionJobSpec extends AnyFunSuite {
     val r = IngestionJob.run(spark, cfg, ledger,
       new IngestionJob.ParquetSink(out))
     assert(r.ingested.size == 2 && r.rowsWritten == 100, r)
-    assert(spark.read.parquet(s"$out/HOST_CIG_Lineitem").count() == 100)
+    val written = spark.read.parquet(s"$out/HOST_CIG_Lineitem")
+    assert(written.count() == 100)
+    assert(written.select("Environment").distinct().count() == 2)
+    assertOwnEnvironment(written)
     // the markers carry the root's own form, so a re-run skips them
     assert(ledger.all.size == 2 &&
       ledger.all.forall(_.parquetSource.startsWith(s"file://$root/")))

@@ -64,4 +64,38 @@ class SharedArtifactsSpec extends AnyFunSuite {
     }
     Bench.resetSharedState(spark)
   }
+
+  test("resetSharedState frees every persistent RDD, locally checkpointed ones without a warning") {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warned = scala.collection.mutable.ArrayBuffer[String]()
+    val appender = new AbstractAppender("graft-reset-warnings", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = warned.synchronized {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("locally checkpointed")) warned += m
+      }
+    }
+    appender.start()
+    val ctx = LoggerContext.getContext(false)
+    ctx.getConfiguration.getRootLogger.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    val sc = spark.sparkContext
+    try {
+      GraphOps.cooccurEdges(spark, dir)          // a localCheckpoint cut
+      spark.range(10).persist().count()          // a cached Dataset
+      sc.parallelize(1 to 10).persist().count()  // a persisted RDD
+      assert(sc.getPersistentRDDs.values.exists(_.isCheckpointed))
+      assert(sc.getPersistentRDDs.size >= 3, sc.getPersistentRDDs)
+      Bench.resetSharedState(spark)
+      assert(sc.getPersistentRDDs.isEmpty, sc.getPersistentRDDs)
+      assert(warned.isEmpty, warned)
+    } finally {
+      ctx.getConfiguration.getRootLogger.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
 }
