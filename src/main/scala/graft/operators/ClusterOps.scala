@@ -13,8 +13,8 @@ import org.apache.spark.sql.expressions.Window
   * (the argmin is a per-vector window over K candidate rows, K tiny),
   * and the centroid update is one map-side-partial aggregate on the
   * assignment key. Each additional Lloyd iteration repeats the same two
-  * passes — the loop discipline (persist + materialize per generation)
-  * is demonstrated by [[GraphOps.pageRank]]; one iteration here keeps
+  * passes — the loop discipline (a lineage cut per generation) is
+  * [[CurationOps.iterateCut]]; one iteration here keeps
   * the oracle an unrollable CTE chain.
   *
   * Parity: squared-L2 distances are generated 64-term chains with one

@@ -71,14 +71,30 @@ object CurationOps {
 
   /** [[cutLineage]] that also returns `aggs` (non-null BIGINT
     * aggregates of the cut frame), read by an `Observation` during the
-    * cut's own job: no second job, as IngestionJob counts its rows. */
+    * cut's own job: no second job, as IngestionJob counts its rows.
+    * With no `aggs` it is the plain cut and returns no longs. */
   def cutObserved(df: DataFrame, aggs: org.apache.spark.sql.Column*)
-      : (DataFrame, IndexedSeq[Long]) = {
-    val obs = new org.apache.spark.sql.Observation()
-    val named = aggs.zipWithIndex.map { case (a, i) => a.as(s"o$i") }
-    val cut = cutLineage(df.observe(obs, named.head, named.tail: _*))
-    (cut, aggs.indices.map(i => obs.get(s"o$i").asInstanceOf[Long]))
-  }
+      : (DataFrame, IndexedSeq[Long]) =
+    if (aggs.isEmpty) (cutLineage(df), IndexedSeq.empty)
+    else {
+      val obs = new org.apache.spark.sql.Observation()
+      val named = aggs.zipWithIndex.map { case (a, i) => a.as(s"o$i") }
+      val cut = cutLineage(df.observe(obs, named.head, named.tail: _*))
+      (cut, aggs.indices.map(i => obs.get(s"o$i").asInstanceOf[Long]))
+    }
+
+  /** The one round loop of the iterative operators: generation 0 is
+    * `init`, generation r is `step` of generation r − 1, and every
+    * generation is cut by [[cutObserved]] with `obs`. Returns the
+    * generations 0..n and each one's observed longs, in round order.
+    * The cut per generation keeps each round's plan the size of one
+    * round, however many rounds ran before it. */
+  def iterateCut(init: DataFrame, n: Int, obs: org.apache.spark.sql.Column*)(
+      step: DataFrame => DataFrame)
+      : (IndexedSeq[DataFrame], IndexedSeq[IndexedSeq[Long]]) =
+    (1 to n).scanLeft(cutObserved(init, obs: _*)) { case ((g, _), _) =>
+      cutObserved(step(g), obs: _*)
+    }.unzip
 
   // --- q56: PII scrubbing ----------------------------------------------
 
@@ -280,16 +296,16 @@ object CurationOps {
     * order-free, and q31's output sort was a dead range exchange that
     * the propagation's first lineage cut materialized. */
   private def dupLabels(s: SparkSession, dir: String): DataFrame =
-    cutLineage(propagateLabels(
+    propagateLabels(
       DedupOps.nearVerified(s, dir, bucketCap = None)
         .filter(col("jaccard") >= 0.5)
         .select(col("doc_a"), col("doc_b")),
-      corpusNear(s, dir).select(col("doc_id"))))
+      corpusNear(s, dir).select(col("doc_id")))
 
   /** Min-label propagation to the fixpoint over an arbitrary
     * (doc_a, doc_b) pair table and node set — the ONE connected-
     * components engine behind q59/q110/q116 and q169's image clusters.
-    * Returns (doc_id, lbl). */
+    * Returns the fixpoint generation (doc_id, lbl), itself a lineage cut. */
   private[graft] def propagateLabels(pairsIn: DataFrame,
       nodes: DataFrame): DataFrame = {
     // cutLineage pairs BEFORE the symmetric union — not just persist:
@@ -317,26 +333,25 @@ object CurationOps {
     // every round and Catalyst re-analysis grows exponentially even
     // though the data is cached (measured: rounds of 1.4s → 7s → 30s
     // with persist; flat 0.8s with a cut).
-    var labels = cutLineage(
-      nodes.select(col("doc_id"), col("doc_id").as("lbl")))
-    // convergence by label mass, not by diffing rounds: new_lbl =
-    // min(own, neighbors') ≤ old pointwise, so Σlbl strictly decreases
-    // every non-fixpoint round — comparing two driver-side scalars
-    // replaces a per-round join-and-count over the label table (the
-    // agg scans the just-checkpointed blocks, no shuffle join). At
-    // ~10¹⁰ × 10¹⁰-sized ids carry the sum as DECIMAL(38,0).
-    var prev = labels.agg(sum(col("lbl"))).head.getLong(0)
+    // convergence by label mass, not by diffing rounds: lbl' =
+    // min(own, neighbors') ≤ lbl pointwise, so Σlbl strictly decreases
+    // every non-fixpoint round — comparing two driver-side scalars,
+    // each observed during its generation's own cut job, replaces a
+    // per-round join-and-count over the label table. At ~10¹⁰ ×
+    // 10¹⁰-sized ids carry the sum as DECIMAL(38,0).
+    val mass = coalesce(sum(col("lbl")), lit(0L))
+    var (labels, Seq(prev)) = cutObserved(
+      nodes.select(col("doc_id"), col("doc_id").as("lbl")), mass)
     var done = false
     while (!done) {
-      val prop = cutLineage(
+      val (next, Seq(cur)) = cutObserved(
         labels.join(edges, col("doc_id") === col("doc_a"))
           .select(col("doc_b").as("doc_id"), col("lbl"))
           .unionAll(labels)
-          .groupBy("doc_id").agg(min(col("lbl")).as("new_lbl")))
-      val cur = prop.agg(sum(col("new_lbl"))).head.getLong(0)
+          .groupBy("doc_id").agg(min(col("lbl")).as("lbl")), mass)
       done = cur == prev
       prev = cur
-      labels = prop.select(col("doc_id"), col("new_lbl").as("lbl"))
+      labels = next
     }
     labels
   }
@@ -2858,26 +2873,26 @@ object CurationOps {
     val uTot = masks.agg(sum(col("n")).as("n_universe"))
     val rows = scala.collection.mutable.Buffer.empty[DataFrame]
     var avail = masks // masks not yet covered by any selected source
-    var cum = s.range(1).select(lit(0L).as("n_cum_prev"))
+    var cum = 0L // shingles covered by the picks so far
     (1 to CoverRounds).foreach { r =>
       val gains = avail
         .select(explode(col("srcs")).as("source"), col("n"))
         .groupBy("source").agg(sum(col("n")).as("gain"))
       // cutLineage per pick: the uncut round chain grows geometrically
-      // (the q338 lesson); every cut frame here is ≤ |masks| rows
-      val best = CurationOps.cutLineage(gains
+      // (the q338 lesson); every cut frame here is ≤ |masks| rows. The
+      // pick's gain is observed on its own cut job.
+      val (best, Seq(gain)) = cutObserved(gains
         .orderBy(col("gain").desc, col("source")).limit(1)
-        .select(col("source").as("best_source"), col("gain")))
-      val stat = best.crossJoin(cum).crossJoin(broadcast(uTot))
+        .select(col("source").as("best_source"), col("gain")),
+        coalesce(sum(col("gain")), lit(0L)))
+      rows += best.crossJoin(broadcast(uTot))
         .selectExpr(s"CAST($r AS BIGINT) AS round",
           "best_source AS source", "gain",
-          "n_cum_prev + gain AS n_covered",
-          "round(CAST(n_cum_prev + gain AS DOUBLE) / n_universe, 6)" +
+          s"CAST(${cum + gain} AS BIGINT) AS n_covered",
+          s"round(CAST(${cum + gain} AS DOUBLE) / n_universe, 6)" +
             " AS cover_share")
-      rows += stat
-      cum = CurationOps.cutLineage(best.crossJoin(cum)
-        .selectExpr("n_cum_prev + gain AS n_cum_prev"))
-      avail = CurationOps.cutLineage(avail.join(broadcast(best),
+      cum += gain
+      avail = cutLineage(avail.join(broadcast(best),
         array_contains(col("srcs"), col("best_source")), "left_anti"))
     }
     rows.reduce(_.union(_)).orderBy("round")

@@ -1441,14 +1441,13 @@ object DedupOps {
     val edges = pairs.unionAll(
       pairs.select(col("name_b").as("name_a"), col("name_a").as("name_b")))
     val names = EtlOps.t(s, dir, "part").select(col("p_name")).distinct()
-    var lbl = CurationOps.cutLineage(
-      names.select(col("p_name"), col("p_name").as("lbl")))
-    for (_ <- 1 to ConsolidateRounds)
-      lbl = CurationOps.cutLineage(
-        edges.join(lbl, edges("name_a") === lbl("p_name"))
-          .select(col("name_b").as("p_name"), col("lbl"))
-          .unionAll(lbl)
-          .groupBy("p_name").agg(min(col("lbl")).as("lbl")))
+    val lbl = CurationOps.iterateCut(
+      names.select(col("p_name"), col("p_name").as("lbl")),
+      ConsolidateRounds)(g =>
+      edges.join(g, edges("name_a") === g("p_name"))
+        .select(col("name_b").as("p_name"), col("lbl"))
+        .unionAll(g)
+        .groupBy("p_name").agg(min(col("lbl")).as("lbl")))._1.last
     EtlOps.t(s, dir, "part")
       // the label table is one row per DISTINCT NAME (entity-scaled) —
       // unhinted: broadcast while small, shuffle on p_name past that

@@ -63,10 +63,6 @@ object GraphOps {
   def pageRank(s: SparkSession, dir: String): DataFrame =
     pageRankRanks(s, dir).orderBy(col("pr").desc, col("node")).limit(TopK)
 
-  /** The full final rank table (one row per node) — q70 takes its
-    * top-[[TopK]]; the spec checks rank-mass conservation on ALL rows
-    * (Σ pr = node count at every damped iteration, up to fixed-point
-    * truncation). */
   /** One damped PageRank update from (degree-annotated edges, ranks) —
     * exposed so the spec can pin the iteration's PHYSICAL shape: with
     * [[pageRankRanks]]'s pre-partitioned cached `ew`, the join reuses
@@ -83,6 +79,10 @@ object GraphOps {
         (lit(0.15) + lit(0.85) * (col("sfp").cast("double") / lit(1e12)))
           .as("pr"))
 
+  /** The full final rank table (one row per node) — q70 takes its
+    * top-[[TopK]]; the spec checks rank-mass conservation on ALL rows
+    * (Σ pr = node count at every damped iteration, up to fixed-point
+    * truncation). */
   def pageRankRanks(s: SparkSession, dir: String): DataFrame = {
     // Degree-annotated edges in ONE exchange: the out-degree rides a
     // whole-partition window over hashpartitioning(src) — the exact
@@ -100,31 +100,18 @@ object GraphOps {
     val ew = edges(s, dir)
       .withColumn("out_deg", count(lit(1)).over(w))
       .persist()
-    // Iterative-DataFrame discipline: persist AND materialize each rank
-    // generation, then drop its parent. Without the cut, iteration i's
-    // plan embeds the full lineage of iterations 1..i-1 — the optimizer
-    // re-derives (and re-sorts, via sort-merge joins with unknown size
-    // stats) the whole chain, which measured ~30× slower than the
-    // truncated form. The materializing count() is 1 row per node —
-    // noise next to the edge join it saves. Same role checkpoint() plays
-    // in long-running iterative jobs (checkpoint also cuts the RDD DAG
-    // for fault-tolerance; at 3 iterations cache-truncation suffices).
     // initial ranks: one row per source node, derived from the cached
-    // ew (dropDuplicates over its own hash partitioning — no exchange)
-    var ranks = ew.select(col("src").as("node")).dropDuplicates("node")
-      .select(col("node"), lit(1.0).as("pr")).persist()
-    for (_ <- 1 to Iterations) {
-      val next = pageRankStep(ew, ranks).persist()
-      next.count()
-      ranks.unpersist()
-      ranks = next
-    }
+    // ew (dropDuplicates over its own hash partitioning — no exchange);
+    // every rank generation is a lineage cut
+    val (ranks, _) = CurationOps.iterateCut(
+      ew.select(col("src").as("node")).dropDuplicates("node")
+        .select(col("node"), lit(1.0).as("pr")), Iterations)(
+      pageRankStep(ew, _))
     // ew is dead once the final generation is materialized — free it so
     // long-lived sessions (libraries, notebooks) don't pin the edge
-    // table in storage; the final ranks cache stays, scoped by the
-    // caller (Bench and Verify run Bench.resetSharedState per query)
+    // table in storage
     ew.unpersist()
-    ranks
+    ranks.last
   }
 
   /** The DuckDB oracle: the identical computation as an unrolled CTE
@@ -185,12 +172,12 @@ object GraphOps {
     val nv = nodes.count() // |V| — a scalar, the one sanctioned collect
     val teleport = 0.15 * nv.toDouble / PprSeeds
     // initial ranks: all mass on the seeds (the personalized start)
-    var ranks = nodes.join(broadcast(seeds), Seq("node"), "left")
-      .select(col("node"),
-        when(col("seed"), lit(nv.toDouble / PprSeeds))
-          .otherwise(lit(0.0)).as("pr")).persist()
-    for (_ <- 1 to Iterations) {
-      val next = ew.join(ranks, ew("src") === ranks("node"))
+    val (ranks, _) = CurationOps.iterateCut(
+      nodes.join(broadcast(seeds), Seq("node"), "left")
+        .select(col("node"),
+          when(col("seed"), lit(nv.toDouble / PprSeeds))
+            .otherwise(lit(0.0)).as("pr")), Iterations) { gen =>
+      ew.join(gen, ew("src") === gen("node"))
         .select(col("dst"),
           floor(col("pr") / col("out_deg") * lit(1e12)).cast("long")
             .as("contrib"))
@@ -200,13 +187,9 @@ object GraphOps {
         .select(col("dst").as("node"),
           (when(col("seed"), lit(teleport)).otherwise(lit(0.0)) +
             lit(0.85) * (col("sfp").cast("double") / lit(1e12))).as("pr"))
-        .persist()
-      next.count()
-      ranks.unpersist()
-      ranks = next
     }
     ew.unpersist(); nodes.unpersist()
-    ranks.join(broadcast(seeds), Seq("node"), "left")
+    ranks.last.join(broadcast(seeds), Seq("node"), "left")
       .orderBy(col("pr").desc, col("node")).limit(TopK)
       .select(col("node"), round(col("pr"), 6).as("ppr"),
         coalesce(col("seed"), lit(false)).as("is_seed"))
@@ -285,9 +268,10 @@ object GraphOps {
       edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
       sum(col("deg")))
     val m = degSum / 2 // |undirected edges| — a scalar
-    var labels = deg.select(col("node"), col("node").as("lbl"))
-    for (_ <- 1 to LpaIters)
-      labels = CurationOps.cutLineage(lpaRound(edges, labels))
+    // generation 0 is the first round over the identity labels
+    val labels = CurationOps.iterateCut(
+      lpaRound(edges, deg.select(col("node"), col("node").as("lbl"))),
+      LpaIters - 1)(lpaRound(edges, _))._1.last
     val comm = labels.join(deg, "node")
       .groupBy("lbl").agg(count(lit(1)).as("size"),
         sum(col("deg")).as("d_c"))
@@ -1184,8 +1168,9 @@ object GraphOps {
     * edge table with the removed set (|removed| rows move, the |E|
     * side doesn't; by edge symmetry the removed-neighbor counts group
     * on the OTHER endpoint, which partial-aggregates map-side) plus a
-    * |V|-row left join. cutLineage per degree generation as ever (the
-    * frame is re-referenced four times per round). */
+    * |V|-row left join. One lineage cut per degree generation (the
+    * frame is re-referenced twice per round); the report rows are the
+    * counts observed on those cuts. */
   def kcorePeel(s: SparkSession, dir: String): DataFrame = {
     // Long-keyed private edge build (node = 2·custkey / 2·suppkey+1):
     // node ids never reach the output — every column is a count — so
@@ -1203,12 +1188,12 @@ object GraphOps {
       .persist()
     val kthr = e0.agg(ceil(count(lit(1)).cast("double")
       / countDistinct(col("node")) / 2).cast("bigint").as("k"))
-    var deg = CurationOps.cutLineage(
+    // every degree generation observes its alive nodes and Σ deg; round
+    // r's report row reads generations r − 1 and r
+    val (_, obs) = CurationOps.iterateCut(
       e0.groupBy("node").agg(count(lit(1)).as("deg"))
-        .crossJoin(broadcast(kthr)))
-    var prevNodes = deg.agg(count(lit(1)).as("n_prev"))
-    val rows = scala.collection.mutable.Buffer.empty[DataFrame]
-    (1 to KCoreRounds).foreach { r =>
+        .crossJoin(broadcast(kthr)), KCoreRounds,
+      count(lit(1)), coalesce(sum(col("deg")), lit(0L))) { deg =>
       val removed = deg.filter(col("deg") < col("k")).select("node")
       val keep = deg.filter(col("deg") >= col("k"))
       // shuffle_hash (not broadcast: |removed| is |V|-scaled in the
@@ -1218,25 +1203,19 @@ object GraphOps {
       val loss = e0.join(removed.hint("shuffle_hash"), Seq("node"))
         .groupBy("nb").agg(count(lit(1)).as("lost"))
         .withColumnRenamed("nb", "node")
-      val next = CurationOps.cutLineage(keep.join(loss, Seq("node"), "left")
+      keep.join(loss, Seq("node"), "left")
         .select(col("node"),
           (col("deg") - coalesce(col("lost"), lit(0L))).as("deg"),
-          col("k")))
-      val stat = next.agg(count(lit(1)).as("n_nodes"),
-          coalesce(sum(col("deg")), lit(0L)).as("n_edges_directed"))
-        .crossJoin(prevNodes)
-        .selectExpr(s"CAST($r AS BIGINT) AS round", "n_nodes",
-          "CAST(n_edges_directed / 2 AS BIGINT) AS n_edges",
-          "n_prev - n_nodes AS n_removed",
-          "(n_prev - n_nodes) = 0 AS converged")
-      rows += stat
-      prevNodes = next.agg(count(lit(1)).as("n_prev"))
-      deg = next
+          col("k"))
     }
-    // every degree generation is already materialized (cutLineage is
+    // every degree generation is already materialized (the cuts are
     // eager); the edge cache is dead state once the loop ends
     e0.unpersist()
-    rows.reduce(_.union(_)).orderBy("round")
+    // KCoreRounds local rows in round order: the plan is a LocalRelation
+    s.createDataFrame(obs.indices.tail.map { r =>
+        val (prev, cur) = (obs(r - 1), obs(r))
+        (r.toLong, cur(0), cur(1) / 2, prev(0) - cur(0), prev(0) == cur(0))
+      }).toDF("round", "n_nodes", "n_edges", "n_removed", "converged")
   }
 
   def kcorePeelOracle: String = {
@@ -1301,8 +1280,9 @@ object GraphOps {
     *
     * Scale (100 TB): each round is ONE equi-join of the pointer table
     * with itself on the pointer key (hash-partitioned both sides, no
-    * driver state) + a cutLineage (the q338 discipline — the frame is
-    * re-referenced twice per round); log₂(depth) rounds total. The
+    * driver state) + a lineage cut (the q338 discipline — the frame is
+    * re-referenced twice per round) whose observed counts are the
+    * round's report row; log₂(depth) rounds total. The
     * sequential alternative — follow one hop per pass — pays
     * max-chain-depth passes; pointer jumping is why the cluster pays
     * 5. */
@@ -1311,24 +1291,16 @@ object GraphOps {
       "doc_id AS id",
       s"CASE WHEN doc_id % $JumpMod = 0 THEN doc_id" +
         " ELSE doc_id - 1 END AS ptr")
-    var p = CurationOps.cutLineage(base)
-    val rows = scala.collection.mutable.Buffer.empty[DataFrame]
-    (1 to JumpRounds).foreach { r =>
-      val nxt = CurationOps.cutLineage(
-        p.as("a").join(p.as("b"), col("a.ptr") === col("b.id"))
-          .select(col("a.id").as("id"), col("b.ptr").as("ptr")))
-      rows += nxt.agg(
-          count(lit(1)).as("n_nodes"),
-          sum(when(col("ptr") % JumpMod === 0L, 1L).otherwise(0L))
-            .as("n_at_head"),
-          sum(when(col("ptr") === col("id") - (col("id") % JumpMod), 1L)
-            .otherwise(0L)).as("n_correct_head"))
-        .selectExpr(s"CAST($r AS BIGINT) AS round", "n_nodes",
-          "n_at_head", "n_correct_head",
-          "n_at_head = n_nodes AS converged")
-      p = nxt
-    }
-    rows.reduce(_.union(_)).orderBy("round")
+    val (_, obs) = CurationOps.iterateCut(base, JumpRounds, count(lit(1)),
+        count(when(col("ptr") % JumpMod === 0L, true)),
+        count(when(col("ptr") === col("id") - (col("id") % JumpMod), true))
+      )(p => p.as("a").join(p.as("b"), col("a.ptr") === col("b.id"))
+        .select(col("a.id").as("id"), col("b.ptr").as("ptr")))
+    // JumpRounds local rows in round order: the plan is a LocalRelation
+    s.createDataFrame(obs.indices.tail.map { r =>
+        val o = obs(r)
+        (r.toLong, o(0), o(1), o(2), o(1) == o(0))
+      }).toDF("round", "n_nodes", "n_at_head", "n_correct_head", "converged")
   }
 
   def pointerJumpOracle: String = {
@@ -1868,22 +1840,19 @@ object GraphOps {
         col("ub").as("dst"))
       .unionAll(eLvl.select(col("level"), col("ub").as("src"),
         col("ua").as("dst")))
-    var lbl = CurationOps.cutLineage(
+    // union-min round (the propagateLabels shape): neighbors' labels
+    // union own labels → ONE (level,node) min aggregate, so
+    // l_{r+1}(v) = min(l_r(v), min_nbr l_r) costs one join and one
+    // exchange per round.
+    val lbl = CurationOps.iterateCut(
       ed.select(col("level"), col("src").as("node")).distinct()
-        .select(col("level"), col("node"), col("node").as("lbl")))
-    for (_ <- 1 to AttackCcRounds) {
-      // union-min round (the propagateLabels shape): neighbors' labels
-      // union own labels → ONE (level,node) min aggregate. The former
-      // form paid the same edge join, then a second (level,node) join
-      // to fold nmin back into lbl — one exchange and one join more per
-      // round for the identical l_{r+1}(v) = min(l_r(v), min_nbr l_r).
-      lbl = CurationOps.cutLineage(
-        ed.join(lbl.select(col("level"), col("node").as("dst"),
-            col("lbl")), Seq("level", "dst"))
-          .select(col("level"), col("src").as("node"), col("lbl"))
-          .unionAll(lbl)
-          .groupBy("level", "node").agg(min("lbl").as("lbl")))
-    }
+        .select(col("level"), col("node"), col("node").as("lbl")),
+      AttackCcRounds)(g =>
+      ed.join(g.select(col("level"), col("node").as("dst"),
+          col("lbl")), Seq("level", "dst"))
+        .select(col("level"), col("src").as("node"), col("lbl"))
+        .unionAll(g)
+        .groupBy("level", "node").agg(min("lbl").as("lbl")))._1.last
     val post = ed.join(lbl.select(col("level"), col("node").as("dst"),
         col("lbl").as("nl")), Seq("level", "dst"))
       .groupBy(col("level"), col("src").as("node"))
@@ -2144,19 +2113,17 @@ object GraphOps {
     val bfp = "CAST(floor((" +
       ProfileOps.hllEstSql("sk.sp", "sk.vz", spark = true) +
       ") * 1000.0) AS BIGINT)"
-    def cutGen(g: DataFrame): (DataFrame, IndexedSeq[Long]) =
-      CurationOps.cutObserved(
-        g.withColumn("sk", call_function("hb_sketch", col("regs")))
-          .selectExpr("node", "regs", s"concat(bs, array($bfp)) AS bs", "chg"),
-        count(lit(1)), count(when(col("chg"), true)),
-        sum(element_at(col("bs"), -1)))
+    // every generation appends its frozen ball estimate to `bs`
+    def withBall(g: DataFrame): DataFrame =
+      g.withColumn("sk", call_function("hb_sketch", col("regs")))
+        .selectExpr("node", "regs", s"concat(bs, array($bfp)) AS bs", "chg")
     // byte-packed registers (hb_agg / hb_merge_agg — BINARY(m), ranks
     // ≤ 53 fit one byte): the per-round edge join + max-merge moves
     // |2E| whole register vectors, and the array<long> form shipped
     // 8× the bytes for the same registers. Values and the merge law
     // are identical (spec-asserted against the hll_* forms); the
     // relational oracle rebuild is unchanged.
-    val gen0 = cutGen(
+    val (gens, obs) = CurationOps.iterateCut(withBall(
       ed.select(col("src").as("node")).distinct()
         .withColumn("h", call_function("md5_fp60",
           concat(lit("hb:"), col("node").cast("string"))))
@@ -2165,8 +2132,9 @@ object GraphOps {
         .groupBy("node")
         .agg(expr(s"hb_agg(array(bkt, rnk), $m)").as("regs"))
         .select(col("node"), col("regs"),
-          array().cast("array<bigint>").as("bs"), lit(true).as("chg")))
-    val gens = (1 to HyperBallRounds).scanLeft(gen0) { case ((gen, _), _) =>
+          array().cast("array<bigint>").as("bs"), lit(true).as("chg"))),
+      HyperBallRounds, count(lit(1)), count(when(col("chg"), true)),
+      sum(element_at(col("bs"), -1))) { gen =>
       val nb = ed.join(gen.select(col("node").as("dst"), col("regs")),
           Seq("dst"))
         .select(col("src").as("node"), col("regs"),
@@ -2174,7 +2142,7 @@ object GraphOps {
           lit(null).cast("binary").as("rp"))
       // a node's own row alone carries `bs` and its previous registers
       // `rp`, so max() passes each through
-      cutGen(gen.select(col("node"), col("regs"), col("bs"),
+      withBall(gen.select(col("node"), col("regs"), col("bs"),
           col("regs").as("rp"))
         .unionAll(nb).groupBy("node")
         .agg(expr(s"hb_merge_agg(regs, $m)").as("regs"),
@@ -2184,7 +2152,7 @@ object GraphOps {
     }
     // every generation is checkpointed — the edge cache is done
     ed.unpersist()
-    HbRounds(gens.last._1, gens.map(_._2))
+    HbRounds(gens.last, obs)
   }
 
   def hyperball(s: SparkSession, dir: String): DataFrame = {

@@ -1578,13 +1578,12 @@ object MlPrepOps {
   def datasetCartography(s: SparkSession, dir: String): DataFrame = {
     val k = CartoIters
     val feat = logregFeatures(s, dir).persist()
-    // cutLineage per checkpoint: each step references its predecessor
-    // twice (gradient crossJoin + update crossJoin), so the uncut
-    // 8-deep weight chain doubles per iteration (measured 24 s at
-    // sf0.1, planning-dominated; 2.4 s cut — the q338 lesson on a
-    // 1-row frame)
-    val ws = (1 to k).scanLeft(logregW0(s))((w, _) =>
-      CurationOps.cutLineage(logregStep(feat, w))).tail
+    // a lineage cut per checkpoint w1..wk: each step references its
+    // predecessor twice (gradient crossJoin + update crossJoin), so the
+    // uncut 8-deep weight chain doubles per iteration (measured 24 s at
+    // sf0.1, planning-dominated; 2.4 s cut)
+    val (ws, _) = CurationOps.iterateCut(logregStep(feat, logregW0(s)),
+      k - 1)(logregStep(feat, _))
     val pcols = ws.zipWithIndex.map { case (w, i) =>
       feat.crossJoin(broadcast(w))
         .selectExpr("doc_id", "y",

@@ -195,13 +195,12 @@ class PlanPropsSpec extends AnyFunSuite {
       val ew = GraphOps.edges(spark, dir)
         .withColumn("out_deg", count(lit(1)).over(w)).persist()
       ew.count() // materialize the cache so the iteration plans against it
-      // ranks is always a persisted generation in the real loop —
-      // materialize it here too so the measured plan is the iteration,
-      // not the rank table's own lineage
-      val ranks = ew.select(col("src").as("node")).dropDuplicates("node")
-        .select(col("node"), lit(1.0).as("pr"))
-        .persist()
-      ranks.count()
+      // every rank generation is a lineage cut in the real loop
+      // (CurationOps.iterateCut) — cut it here too so the measured plan
+      // is the iteration, not the rank table's own lineage
+      val ranks = CurationOps.cutLineage(
+        ew.select(col("src").as("node")).dropDuplicates("node")
+          .select(col("node"), lit(1.0).as("pr")))
       try {
         val exec = GraphOps.pageRankStep(ew, ranks)
           .queryExecution.executedPlan
@@ -215,7 +214,7 @@ class PlanPropsSpec extends AnyFunSuite {
         assert(exec.collect {
           case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
         }.nonEmpty, "cached ew not used")
-      } finally { ew.unpersist(); ranks.unpersist() }
+      } finally ew.unpersist()
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
@@ -1765,7 +1764,9 @@ class PlanPropsSpec extends AnyFunSuite {
 
   test("q314 personalized pagerank: final generation reads the cache; seeds broadcast") {
     val p = plan(GraphOps.personalizedPageRank(spark, dir))
-    assert(p.contains("InMemoryTableScan"),
+    // the final rank generation is a lineage cut: the plan reads its
+    // blocks and re-runs no rank update
+    assert(p.contains("Scan ExistingRDD") && !p.contains("contrib"),
       s"rank generation not materialized:\n${p.take(1800)}")
     assert(p.contains("BroadcastHashJoin"),
       s"seed set not broadcast:\n${p.take(1800)}")
@@ -2048,7 +2049,8 @@ class PlanPropsSpec extends AnyFunSuite {
   }
 
   test("q380/q390 reports are local rows: the returned plans hold no Exchange and no file scan") {
-    for (q <- Seq("q380_hyperball", "q390_luby_mis")) {
+    for (q <- Seq("q380_hyperball", "q390_luby_mis", "q338_kcore_peel",
+        "q350_pointer_jump")) {
       val p = plan(SparkEntry.queries(q)(spark, dir))
       assert(!p.contains("Exchange") && !p.contains("Scan parquet"),
         s"$q report re-reads the data:\n$p")
