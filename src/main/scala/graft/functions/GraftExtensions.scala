@@ -2,103 +2,67 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions entry point: registers the native expressions
-  * ([[DotProduct]], [[LshSignature]], [[RollingHash]]) as permanent SQL
-  * functions at session build time —
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`.
+/** SparkSessionExtensions entry point and the ONE place a SQL name is
+  * bound to a native expression: every row of [[GraftExtensions.Functions]]
+  * becomes a permanent function of each session built with
+  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`,
+  * alongside the [[graft.plans.TokenBucketStrategy]] planner strategy and
+  * the [[FingerprintRewrite]] optimizer rule.
   *
-  * This is the idiomatic injection path (same mechanism Delta/Iceberg
-  * use): functions exist before any query is planned and survive
-  * `newSession()`. [[VectorFunctions.register]] remains as the runtime
-  * fallback for driver-owned sessions built without the config; it
-  * skips names that already exist so the two paths compose quietly. */
+  * Contract: a session that runs the operators must be built with this
+  * extension, as [[graft.LocalSession]] does. Injected functions exist
+  * before any query is planned and survive `newSession()`; there is no
+  * runtime registration path, so a session built without the extension
+  * has none of these names. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(clazz: Class[_], name: String) =
-    new ExpressionInfo(clazz.getName, name)
 
   override def apply(e: SparkSessionExtensions): Unit = {
     // tier (c) of the custom-operator ladder: whole-operator planner
     // strategy (logical TokenBucketNode → physical TokenBucketExec)
     e.injectPlannerStrategy(_ => graft.plans.TokenBucketStrategy)
-    e.injectFunction((FunctionIdentifier("dot_product"),
-      info(classOf[DotProduct], "dot_product"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("lsh_sig"),
-      info(classOf[LshSignature], "lsh_sig"),
-      (exprs: Seq[Expression]) =>
-        LshSignature(exprs.head, VectorFunctions.DefaultAnnPlanes)))
-    e.injectFunction((FunctionIdentifier("rolling_hash"),
-      info(classOf[RollingHash], "rolling_hash"),
-      (exprs: Seq[Expression]) => RollingHash(exprs.head)))
-    e.injectFunction((FunctionIdentifier("minhash_agg"),
-      info(classOf[MinHashAgg], "minhash_agg"),
-      MinHashAgg.builder(_)))
-    e.injectFunction((FunctionIdentifier("space_saving_agg"),
-      info(classOf[SpaceSavingAgg], "space_saving_agg"),
-      SpaceSavingAgg.builder(_)))
-    e.injectFunction((FunctionIdentifier("count_min_agg"),
-      info(classOf[CountMinAgg], "count_min_agg"),
-      CountMinAgg.builder(_)))
-    e.injectFunction((FunctionIdentifier("topk_agg"),
-      info(classOf[TopKAgg], "topk_agg"),
-      TopKAgg.builder(_)))
-    e.injectFunction((FunctionIdentifier("hll_agg"),
-      info(classOf[HllAgg], "hll_agg"),
-      HllAgg.builder(_)))
-    e.injectFunction((FunctionIdentifier("kmv_agg"),
-      info(classOf[KmvAgg], "kmv_agg"),
-      KmvAgg.builder(_)))
-    e.injectFunction((FunctionIdentifier("hll_merge_agg"),
-      info(classOf[HllMergeAgg], "hll_merge_agg"),
-      HllMergeAgg.builder(_)))
-    e.injectFunction((FunctionIdentifier("hb_agg"),
-      info(classOf[HbAgg], "hb_agg"),
-      HbAgg.builder(_)))
-    e.injectFunction((FunctionIdentifier("hb_merge_agg"),
-      info(classOf[HbMergeAgg], "hb_merge_agg"),
-      HbMergeAgg.builder(_)))
-    e.injectFunction((FunctionIdentifier("hb_sketch"),
-      info(classOf[HbSketch], "hb_sketch"),
-      (exprs: Seq[Expression]) => HbSketch(exprs.head)))
-    e.injectFunction((FunctionIdentifier("bloom_might_contain"),
-      info(classOf[BloomMightContain], "bloom_might_contain"),
-      (exprs: Seq[Expression]) => BloomMightContain(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("md5_fp60"),
-      info(classOf[Md5Fp60], "md5_fp60"),
-      Md5Fp60.builder(_)))
-    e.injectFunction((FunctionIdentifier("blob_pixel_stats"),
-      info(classOf[BlobPixelStats], "blob_pixel_stats"),
-      (exprs: Seq[Expression]) => BlobPixelStats(exprs.head)))
-    e.injectFunction((FunctionIdentifier("char_run_stats"),
-      info(classOf[CharRunStats], "char_run_stats"),
-      (exprs: Seq[Expression]) => CharRunStats(exprs.head)))
-    e.injectFunction((FunctionIdentifier("blob_wave_stats"),
-      info(classOf[BlobWaveStats], "blob_wave_stats"),
-      (exprs: Seq[Expression]) => BlobWaveStats(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("blob_phash"),
-      info(classOf[BlobPhash], "blob_phash"),
-      (exprs: Seq[Expression]) => BlobPhash(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("img_gen"),
-      info(classOf[ImgGen], "img_gen"),
-      (exprs: Seq[Expression]) =>
-        ImgGen(exprs(0), exprs(1), exprs(2), exprs(3))))
-    e.injectFunction((FunctionIdentifier("cdc_bounds"),
-      info(classOf[CdcBoundsExpr], "cdc_bounds"),
-      CdcBoundsExpr.builder(_)))
-    e.injectFunction((FunctionIdentifier("count_sketch_agg"),
-      info(classOf[CountSketchAgg], "count_sketch_agg"),
-      CountSketchAgg.builder(_)))
-    e.injectFunction((FunctionIdentifier("multi_match_stats"),
-      info(classOf[MultiMatchStats], "multi_match_stats"),
-      (exprs: Seq[Expression]) => MultiMatchStats(exprs.head)))
-    e.injectFunction((FunctionIdentifier("sorted_inter_count"),
-      info(classOf[SortedInterCount], "sorted_inter_count"),
-      (exprs: Seq[Expression]) => SortedInterCount(exprs(0), exprs(1))))
+    GraftExtensions.Functions.foreach { case (name, clazz, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(clazz.getName, name), builder))
+    }
     // the portable conv(substring(md5(x),1,15),16,10) idiom executes as
     // the native expression even when written longhand in SQL
     e.injectOptimizerRule(_ => FingerprintRewrite)
   }
+}
+
+object GraftExtensions {
+
+  /** SQL name, expression class (for the function's `ExpressionInfo`)
+    * and builder of every native function. */
+  val Functions: Seq[(String, Class[_], FunctionBuilder)] = Seq(
+    ("dot_product", classOf[DotProduct], e => DotProduct(e(0), e(1))),
+    ("lsh_sig", classOf[LshSignature],
+      e => LshSignature(e.head, LshSignature.DefaultPlanes)),
+    ("rolling_hash", classOf[RollingHash], e => RollingHash(e.head)),
+    ("minhash_agg", classOf[MinHashAgg], MinHashAgg.builder),
+    ("space_saving_agg", classOf[SpaceSavingAgg], SpaceSavingAgg.builder),
+    ("count_min_agg", classOf[CountMinAgg], CountMinAgg.builder),
+    ("count_sketch_agg", classOf[CountSketchAgg], CountSketchAgg.builder),
+    ("topk_agg", classOf[TopKAgg], TopKAgg.builder),
+    ("hll_agg", classOf[HllAgg], HllAgg.builder),
+    ("hll_merge_agg", classOf[HllMergeAgg], HllMergeAgg.builder),
+    ("kmv_agg", classOf[KmvAgg], KmvAgg.builder),
+    ("hb_agg", classOf[HbAgg], HbAgg.builder),
+    ("hb_merge_agg", classOf[HbMergeAgg], HbMergeAgg.builder),
+    ("hb_sketch", classOf[HbSketch], e => HbSketch(e.head)),
+    ("bloom_might_contain", classOf[BloomMightContain],
+      e => BloomMightContain(e(0), e(1))),
+    ("md5_fp60", classOf[Md5Fp60], Md5Fp60.builder),
+    ("blob_pixel_stats", classOf[BlobPixelStats], e => BlobPixelStats(e.head)),
+    ("char_run_stats", classOf[CharRunStats], e => CharRunStats(e.head)),
+    ("blob_wave_stats", classOf[BlobWaveStats], e => BlobWaveStats(e(0), e(1))),
+    ("blob_phash", classOf[BlobPhash], e => BlobPhash(e(0), e(1))),
+    ("img_gen", classOf[ImgGen], e => ImgGen(e(0), e(1), e(2), e(3))),
+    ("cdc_bounds", classOf[CdcBoundsExpr], CdcBoundsExpr.builder),
+    ("multi_match_stats", classOf[MultiMatchStats], e => MultiMatchStats(e.head)),
+    ("sorted_inter_count", classOf[SortedInterCount],
+      e => SortedInterCount(e(0), e(1))))
 }

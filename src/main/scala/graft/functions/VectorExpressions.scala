@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -92,6 +91,13 @@ case class LshSignature(child: Expression, planes: Int)
     copy(child = newChild)
 }
 
+object LshSignature {
+
+  /** 8 hyperplanes → 256 LSH buckets (the q35/q43 contract): the one
+    * plane count `lsh_sig` binds. */
+  val DefaultPlanes = 8
+}
+
 /** Polynomial rolling hash over a string's Unicode CODE POINTS:
   * acc₀ = cp₀; accᵢ = (accᵢ₋₁ · 31 + cpᵢ) mod (2³¹−1).
   * The classic content-defined-chunking / Rabin-style fingerprint
@@ -126,51 +132,4 @@ case class RollingHash(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): RollingHash =
     copy(child = newChild)
-}
-
-object VectorFunctions {
-
-  /** 8 hyperplanes → 256 LSH buckets (the q35/q43 contract). */
-  val DefaultAnnPlanes = 8
-
-  /** Register dot_product / lsh_sig / rolling_hash on this session so
-    * `selectExpr` can use them — the runtime fallback for sessions built
-    * without [[GraftExtensions]]. Skips names that already exist
-    * (idempotent AND quiet — no replace warnings per query). lsh_sig
-    * always binds [[DefaultAnnPlanes]]: taking a planes parameter here
-    * would be a trap, because a session built with GraftExtensions has
-    * the name registered already and the parameter would be silently
-    * ignored — there is ONE plane count, defined in one place. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def add(name: String,
-        builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          org.apache.spark.sql.catalyst.expressions.Expression): Unit =
-      if (!reg.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-    add("dot_product", exprs => DotProduct(exprs(0), exprs(1)))
-    add("lsh_sig", exprs => LshSignature(exprs.head, DefaultAnnPlanes))
-    add("rolling_hash", exprs => RollingHash(exprs.head))
-    add("minhash_agg", MinHashAgg.builder)
-    add("space_saving_agg", SpaceSavingAgg.builder)
-    add("count_min_agg", CountMinAgg.builder)
-    add("count_sketch_agg", CountSketchAgg.builder)
-    add("topk_agg", TopKAgg.builder)
-    add("hll_agg", HllAgg.builder)
-    add("hll_merge_agg", HllMergeAgg.builder)
-    add("hb_agg", HbAgg.builder)
-    add("hb_merge_agg", HbMergeAgg.builder)
-    add("hb_sketch", exprs => HbSketch(exprs.head))
-    add("bloom_might_contain", exprs => BloomMightContain(exprs(0), exprs(1)))
-    add("md5_fp60", Md5Fp60.builder)
-    add("blob_pixel_stats", exprs => BlobPixelStats(exprs.head))
-    add("char_run_stats", exprs => CharRunStats(exprs.head))
-    add("blob_wave_stats", exprs => BlobWaveStats(exprs(0), exprs(1)))
-    add("blob_phash", exprs => BlobPhash(exprs(0), exprs(1)))
-    add("img_gen", exprs => ImgGen(exprs(0), exprs(1), exprs(2), exprs(3)))
-    add("cdc_bounds", CdcBoundsExpr.builder)
-    add("multi_match_stats", exprs => MultiMatchStats(exprs.head))
-    add("sorted_inter_count", exprs => SortedInterCount(exprs(0), exprs(1)))
-  }
 }

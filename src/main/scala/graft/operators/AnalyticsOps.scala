@@ -1282,7 +1282,6 @@ object AnalyticsOps {
     * q237/q242 sampling discipline) so the quadratic budget is fixed
     * per source regardless of corpus size. */
   def kendallTau(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val d = EtlOps.t(s, dir, "documents")
       .filter(call_function("md5_fp60",
         concat(lit("tau:"), col("doc_id").cast("string")))
@@ -1709,7 +1708,6 @@ object AnalyticsOps {
     * per stream partition; zero joins of unit-sized frames. */
   def psmMatching(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(s)
     val treatSql = "CAST(md5_fp60(concat('psm:', " +
       "CAST(user_id AS STRING))) % 100 < 80 - 10 * (user_id % 7) " +
       "AS INT)"
@@ -2087,7 +2085,6 @@ object AnalyticsOps {
     * Scale (100 TB): one user collapse, one 7-row stratum collapse;
     * the audit is strata-sized algebra forever. */
   def propensityOverlap(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val treatSql = "CAST(md5_fp60(concat('psm:', " +
       "CAST(user_id AS STRING))) % 100 < 80 - 10 * (user_id % 7) " +
       "AS INT)"
@@ -2584,7 +2581,6 @@ object AnalyticsOps {
     * constant ×K explode, then a (k, arm) cell collapse — the audit
     * costs K× a user scan of booleans, never K× the event log. */
   def aaCalibration(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val users = EtlOps.events(s, dir)
       .groupBy("user_id")
       .agg(max(when(col("value") > AbConvValue, 1L).otherwise(0L))
@@ -2895,7 +2891,6 @@ object AnalyticsOps {
     * (map-combinable) and an enum-keyed rollup; the gate costs one
     * pass regardless of experiment count. */
   def srmGate(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val units = EtlOps.events(s, dir)
       .select(col("event_type").as("experiment"), col("user_id").as("u"))
       .distinct()
@@ -2987,7 +2982,6 @@ object AnalyticsOps {
     * the curve never materializes per-sample state and the estimator
     * arithmetic is in-row. */
   def passAtK(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val per = CurationOps.cutLineage(EtlOps.events(s, dir)
       .select(col("user_id").as("u"), col("event_id").as("eid"))
       .withColumn("ok", (call_function("md5_fp60",

@@ -563,7 +563,6 @@ object ClusterOps {
     * but the 64-long partials — the cheapest possible drift probe on
     * an embedding corpus. */
   def embeddingDrift(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val v = EtlOps.t(s, dir, "embeddings")
       .selectExpr("label",
         "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb")

@@ -605,7 +605,6 @@ object CurationOps {
     * a per-row codegen'd expression on the |cells|-sized result — the
     * privacy layer adds zero exchanges. */
   def dpRelease(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val cells = EtlOps.events(s, dir)
       .select(col("event_type"), to_date(col("ts")).as("day"))
       .groupBy("event_type", "day").agg(count(lit(1)).as("n_true"))
@@ -680,7 +679,6 @@ object CurationOps {
     * per-row codegen noise — the user-level guarantee adds exactly one
     * aggregate level over q157. */
   def userLevelDp(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val perUser = EtlOps.events(s, dir)
       .select(col("event_type"), to_date(col("ts")).as("day"),
         col("user_id"))
@@ -928,7 +926,6 @@ object CurationOps {
     * footgun this replaces (`ORDER BY rand() LIMIT k`) range-shuffles
     * the corpus. */
   def bottomKSample(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     t(s, dir, "documents").select(col("doc_id"), col("source"))
       .withColumn("priority", call_function("md5_fp60",
         concat(lit("smp:"), col("doc_id").cast("string"))))
@@ -1448,7 +1445,6 @@ object CurationOps {
     * a |clusters|-row rollup; no policy pays its own corpus scan. */
   def survivorPolicy(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(s)
     val members = DedupOps.corpusSpread(s, dir)
       .withColumn("orig_id", col("doc_id") % DedupOps.CopyOffset)
       .withColumn("n_toks", size(split(col("text"), " ")).cast("bigint"))
@@ -1645,7 +1641,6 @@ object CurationOps {
     * bottom-k is a rank window over cells (quota-bounded output). */
   def quotaSample(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(s)
     val d = t(s, dir, "documents").select(col("doc_id"), col("lang"),
       least(floor(TextOps.qualityOf(col("text")) * 5), lit(4L))
         .cast("bigint").as("band"),
@@ -2202,7 +2197,6 @@ object CurationOps {
     * against one broadcast threshold scalar. */
   def conformalGate(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(s)
     val d = t(s, dir, "documents")
       .withColumn("toks", split(col("text"), " "))
       .select(col("doc_id"), col("source"),
@@ -2301,7 +2295,6 @@ object CurationOps {
     * the audit is one map-combined (type) collapse — privacy adds zero
     * exchanges, the defining advantage of local DP at scale. */
   def rrDebias(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val ev = t(s, dir, "events")
     val types = ev.select(col("event_type").as("v")).distinct()
       .withColumn("idx", row_number().over(

@@ -573,7 +573,6 @@ object DedupOps {
     * the TypedImperativeAggregate tier of the custom-operator ladder,
     * the shape to prefer when signatures grow to 128+ permutations. */
   def minhashSignaturesNative(sh: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(sh.sparkSession)
     val withX = sh.withColumn("mh_x",
       md5Fingerprint60(col("shingle")) % MinhashPrime)
     val agged = withX.groupBy("doc_id")
@@ -596,7 +595,6 @@ object DedupOps {
     * (doc_id, sig, n_sh, shs) frame; project with [[sigCols]] /
     * (doc_id, shs) for the classic shapes. */
   private[graft] def sigsWithDocSh(sh: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(sh.sparkSession)
     sh.withColumn("mh_x", md5Fingerprint60(col("shingle")) % MinhashPrime)
       .groupBy("doc_id")
       .agg(expr(s"minhash_agg(mh_x, $NumPerms, $MinhashPrime)").as("sig"),
@@ -1674,7 +1672,6 @@ object DedupOps {
     * order-independent, so the bit pattern is deterministic for a
     * given corpus regardless of partitioning). */
   def bloomIngestDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     // copies of EVEN documents only, split on mod 7: the batch then
     // mixes true dups (docs whose twin landed in history) with
     // genuinely new docs (odd originals) — mod 5 would put every
@@ -1903,7 +1900,6 @@ object DedupOps {
     * proportional to corpus size — the chunk-hash aggregate IS the
     * chunk-store index build. */
   def cdcChunkDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val d = t(s, dir, "documents")
       .select(col("doc_id"), col("source"), col("text"))
     val corpus = d.unionAll(d.select(
@@ -2037,7 +2033,6 @@ object DedupOps {
     * linear truth-pair join; no candidate blowup anywhere — this audit
     * is how you pick the key BEFORE paying the candidate join. */
   def blockingAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val corpus = corpusNear(s, dir).persist()
     val n = corpus.count()
     val totalPairs = n * (n - 1) / 2
@@ -2238,7 +2233,6 @@ object DedupOps {
     * regardless of corpus duplication structure. The production
     * banding run this plans for is priced separately (q31/q118). */
   def lshSCurve(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val corpus = corpusSpread(s, dir)
     val sh = shingles(corpus).persist()
     val shk = sh.withColumn("base", col("doc_id") % CopyOffset)
@@ -2829,7 +2823,6 @@ object DedupOps {
     val stackExpr = "stack(3, " + norms.zipWithIndex.map {
       case (n, i) => s"$i, md5_fp60($n)" }.mkString(", ") +
       ") AS (layer, fp)"
-    graft.functions.VectorFunctions.register(s)
     val trainFps = train.selectExpr(stackExpr)
       .select("layer", "fp").distinct()
     val valFps = valD.selectExpr("doc_id", stackExpr)

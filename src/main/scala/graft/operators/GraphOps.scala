@@ -164,12 +164,16 @@ object GraphOps {
     val ew = edges(s, dir)
       .withColumn("out_deg", count(lit(1)).over(w))
       .persist()
-    val nodes = ew.select(col("src").as("node")).dropDuplicates("node")
-      .persist()
-    val deg = ew.groupBy("src").agg(max(col("out_deg")).as("deg"))
-    val seeds = deg.orderBy(col("deg").desc, col("src"))
-      .limit(PprSeeds).select(col("src").as("node"), lit(true).as("seed"))
-    val nv = nodes.count() // |V| — a scalar, the one sanctioned collect
+    // |V| — a scalar, observed on the node cut
+    val (nodes, Seq(nv)) = CurationOps.cutObserved(
+      ew.select(col("src").as("node")).dropDuplicates("node"),
+      count(lit(1)))
+    // cut once, so no rank generation and not the final action (which
+    // runs after ew is freed) re-derives the seeds from the edges
+    val seeds = CurationOps.cutLineage(ew.groupBy("src")
+      .agg(max(col("out_deg")).as("deg"))
+      .orderBy(col("deg").desc, col("src")).limit(PprSeeds)
+      .select(col("src").as("node"), lit(true).as("seed")))
     val teleport = 0.15 * nv.toDouble / PprSeeds
     // initial ranks: all mass on the seeds (the personalized start)
     val (ranks, _) = CurationOps.iterateCut(
@@ -188,7 +192,7 @@ object GraphOps {
           (when(col("seed"), lit(teleport)).otherwise(lit(0.0)) +
             lit(0.85) * (col("sfp").cast("double") / lit(1e12))).as("pr"))
     }
-    ew.unpersist(); nodes.unpersist()
+    ew.unpersist()
     ranks.last.join(broadcast(seeds), Seq("node"), "left")
       .orderBy(col("pr").desc, col("node")).limit(TopK)
       .select(col("node"), round(col("pr"), 6).as("ppr"),
@@ -451,49 +455,23 @@ object GraphOps {
     // constraint machinery (PruneFilters) into a 15 s driver-side
     // stall re-canonicalizing alias constraints per predicate — one
     // opaque array column keeps the constraint set constant-size.
-    val projArr = "array(" + (1 to SimilarityOps.ProjDims).map { p =>
-      VecSql.projComp("emb", p, spark = true)
-    }.mkString(", ") + ") AS proj"
-    val base = knnVectors(s, dir)
-    val sig = if (planes == 0) "CAST(0 AS BIGINT)"
-      else VecSql.lshSig("emb", planes, spark = true)
-    // a lineage cut, not persist: the signature + projection subtree
-    // is a ~1400-node expression tree, and a persisted frame still
-    // carries that full logical plan into every downstream self-join
+    val proj = array((1 to SimilarityOps.ProjDims)
+      .map(VecSql.projCol(col("emb"), _)): _*)
+    // a lineage cut, not persist: a persisted frame still carries the
+    // signature + projection subtree into every downstream self-join
     // branch — Catalyst re-canonicalizes each copy per optimizer pass
     // and DRIVER planning time, not execution, dominated the composed
-    // query (measured 20 s of q86's 24 s at sf0.1). Checkpointing cuts
-    // the lineage to a LogicalRDD, so every downstream plan is
-    // constant-size. The index build runs once, eagerly, through
-    // CurationOps.cutLineage (localCheckpoint, or a reliable checkpoint
-    // when a checkpoint dir is configured). pnorm is derived in a second
-    // step so CollapseProject can't inline the 16 chains into the sqrt
+    // query (measured 20 s of q86's 24 s at sf0.1 when the components
+    // were 64-term chains). Checkpointing cuts the lineage to a
+    // LogicalRDD, so every downstream plan is constant-size. The index
+    // build runs once, eagerly, through CurationOps.cutLineage
+    // (localCheckpoint, or a reliable checkpoint when a checkpoint dir
+    // is configured). pnorm is derived in a second step so
+    // CollapseProject can't inline the 16 components into the sqrt
     // inside v0's own plan.
-    // wholestage codegen is disabled JUST for this eager materialize:
-    // Janino spends ~1 s compiling the 1400-term generated method on
-    // every construction (the source embeds fresh expr ids, so the
-    // compile cache never hits), while interpreted eval of 2000 rows
-    // is <0.1 s — codegen costs 2× what it saves here. The toggle is
-    // safe because the cut executes before the finally; the
-    // interpreted path has identical IEEE semantics.
-    // Restore-or-unset: reading the conf returns the DEFAULT for an
-    // unset key, so blindly re-setting the read value would leave a
-    // previously-unset key explicitly pinned. NOTE the flip is
-    // session-wide and not thread-safe — a query planned concurrently in
-    // this SparkSession during the eager checkpoint below would compile
-    // without whole-stage codegen; callers planning queries from other
-    // threads should use a cloned session (`spark.newSession()`).
-    val codegenKey = "spark.sql.codegen.wholeStage"
-    val codegenWasSet = s.conf.getAll.contains(codegenKey)
-    val codegenWas = s.conf.get(codegenKey, "true")
-    s.conf.set(codegenKey, "false")
-    val v0 = try {
-      CurationOps.cutLineage(base
-        .selectExpr("vec_id", "emb", "norm", s"$sig AS bucket", projArr))
-    } finally {
-      if (codegenWasSet) s.conf.set(codegenKey, codegenWas)
-      else s.conf.unset(codegenKey)
-    }
+    val v0 = CurationOps.cutLineage(knnVectors(s, dir).select(col("vec_id"),
+      col("emb"), col("norm"), VecSql.lshSigCol(col("emb"), planes).as("bucket"),
+      proj.as("proj")))
     val v = v0.selectExpr("vec_id", "bucket", "proj",
       "sqrt(dot_product(proj, proj)) AS pnorm")
     val a = v.select(col("vec_id").as("qa"), col("bucket"),
@@ -609,7 +587,7 @@ object GraphOps {
     import VecSql.dot
     val pd = SimilarityOps.ProjDims
     val proj = (1 to pd).map { p =>
-      f"${VecSql.projComp("emb", p, spark = false)} AS d$p%02d"
+      f"${VecSql.projComp("emb", p)} AS d$p%02d"
     }.mkString(",\n    ")
     val pnorm = "sqrt(" + (1 to pd).map(p => f"d$p%02d * d$p%02d")
       .mkString(" + ") + ")"
@@ -619,7 +597,7 @@ object GraphOps {
        |  FROM embeddings WHERE vec_id < $KnnCap),
        |v1 AS (SELECT vec_id, emb,
        |    sqrt(${dot("emb", "emb", spark = false)}) AS norm,
-       |    ${VecSql.lshSig("emb", KnnPlanes, spark = false)} AS bucket,
+       |    ${VecSql.lshSig("emb", KnnPlanes)} AS bucket,
        |    $proj
        |  FROM v0),
        |v AS (SELECT *, $pnorm AS pnorm FROM v1),
@@ -785,7 +763,6 @@ object GraphOps {
     * near-dup partition in batch time. */
   def incrementalCc(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(s)
     val nodes = EtlOps.t(s, dir, "documents").select(col("doc_id"),
         (col("doc_id") % IncrCcNewMod === 0).as("is_new"),
         (call_function("md5_fp60",
@@ -2101,7 +2078,6 @@ object GraphOps {
     artifacts(s, dir).hb
 
   private def hbRoundsBuild(s: SparkSession, dir: String): HbRounds = {
-    graft.functions.VectorFunctions.register(s)
     val m = ProfileOps.HllM
     val und = cooccurEdges(s, dir)
     val ed = und.select(col("ua").as("src"), col("ub").as("dst"))
@@ -2353,7 +2329,6 @@ object GraphOps {
     * the one (level, node)-keyed pass; the driver holds ONE metadata
     * row (kept count per threshold). */
   def randomFailure(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val und = cooccurEdges(s, dir)
     val thrs = FailFracs.map(f => math.round(f * 1000).toInt)
     // the kept-node count at every threshold, observed on the node cut

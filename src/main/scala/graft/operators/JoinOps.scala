@@ -92,7 +92,6 @@ object JoinOps {
     * plans; at 100 TB it is the difference between shuffling 100 TB and
     * shuffling the selectivity. */
   def bloomPruneJoin(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val urgent = EtlOps.t(s, dir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"), col("o_orderdate"))

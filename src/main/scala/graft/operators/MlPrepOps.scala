@@ -1381,7 +1381,6 @@ object MlPrepOps {
     * pass itself is the one vocab-aggregate NB shape. Survivor frames
     * are metadata; cutLineage per rung (data-dependent iteration). */
   def successiveHalving(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val scored = nbScoresAll(s, dir)
       .selectExpr("doc_id", "pos", "score_fp",
         "md5_fp60(CAST(doc_id AS STRING)) % 8 AS slice")
@@ -2693,7 +2692,6 @@ object MlPrepOps {
     * and the range-partitioned global rank. Nothing quadratic,
     * nothing driver-sized but the 64 λ rows and partition offsets. */
   def dsirSelection(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val b = DsirBuckets
     val d = EtlOps.t(s, dir, "documents").select("doc_id", "text")
     val pool = d.selectExpr("doc_id", "doc_id % 4 = 0 AS planted",

@@ -146,7 +146,6 @@ object MultimodalOps {
     // per row, ~30M element-ops per corpus pass, the dominant cost of
     // q159/q169 (the blob_phash argument one stage earlier). Byte
     // equality with the HOF form is spec-pinned.
-    graft.functions.VectorFunctions.register(s)
     imageCorpusBase(s, dir).select(col("doc_id"),
       expr(s"img_gen(src_id, pert, $PhashCells, $PhashCellPx)").as("img"))
   }
@@ -194,7 +193,6 @@ object MultimodalOps {
     // equivalence reference; it evaluates interpreted at ~1 µs per
     // element-op, which is invisible under count() (projection pruning)
     // but dominates real evaluation at scale.
-    graft.functions.VectorFunctions.register(imgs.sparkSession)
     imgs.select(col("doc_id"),
       expr(s"blob_phash(img, $PhashCellPx)").as("phash"))
   }
@@ -322,7 +320,6 @@ object MultimodalOps {
     // original all-HOF form evaluated interpreted at ~1 µs/element-op —
     // 54–60 s for 500k images at the synthetic 100×, invisible under
     // count() because Spark prunes unused projections (BENCH_NOTES).
-    graft.functions.VectorFunctions.register(s)
     val entropyFp =
       s"aggregate(st.hist, CAST(0 AS BIGINT), (acc, c) -> acc + " +
         s"IF(c > 0, CAST(floor((-(CAST(c AS DOUBLE) / $n.0)) * " +
@@ -389,7 +386,6 @@ object MultimodalOps {
     // native blob_wave_stats: one byte loop per track (the all-HOF form
     // was 79–87 s for 500k tracks at 100×, hidden by count() pruning —
     // see blob_pixel_stats / BENCH_NOTES)
-    graft.functions.VectorFunctions.register(s)
     audioCorpus(s, dir)
       .select(col("doc_id"),
         expr(s"blob_wave_stats(wav, $AudioMid)").as("st"))
@@ -580,7 +576,6 @@ object MultimodalOps {
     // interpreted lambda calls per row under the md5 — img_gen emits
     // the identical bytes (ASCII band, so string-cast-to-binary and
     // direct binary md5 agree) in one codegen'd static call
-    graft.functions.VectorFunctions.register(s)
     val keyed = corpus.select(col("doc_id"), col("source"),
       md5(expr(
         s"img_gen(img_src, false, $PhashCells, $PhashCellPx)")).as("ikey"),

@@ -472,7 +472,7 @@ object OracleGen {
        |    list_transform(emb, x -> x * 1.001) AS emb FROM base),
        |v AS (SELECT vec_id, emb,
        |    sqrt(${dot("emb", "emb", spark = false)}) AS norm,
-       |    (${lshSig("emb", SimilarityOps.AnnPlanes, spark = false)}) AS bucket
+       |    (${lshSig("emb", SimilarityOps.AnnPlanes)}) AS bucket
        |  FROM corpus),
        |s AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        |    (${dot("a.emb", "b.emb", spark = false)}) / (a.norm * b.norm) AS cos
@@ -501,7 +501,7 @@ object OracleGen {
        |  FROM embeddings),
        |n AS (SELECT vec_id, emb,
        |    sqrt(${dot("emb", "emb", spark = false)}) AS norm,
-       |    (${lshSig("emb", SimilarityOps.AnnPlanes, spark = false)}) AS bucket
+       |    (${lshSig("emb", SimilarityOps.AnnPlanes)}) AS bucket
        |  FROM v),
        |s AS (SELECT q.vec_id AS q_id, c.vec_id AS cand_id,
        |    (${dot("q.emb", "c.emb", spark = false)}) / (q.norm * c.norm) AS cos

@@ -224,7 +224,6 @@ object ProfileOps {
     * satisfy true ≤ est ≤ true + err. The oracle recomputes the exact
     * scalars and expects the guarantee booleans to be literally TRUE. */
   def heavyHitters(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val keyed = EtlOps.events(s, dir)
       .select(floor(sqrt(col("event_id") % 10000)).cast("long").as("k"))
       .persist()
@@ -280,7 +279,6 @@ object ProfileOps {
     * shuffles the key stream; the exact side exists only to audit it
     * (and is itself a 100-group aggregate here). */
   def countMinAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val keyed = EtlOps.events(s, dir)
       .select(floor(sqrt(col("event_id") % 10000)).cast("long").as("k"))
     def idx = array((0 until CmsDepth).map(j =>
@@ -819,7 +817,6 @@ object ProfileOps {
     * stream never sorts. */
   def snapshotKsDrift(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(s)
     val d = t(s, dir, "documents").select(col("source"),
       TextOps.wsTokenCount(col("text")).as("toks"),
       (TextOps.md5Fingerprint60(
@@ -929,7 +926,6 @@ object ProfileOps {
     * the standard way to put error bars on anything map-combinable
     * without a second pass. */
   def bootstrapCi(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val reps = t(s, dir, "documents")
       .select(col("source"), col("doc_id"), col("n_chars"))
@@ -1339,7 +1335,6 @@ object ProfileOps {
     * (map-combinable), a |sources|·bins dense frame, and per-row
     * codegen terms. */
   def psiDrift(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val d = EtlOps.events(s, dir)
       .select(col("event_type").as("source"), col("value"),
         when(col("event_type") === "error", col("value") < 34.0)
@@ -1494,7 +1489,6 @@ object ProfileOps {
     * the distinct-count profile that never ships the key stream; the
     * exact side (a full key shuffle) exists only to audit it. */
   def hllAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val ev = EtlOps.events(s, dir)
     val keyed = ev.select(lit("event_ids").as("scope"),
         lit("all").as("grp"), col("event_id").cast("string").as("k"))
@@ -1834,7 +1828,6 @@ object ProfileOps {
     * scope regardless of input size; everything downstream is dense-grid
     * arithmetic on |scopes|·9 rows. */
   def benfordAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val keyed =
       t(s, dir, "lineitem").selectExpr("'lineitem_extprice' AS scope",
           s"${benfordDigitSql("l_extendedprice")} AS digit")
@@ -2042,7 +2035,6 @@ object ProfileOps {
     * histogram and every estimate are |buckets|-sized arithmetic. */
   def histSelectivity(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(s)
     val ord = t(s, dir, "orders")
     // v = price² — a deterministic monotone transform giving the
     // SKEWED density a histogram exists for (the raw column is
@@ -2201,7 +2193,6 @@ object ProfileOps {
     * union costs a 256-element map per pair — no data contact. The
     * exact sides exist only to audit. */
   def hllSetAlgebra(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val ev = EtlOps.events(s, dir).persist()
     val keyed = HllSetDefs.map { case (name, pred) =>
       ev.filter(expr(pred)).select(lit(name).as("set_name"),
@@ -3740,7 +3731,6 @@ object ProfileOps {
     * [[graft.functions.CountMinAgg]]); the exact side is the
     * 100-group audit baseline. */
   def countSketchAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val keyed = EtlOps.events(s, dir)
       .select(floor(sqrt(col("event_id") % 10000)).cast("long").as("k"))
     def hcol(j: Int) = call_function("md5_fp60",
@@ -3847,7 +3837,6 @@ object ProfileOps {
     * scale it would be sampled or dropped, and the sketch columns are
     * the product. */
   def kmvSetAlgebra(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val k = KmvK
     // element universe: distinct word-trigram shingles per source (the
     // bare vocab is ~31 tokens/source on this corpus — smaller than k,
@@ -4006,7 +3995,6 @@ object ProfileOps {
     * user) ×7 — linear but user-stream-sized — and exists here only as
     * the audit; production serves the sketch column. */
   def slidingHllDistinct(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val w6 = SlideWinDays - 1
     val du = EtlOps.events(s, dir)
       .selectExpr(

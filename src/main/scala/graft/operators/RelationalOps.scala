@@ -152,7 +152,6 @@ object RelationalOps {
     * aggregate ships exactly k·|groups| longs and compares against a
     * k-sized buffer. Selection beats sorting when k ≪ group size. */
   def topkNative(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     EtlOps.events(s, dir)
       .select(col("user_id"), col("event_id"),
         floor(col("value") * 1e6).cast("bigint").as("score_fp"))

@@ -66,7 +66,7 @@ object ScaleOps {
       sortCols: Column*): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
-    val nParts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val nParts = s.sessionState.conf.numShufflePartitions
     val parted = df.repartitionByRange(nParts, sortCols: _*)
       .withColumn("__pid", spark_partition_id())
       .persist()
@@ -98,7 +98,7 @@ object ScaleOps {
       outCol: String, sortCols: Column*): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
-    val nParts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val nParts = s.sessionState.conf.numShufflePartitions
     val parted = df.repartitionByRange(nParts, sortCols: _*)
       .withColumn("__pid", spark_partition_id())
       .persist()
@@ -588,7 +588,7 @@ object ScaleOps {
       // piggybacks on the cache materialization that touches every row
       // anyway, and both downstream passes (digest + drill-down) then
       // run at full width
-      .repartition(s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      .repartition(s.sessionState.conf.numShufflePartitions)
       .persist()
     // both snapshots digest in ONE aggregate pass (two bit_xor columns
     // of the same groupBy) — the two-digest formulation paid a second
@@ -746,7 +746,6 @@ object ScaleOps {
     * because the AUDIT favors the declarative form the oracle can
     * replay. */
   def reshardAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val docs = t(s, dir, "documents").select(
       call_function("md5_fp60",
         concat(lit("shard:"), col("doc_id").cast("string"))).as("fp"))
@@ -923,7 +922,6 @@ object ScaleOps {
     * priced). */
   def encodingAdvisor(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(s)
     val li = t(s, dir, "lineitem")
       .withColumn("skhash", call_function("md5_fp60",
         concat(col("l_orderkey").cast("string"), lit("-"),
@@ -1075,7 +1073,6 @@ object ScaleOps {
     * 11); the membership join is an equi-join on (config, position) —
     * the simulation costs what building the real filter costs. */
   def bloomPlanner(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val keys = EtlOps.t(s, dir, "orders")
       .select(col("o_orderkey").as("key")).persist()
     val cfg = BloomConfigs.map { case (b, k, _) => (b, k) }
@@ -1187,7 +1184,6 @@ object ScaleOps {
     * bounding K. */
   def missRatioCurve(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(s)
     val acc = EtlOps.t(s, dir, "events")
       .filter(call_function("md5_fp60", concat(lit("mrc:"),
         col("user_id").cast("string"))) % MrcSampleMod === 0)
@@ -1478,7 +1474,6 @@ object ScaleOps {
     * sample is hash % 100 < r, so conditional aggregation nests the
     * samples); output is |rates|·|types| rows. */
   def sampleAqp(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val ev = EtlOps.t(s, dir, "events").selectExpr("event_type AS et",
       "CAST(round(value * 100, 0) AS BIGINT) AS v",
       "CAST(md5_fp60(concat('aqp:', CAST(event_id AS STRING))) % 100 " +
@@ -2412,7 +2407,6 @@ object ScaleOps {
     * compares the two argmaxes computed in the SAME pass — one corpus
     * read, no joins against state. */
   def rendezvousShards(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val n = HrwShards
     val docs = EtlOps.t(s, dir, "documents")
       .select(col("doc_id"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -9,6 +9,9 @@ import org.apache.spark.sql.expressions.Window
   * access syntax), so the expression tree — and therefore every IEEE
   * operation order — is identical on both engines: results are
   * bit-reproducible without tolerances. Sums are left-associated chains.
+  * The weighted sums ([[lshSig]], [[projComp]]) are the exception: Spark
+  * evaluates them as native `dot_product`s over the same weights in the
+  * same op order ([[lshSigCol]], [[projCol]]).
   */
 object VecSql {
   val Dims = 64
@@ -22,19 +25,49 @@ object VecSql {
       s"CAST(${el(a, j, spark)} AS DOUBLE) * CAST(${el(b, j, spark)} AS DOUBLE)")
       .mkString(" + ")
 
-  /** Random-hyperplane LSH signature: `planes` sign bits from LCG-derived
-    * plane weights. Weights are integer literals divided by 2^31 so both
-    * SQL dialects parse the exact same doubles (no float-literal
-    * formatting involved). */
-  def lshSig(embCol: String, planes: Int, spark: Boolean,
-      dims: Int = Dims): String =
+  /** Numerator k of the LCG weight k/2³¹ − 0.5 at flat index i. */
+  private def lcg(i: Long): Long = (1103515245L * i + 12345L) % 2147483648L
+
+  /** Weight numerator of LSH plane p (0-based) at element j (1-based). */
+  private def planeK(p: Int, j: Int): Long = lcg(p.toLong * Dims + (j - 1))
+
+  /** Weight numerator of projection component p (1-based) at element j
+    * (1-based): the [[planeK]] construction seed-offset by a prime, so
+    * the projection matrix is distinct from the LSH planes. */
+  private def projK(p: Int, j: Int): Long = lcg(7919L + (p - 1) * Dims + (j - 1))
+
+  /** The oracle renders weight k as the literal `(k.0/2147483648.0 -
+    * 0.5)`, which DuckDB evaluates to exactly this double. Spark would
+    * read the same text as DECIMAL arithmetic, so the Spark side takes
+    * the weights as double literals from here instead. */
+  private def weight(k: Long): Double = k / 2147483648.0 - 0.5
+
+  private def weightTerm(k: Long, embCol: String, j: Int): String =
+    s"($k.0/2147483648.0 - 0.5) * CAST(${el(embCol, j, spark = false)} AS DOUBLE)"
+
+  /** Spark: Σ_j w_j·x_j as one native `dot_product` against the weight
+    * row. Its loop accumulates 0.0 + w₁x₁ + … left to right, the
+    * oracle's left-associated chain, so results stay bit-identical —
+    * and the whole-stage code stays one small loop per component. */
+  private def weightedDot(emb: Column, ks: Seq[Long]): Column =
+    call_function("dot_product", emb, typedLit(ks.map(weight)))
+
+  /** Random-hyperplane LSH signature, DuckDB oracle text: `planes` sign
+    * bits over the [[planeK]] weights. */
+  def lshSig(embCol: String, planes: Int): String =
     (0 until planes).map { p =>
-      val dotp = (1 to dims).map { j =>
-        val k = (1103515245L * (p * dims + (j - 1)) + 12345L) % 2147483648L
-        s"($k.0/2147483648.0 - 0.5) * CAST(${el(embCol, j, spark)} AS DOUBLE)"
-      }.mkString(" + ")
+      val dotp = (1 to Dims).map(j => weightTerm(planeK(p, j), embCol, j))
+        .mkString(" + ")
       s"(CASE WHEN ($dotp) > 0 THEN ${1L << p} ELSE 0 END)"
     }.mkString(" + ")
+
+  /** [[lshSig]] for Spark, as BIGINT; 0 planes put every vector in
+    * bucket 0. */
+  def lshSigCol(emb: Column, planes: Int): Column =
+    (0 until planes).map { p =>
+      when(weightedDot(emb, (1 to Dims).map(planeK(p, _))) > 0, lit(1L << p))
+        .otherwise(lit(0L))
+    }.reduceOption(_ + _).getOrElse(lit(0L))
 
   /** Per-vector min / max over all dims as variadic least/greatest —
     * exact comparisons, so no fp-order concern. */
@@ -71,18 +104,15 @@ object VecSql {
       s"abs(CAST(${el(c, j, spark)} AS DOUBLE) - (vmin + (${qCode(c, j, spark)} + 0.5) * sc))"
     }.mkString(", ") + ")"
 
-  /** Johnson–Lindenstrauss projection component p (1-based):
-    * Σ_j w(p,j)·x_j with LCG-derived weights as integer literals over
-    * 2³¹ (the [[lshSig]] construction, seed-offset by a prime so the
-    * projection matrix is distinct from the LSH planes), left-
-    * associated for one fixed IEEE op order on both engines. */
-  def projComp(embCol: String, p: Int, spark: Boolean,
-      dims: Int = Dims): String =
-    (1 to dims).map { j =>
-      val k = (1103515245L * (7919L + (p - 1) * dims + (j - 1)) + 12345L) %
-        2147483648L
-      s"($k.0/2147483648.0 - 0.5) * CAST(${el(embCol, j, spark)} AS DOUBLE)"
-    }.mkString(" + ")
+  /** Johnson–Lindenstrauss projection component p (1-based), DuckDB
+    * oracle text: Σ_j w(p,j)·x_j over the [[projK]] weights,
+    * left-associated for one fixed IEEE op order. */
+  def projComp(embCol: String, p: Int): String =
+    (1 to Dims).map(j => weightTerm(projK(p, j), embCol, j)).mkString(" + ")
+
+  /** [[projComp]] for Spark. */
+  def projCol(emb: Column, p: Int): Column =
+    weightedDot(emb, (1 to Dims).map(projK(p, _)))
 }
 
 /** Similarity-search operators over the embeddings table: brute-force
@@ -94,7 +124,6 @@ object VecSql {
 object SimilarityOps {
 
   import EtlOps.t
-  import graft.functions.VectorFunctions
 
   /** Structural cap for a query-/centroid-vector frame selected by a
     * unique-id predicate (`vec_id < k`, id-parity, …): the filter
@@ -116,7 +145,6 @@ object SimilarityOps {
     df.selectExpr("vec_id", "emb", "sqrt(dot_product(emb, emb)) AS norm")
 
   def baseVectors(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.register(s)
     t(s, dir, "embeddings")
       .selectExpr("vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb")
   }
@@ -288,22 +316,23 @@ object SimilarityOps {
     *
     * A pure narrow map: the matrix is compile-time literals (nothing
     * broadcast, nothing learned), each output component is one
-    * codegen'd 64-term chain, and the scan streams once — at any corpus
-    * size this runs at parquet-read speed and the smaller vectors
-    * shrink every downstream shuffle 4×. */
+    * codegen'd `dot_product` against a literal weight row, and the scan
+    * streams once — at any corpus size this runs at parquet-read speed
+    * and the smaller vectors shrink every downstream shuffle 4×. */
   def randomProjection(s: SparkSession, dir: String): DataFrame = {
     val comps = (1 to ProjDims).map { p =>
-      f"round(${VecSql.projComp("emb", p, spark = true)}, 6) AS d$p%02d"
+      round(VecSql.projCol(col("emb"), p), 6).as(f"d$p%02d")
     }
     baseVectors(s, dir)
-      .selectExpr(("vec_id" +: comps): _*)
+      .select(col("vec_id") +: comps: _*)
       .orderBy("vec_id")
   }
 
-  /** q112 oracle — the same generated chains in the DuckDB dialect. */
+  /** q112 oracle — the projection as generated chains in the DuckDB
+    * dialect. */
   def randomProjectionOracle: String = {
     val comps = (1 to ProjDims).map { p =>
-      f"round(${VecSql.projComp("emb", p, spark = false)}, 6) AS d$p%02d"
+      f"round(${VecSql.projComp("emb", p)}, 6) AS d$p%02d"
     }.mkString(",\n  ")
     s"""SELECT vec_id,
        |  $comps
@@ -331,12 +360,12 @@ object SimilarityOps {
     * costs two corpus scans regardless of scale. */
   def annRecall(s: SparkSession, dir: String): DataFrame = {
     val comps = (1 to ProjDims).map { p =>
-      f"${VecSql.projComp("emb", p, spark = true)} AS d$p%02d"
+      VecSql.projCol(col("emb"), p).as(f"d$p%02d")
     }
     val pnorm = "sqrt(" + (1 to ProjDims).map(p => f"d$p%02d * d$p%02d")
       .mkString(" + ") + ")"
     val proj = baseVectors(s, dir)
-      .selectExpr(("vec_id" +: comps): _*)
+      .select(col("vec_id") +: comps: _*)
       .selectExpr("*", s"$pnorm AS pnorm")
     val q = capped(proj.filter(col("vec_id") < 8), 8)
       .select(col("vec_id").as("q_id") +:
@@ -364,7 +393,7 @@ object SimilarityOps {
   /** q113 oracle — both rankings as generated CTEs. */
   def annRecallOracle: String = {
     val comps = (1 to ProjDims).map { p =>
-      f"${VecSql.projComp("emb", p, spark = false)} AS d$p%02d"
+      f"${VecSql.projComp("emb", p)} AS d$p%02d"
     }.mkString(",\n    ")
     val pnorm = "sqrt(" + (1 to ProjDims).map(p => f"d$p%02d * d$p%02d")
       .mkString(" + ") + ")"
@@ -401,7 +430,7 @@ object SimilarityOps {
        |ORDER BY q.q_id""".stripMargin
   }
 
-  val AnnPlanes: Int = graft.functions.VectorFunctions.DefaultAnnPlanes // 256 buckets
+  val AnnPlanes: Int = graft.functions.LshSignature.DefaultPlanes // 256 buckets
 
   /** q35 — LSH-bucketed ANN: 8 random-hyperplane sign bits → bucket;
     * candidates share the query's bucket; exact cosine + top-3 inside the
@@ -463,7 +492,6 @@ object SimilarityOps {
     * the q30/q33 demotion playbook applied to the last exact pair
     * stream that was on the production surface. */
   def maxSimRetrieval(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.register(s)
     val v = EtlOps.t(s, dir, "embeddings")
       .selectExpr("vec_id", "label",
         "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb")
@@ -532,7 +560,7 @@ object SimilarityOps {
        |  FROM embeddings),
        |n AS (SELECT vec_id, label, emb,
        |    sqrt(${VecSql.dot("emb", "emb", spark = false)}) AS norm,
-       |    (${VecSql.lshSig("emb", AnnPlanes, spark = false)}) AS bucket
+       |    (${VecSql.lshSig("emb", AnnPlanes)}) AS bucket
        |  FROM v),
        |q AS (SELECT label AS q_label, vec_id AS q_vec, emb AS emb_q,
        |    norm AS norm_q, bucket FROM n WHERE label IN ($labels)),
@@ -1036,7 +1064,6 @@ object SimilarityOps {
     * group survivors; the direct array groupBy here is the
     * oracle-replayable form) + a |labels|-row rollup. */
   def vectorGate(s: SparkSession, dir: String): DataFrame = {
-    VectorFunctions.register(s)
     val off = 1000000L
     val e = t(s, dir, "embeddings").selectExpr("vec_id", "label",
       "transform(embedding, x -> CAST(x AS DOUBLE)) AS emb")
@@ -1887,7 +1914,6 @@ object SimilarityOps {
     * downstream is feature-keyed aggregation — no pairwise kernel
     * matrix exists anywhere except the |pairs|-sized audit itself. */
   def rffKernelAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val dims = VecSql.Dims
     val wfp = s.range(RffMaxD.toLong).selectExpr("id AS i")
       .crossJoin(s.range(1, dims + 1L).selectExpr("id AS d"))

@@ -201,7 +201,6 @@ object TextOps {
     * [[graft.functions.RollingHash]] expression): the primitive behind
     * content-defined chunking; one narrow pass, no shuffle. */
   def rollingFingerprint(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     t(s, dir, "documents")
       .selectExpr("doc_id",
         "rolling_hash(text) AS fp",
@@ -1074,7 +1073,6 @@ object TextOps {
     * parquet-scan speed; the exploded (doc, char) exchange form it
     * replaces is the spec-side equivalence reference. */
   def gibberishGate(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     gibberishCorpus(s, dir)
       .withColumn("cs", expr("char_run_stats(text)"))
       .selectExpr("doc_id",

@@ -113,7 +113,7 @@ object TrainPrepOps {
     * tests drive it with generated corpora. */
   def concatChunkOf(s: SparkSession, docs: DataFrame): DataFrame = {
     val b = PackBudget
-    val nParts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val nParts = s.sessionState.conf.numShufflePartitions
     val d = docs
       .select(col("doc_id"), col("n_chars"))
       .repartitionByRange(nParts, col("doc_id"))
@@ -1295,7 +1295,6 @@ object TrainPrepOps {
     * everything downstream is grid arithmetic. The audit is O(scan)
     * regardless of shard count. */
   def shardConformance(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val d = t(s, dir, "documents").select(col("source"),
       (call_function("md5_fp60",
         concat(lit("shard:"), col("doc_id").cast("string")))
@@ -1398,7 +1397,6 @@ object TrainPrepOps {
     * reweighting: the corpus marginals come from the stats catalog,
     * not a rescan. */
   def iwEval(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val d = t(s, dir, "documents").select(col("doc_id"), col("text"),
         (col("n_chars") / IwBandChars).cast("bigint").as("band"))
       .withColumn("toks",

@@ -12,7 +12,6 @@ class AnalyticsOpsSpec extends AnyFunSuite {
   val dir = TestSession.sfDir("0.001")
 
   test("bloom probe: zero false negatives, bounded false positives") {
-    graft.functions.VectorFunctions.register(spark)
     val keys = spark.range(0, 1000).selectExpr("id * 3 AS k") // multiples of 3
     val bloom = keys.stat.bloomFilter("k", 1000, JoinOps.BloomFpp)
     val bos = new java.io.ByteArrayOutputStream()

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The native md5_fp60 must be bit-identical to the composed
   * conv(substring(md5(x), 1, 15), 16, 10) chain it replaces — every
-  * dedup/sampling/shuffle oracle depends on that equivalence. */
+  * dedup/sampling/shuffle oracle depends on that equivalence. The
+  * extension that binds it binds the other native functions too. */
 class Md5Fp60Spec extends AnyFunSuite {
 
   private val spark = TestSession.spark
@@ -61,6 +62,15 @@ class Md5Fp60Spec extends AnyFunSuite {
       .select(call_function("md5_fp60", col("doc_id").cast("string")).as("fp"))
     assert(df.exceptAll(direct).count() == 0 &&
       direct.exceptAll(df).count() == 0)
+  }
+
+  test("the extension binds every native function, in new sessions too") {
+    val names = graft.functions.GraftExtensions.Functions.map(_._1)
+    // q356 (ProfileOps.kmvSetAlgebra) needs kmv_agg
+    assert(names.contains("kmv_agg") && names.distinct == names)
+    for (sess <- Seq(spark, spark.newSession()); name <- names)
+      assert(sess.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name)), name)
   }
 
   test("MessageDigest reference agrees (third implementation)") {

@@ -312,7 +312,6 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("native blob expressions match the HOF reference and a plain-Scala recompute") {
-    graft.functions.VectorFunctions.register(spark)
     // phash: native byte loop vs the spec-reference lambda form
     val imgs = MultimodalOps.imageCorpus(spark, dir)
     val native = MultimodalOps.perceptualHash(imgs).collect()
@@ -1551,7 +1550,6 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("q228 cdc_bounds native expr == HOF reference; rolling == direct window sum") {
-    graft.functions.VectorFunctions.register(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text").limit(50)
     val got = docs.selectExpr("doc_id",
@@ -1899,7 +1897,6 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("q238 hll set algebra: register-max merge == union rebuild; disjoint intersection is noise") {
-    graft.functions.VectorFunctions.register(spark)
     val rows = ProfileOps.hllSetAlgebra(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getDouble(7), r.getDouble(8),

@@ -261,7 +261,6 @@ class PlanPropsSpec extends AnyFunSuite {
   }
 
   test("space-saving sketch aggregates map-side (partial before the exchange)") {
-    graft.functions.VectorFunctions.register(spark)
     val p = plan(spark.read.parquet(s"$dir/events.parquet")
       .selectExpr("event_id % 100 AS k")
       .selectExpr("space_saving_agg(k, 16) AS sk"))
@@ -1772,6 +1771,13 @@ class PlanPropsSpec extends AnyFunSuite {
       s"seed set not broadcast:\n${p.take(1800)}")
     assert(!p.contains("CartesianProduct"),
       s"ppr went cartesian:\n${p.take(1800)}")
+    // 7 cuts: the trade pairs, the nodes, the seeds and the rank
+    // generations 0..3; only the seed cut aggregates out_deg
+    val plans = PlanDump.plans(spark)(GraphOps.personalizedPageRank(spark, dir))
+      .map(_.executedPlan.toString)
+    assert(plans.size - 1 == 7, s"q314 cut ${plans.size - 1} times")
+    assert(plans.count(_.contains("max(out_deg")) == 1,
+      s"seed set re-derived:\n${plans.mkString("\n---\n").take(3000)}")
   }
 
   test("q315 edit verify: candidates flow through the cap guard; levenshtein in-row") {

@@ -225,7 +225,6 @@ class RelationalOpsSpec extends AnyFunSuite {
   test("q208 topk_agg: merge across partition counts is stable") {
     // the aggregate's partials must merge to the same result however
     // the input is partitioned — repartition and compare
-    graft.functions.VectorFunctions.register(spark)
     val base = EtlOps.events(spark, dir)
       .select(col("user_id"), col("event_id"),
         floor(col("value") * 1e6).cast("bigint").as("s"))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{SpaceSavingAgg, VectorFunctions}
+import graft.functions.SpaceSavingAgg
 import graft.operators.ProfileOps
 
 /** Specs for the native Space-Saving heavy-hitters aggregate (q117):
@@ -51,7 +51,6 @@ class SpaceSavingSpec extends AnyFunSuite {
   }
 
   test("q117 guarantees hold under both 1-partition and many-partition aggregation") {
-    VectorFunctions.register(spark)
     val dir = TestSession.sfDir("0.001")
     for (parts <- Seq(1, 7)) {
       val keyed = graft.operators.EtlOps.events(spark, dir)
@@ -93,7 +92,6 @@ class SpaceSavingSpec extends AnyFunSuite {
   // --- Count-Min (q175) --------------------------------------------------
 
   test("count-min counters conserve mass and the state is partition-invariant") {
-    VectorFunctions.register(spark)
     val d = ProfileOps.CmsDepth
     val w = ProfileOps.CmsWidth
     val keyed = graft.operators.EtlOps
@@ -137,7 +135,6 @@ class SpaceSavingSpec extends AnyFunSuite {
   /** (bucket, rank) pairs for a key column, the same construction
     * ProfileOps.hllAudit uses. */
   private def hllPairs(keys: org.apache.spark.sql.DataFrame) = {
-    VectorFunctions.register(spark)
     keys.withColumn("h", call_function("md5_fp60", col("k")))
       .withColumn("bkt", col("h") % ProfileOps.HllM)
       .withColumn("rnk", expr(

@@ -96,7 +96,6 @@ class TransformPropsSpec extends AnyFunSuite {
   }
 
   test("prop: rolling_hash folds Unicode CODE POINTS (incl. non-BMP) like the reference model") {
-    graft.functions.VectorFunctions.register(spark)
     val uniGen: Gen[String] = Gen.listOf(Gen.frequency(
       4 -> Gen.alphaNumChar.map(_.toString),
       1 -> Gen.oneOf("é", "ß", "中", "🙂", "𝕊", " "))) // incl. surrogate pairs
