@@ -18,16 +18,6 @@ object CurationOps {
   /** Conf key selecting the lineage-cut mode for iterative DataFrames. */
   val CheckpointDirKey = "spark.graft.checkpoint.dir"
 
-  /** Lineage cut for iterative DataFrames. Default: `localCheckpoint()`
-    * — executor-local block storage, fastest, but blocks die with an
-    * executor, so a lost executor aborts the job (acceptable on
-    * local[*] and short cluster jobs). With [[CheckpointDirKey]] set,
-    * the cut becomes a RELIABLE `checkpoint()` into that (HDFS/S3)
-    * directory: each round's labels survive executor loss, the mode a
-    * multi-hour 100 TB clustering run wants. Both are eager, so either
-    * way the logical plan downstream starts from materialized data —
-    * the property the iteration needs (plan doubling measured
-    * 1.4s → 30s without a cut). */
   /** Test-only intercept: when a thread installs a buffer here, every
     * [[cutLineage]] on that thread records the optimized plan it is
     * about to materialize. This exists because the cut is EAGER — an
@@ -55,6 +45,16 @@ object CurationOps {
     try (build, buf.toSeq) finally cutAudit.remove()
   }
 
+  /** Lineage cut for iterative DataFrames. Default: `localCheckpoint()`
+    * — executor-local block storage, fastest, but blocks die with an
+    * executor, so a lost executor aborts the job (acceptable on
+    * local[*] and short cluster jobs). With [[CheckpointDirKey]] set,
+    * the cut becomes a RELIABLE `checkpoint()` into that (HDFS/S3)
+    * directory: each round's labels survive executor loss, the mode a
+    * multi-hour 100 TB clustering run wants. Both are eager, so either
+    * way the logical plan downstream starts from materialized data —
+    * the property the iteration needs (plan doubling measured
+    * 1.4s → 30s without a cut). */
   def cutLineage(df: DataFrame): DataFrame = {
     val audit = cutAudit.get
     if (audit != null) audit += df.queryExecution.optimizedPlan
@@ -84,16 +84,17 @@ object CurationOps {
     }
 
   /** The one round loop of the iterative operators: generation 0 is
-    * `init`, generation r is `step` of generation r − 1, and every
-    * generation is cut by [[cutObserved]] with `obs`. Returns the
-    * generations 0..n and each one's observed longs, in round order.
-    * The cut per generation keeps each round's plan the size of one
-    * round, however many rounds ran before it. */
+    * `init`, generation r is `step(g, r)` of generation g = r − 1, and
+    * every generation is cut by [[cutObserved]] with `obs`. `step` is
+    * called with r = 1..n in order, so a round can salt its coins with
+    * r. Returns the generations 0..n and each one's observed longs, in
+    * round order. The cut per generation keeps each round's plan the
+    * size of one round, however many rounds ran before it. */
   def iterateCut(init: DataFrame, n: Int, obs: org.apache.spark.sql.Column*)(
-      step: DataFrame => DataFrame)
+      step: (DataFrame, Int) => DataFrame)
       : (IndexedSeq[DataFrame], IndexedSeq[IndexedSeq[Long]]) =
-    (1 to n).scanLeft(cutObserved(init, obs: _*)) { case ((g, _), _) =>
-      cutObserved(step(g), obs: _*)
+    (1 to n).scanLeft(cutObserved(init, obs: _*)) { case ((g, _), r) =>
+      cutObserved(step(g, r), obs: _*)
     }.unzip
 
   // --- q56: PII scrubbing ----------------------------------------------

@@ -1441,7 +1441,7 @@ object DedupOps {
     val names = EtlOps.t(s, dir, "part").select(col("p_name")).distinct()
     val lbl = CurationOps.iterateCut(
       names.select(col("p_name"), col("p_name").as("lbl")),
-      ConsolidateRounds)(g =>
+      ConsolidateRounds)((g, _) =>
       edges.join(g, edges("name_a") === g("p_name"))
         .select(col("name_b").as("p_name"), col("lbl"))
         .unionAll(g)

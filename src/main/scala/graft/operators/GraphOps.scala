@@ -106,7 +106,7 @@ object GraphOps {
     val (ranks, _) = CurationOps.iterateCut(
       ew.select(col("src").as("node")).dropDuplicates("node")
         .select(col("node"), lit(1.0).as("pr")), Iterations)(
-      pageRankStep(ew, _))
+      (g, _) => pageRankStep(ew, g))
     // ew is dead once the final generation is materialized — free it so
     // long-lived sessions (libraries, notebooks) don't pin the edge
     // table in storage
@@ -180,7 +180,7 @@ object GraphOps {
       nodes.join(broadcast(seeds), Seq("node"), "left")
         .select(col("node"),
           when(col("seed"), lit(nv.toDouble / PprSeeds))
-            .otherwise(lit(0.0)).as("pr")), Iterations) { gen =>
+            .otherwise(lit(0.0)).as("pr")), Iterations) { (gen, _) =>
       ew.join(gen, ew("src") === gen("node"))
         .select(col("dst"),
           floor(col("pr") / col("out_deg") * lit(1e12)).cast("long")
@@ -275,7 +275,7 @@ object GraphOps {
     // generation 0 is the first round over the identity labels
     val labels = CurationOps.iterateCut(
       lpaRound(edges, deg.select(col("node"), col("node").as("lbl"))),
-      LpaIters - 1)(lpaRound(edges, _))._1.last
+      LpaIters - 1)((g, _) => lpaRound(edges, g))._1.last
     val comm = labels.join(deg, "node")
       .groupBy("lbl").agg(count(lit(1)).as("size"),
         sum(col("deg")).as("d_c"))
@@ -1170,7 +1170,7 @@ object GraphOps {
     val (_, obs) = CurationOps.iterateCut(
       e0.groupBy("node").agg(count(lit(1)).as("deg"))
         .crossJoin(broadcast(kthr)), KCoreRounds,
-      count(lit(1)), coalesce(sum(col("deg")), lit(0L))) { deg =>
+      count(lit(1)), coalesce(sum(col("deg")), lit(0L))) { (deg, _) =>
       val removed = deg.filter(col("deg") < col("k")).select("node")
       val keep = deg.filter(col("deg") >= col("k"))
       // shuffle_hash (not broadcast: |removed| is |V|-scaled in the
@@ -1271,7 +1271,7 @@ object GraphOps {
     val (_, obs) = CurationOps.iterateCut(base, JumpRounds, count(lit(1)),
         count(when(col("ptr") % JumpMod === 0L, true)),
         count(when(col("ptr") === col("id") - (col("id") % JumpMod), true))
-      )(p => p.as("a").join(p.as("b"), col("a.ptr") === col("b.id"))
+      )((p, _) => p.as("a").join(p.as("b"), col("a.ptr") === col("b.id"))
         .select(col("a.id").as("id"), col("b.ptr").as("ptr")))
     // JumpRounds local rows in round order: the plan is a LocalRelation
     s.createDataFrame(obs.indices.tail.map { r =>
@@ -1824,7 +1824,7 @@ object GraphOps {
     val lbl = CurationOps.iterateCut(
       ed.select(col("level"), col("src").as("node")).distinct()
         .select(col("level"), col("node"), col("node").as("lbl")),
-      AttackCcRounds)(g =>
+      AttackCcRounds)((g, _) =>
       ed.join(g.select(col("level"), col("node").as("dst"),
           col("lbl")), Seq("level", "dst"))
         .select(col("level"), col("src").as("node"), col("lbl"))
@@ -2110,7 +2110,7 @@ object GraphOps {
         .select(col("node"), col("regs"),
           array().cast("array<bigint>").as("bs"), lit(true).as("chg"))),
       HyperBallRounds, count(lit(1)), count(when(col("chg"), true)),
-      sum(element_at(col("bs"), -1))) { gen =>
+      sum(element_at(col("bs"), -1))) { (gen, _) =>
       val nb = ed.join(gen.select(col("node").as("dst"), col("regs")),
           Seq("dst"))
         .select(col("src").as("node"), col("regs"),
@@ -2462,31 +2462,28 @@ object GraphOps {
     * wedge stream never shuffles; per-round lineage cuts. */
   def ktruss(s: SparkSession, dir: String): DataFrame = {
     val und = cooccurEdges(s, dir)
-    var e = CurationOps.cutLineage(
-      und.select(col("ua").as("a"), col("ub").as("b")))
-    var sup = CurationOps.cutLineage(edgeSupports(e))
-    val thr = sup.agg(ceil(sum(col("supp")).cast("double")
-      / count(lit(1)) / 2).cast("bigint").as("thr"))
-    val rows = scala.collection.mutable.Buffer.empty[DataFrame]
-    var prev = e.agg(count(lit(1)).as("n_prev"))
-    for (r <- 1 to TrussRounds) {
-      val keep = CurationOps.cutLineage(
-        sup.crossJoin(broadcast(thr))
-          .filter(col("supp") >= col("thr"))
-          .select("a", "b"))
-      val nn = keep.select(col("a").as("v"))
-        .unionAll(keep.select(col("b").as("v")))
-        .agg(countDistinct(col("v")).as("n_nodes"))
-      rows += keep.agg(count(lit(1)).as("n_edges"))
-        .crossJoin(prev).crossJoin(nn).crossJoin(broadcast(thr))
-        .selectExpr(s"CAST($r AS BIGINT) AS round", "thr AS support_thr",
-          "n_edges", "n_nodes", "n_prev - n_edges AS n_removed",
-          "(n_prev - n_edges) = 0 AS converged")
-      prev = keep.agg(count(lit(1)).as("n_prev"))
-      e = keep
-      if (r < TrussRounds) sup = CurationOps.cutLineage(edgeSupports(e))
+    // generation 0: every edge with its support; the threshold is read
+    // off its cut (the same double arithmetic as the oracle's tt)
+    val (sup0, Seq(m0, supSum)) = CurationOps.cutObserved(
+      edgeSupports(und.select(col("ua").as("a"), col("ub").as("b"))),
+      count(lit(1)), coalesce(sum(col("supp")), lit(0L)))
+    val thr = math.ceil(supSum.toDouble / m0 / 2).toLong
+    // round r keeps the edges of round r − 1 whose support, computed in
+    // this round, reaches the threshold; only the kept edges are cut
+    val (gens, obs) = CurationOps.iterateCut(
+      sup0.filter(col("supp") >= thr).select("a", "b"), TrussRounds - 1,
+      count(lit(1))) { (e, _) =>
+      edgeSupports(e).filter(col("supp") >= thr).select("a", "b")
     }
-    rows.reduce(_ unionAll _).orderBy("round")
+    val nEdges = m0 +: obs.map(_.head)
+    (1 to TrussRounds).map { r =>
+      val (e, removed) = (gens(r - 1), nEdges(r - 1) - nEdges(r))
+      e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
+        .agg(countDistinct(col("v")).as("n_nodes"))
+        .select(lit(r.toLong).as("round"), lit(thr).as("support_thr"),
+          lit(nEdges(r)).as("n_edges"), col("n_nodes"),
+          lit(removed).as("n_removed"), lit(removed == 0).as("converged"))
+    }.reduce(_ unionAll _).orderBy("round")
   }
 
   def ktrussOracle: String = {
@@ -2570,20 +2567,11 @@ object GraphOps {
   def densestSubgraph(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val und = cooccurEdges(s, dir)
-    var e = CurationOps.cutLineage(
-      und.select(col("ua").as("a"), col("ub").as("b")))
-    val rows = scala.collection.mutable.Buffer.empty[DataFrame]
-    def statRow(r: Int, e: DataFrame): DataFrame =
-      e.agg(count(lit(1)).as("n_edges"))
-        .crossJoin(e.select(col("a").as("v"))
-          .unionAll(e.select(col("b").as("v")))
-          .agg(countDistinct(col("v")).as("n_nodes")))
-        .selectExpr(s"CAST($r AS BIGINT) AS round", "n_nodes", "n_edges",
-          "CASE WHEN n_nodes > 0 THEN CAST(floor(1e6 *" +
-            " CAST(n_edges AS DOUBLE) / n_nodes) AS BIGINT) END" +
-            " AS density_fp")
-    rows += statRow(0, e)
-    for (r <- 1 to DsgRounds) {
+    // round r cuts only its edge frame; the nodes it keeps are computed
+    // inside the round
+    val (gens, obs) = CurationOps.iterateCut(
+      und.select(col("ua").as("a"), col("ub").as("b")), DsgRounds,
+      count(lit(1))) { (e, _) =>
       val ed = e.select(col("a").as("src"), col("b").as("dst"))
         .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
       val deg = ed.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -2591,17 +2579,21 @@ object GraphOps {
         .crossJoin(ed.agg(countDistinct(col("src")).as("n")))
       // Charikar/Bahmani peel at eps = 1/2: REMOVE deg <= 2(1+eps)·m/n,
       // i.e. KEEP deg·n > 3·m — exact integers
-      val keep = CurationOps.cutLineage(
-        deg.crossJoin(broadcast(st))
-          .filter(col("deg") * col("n") > lit(3L) * col("m"))
-          .select(col("src").as("node")))
-      e = CurationOps.cutLineage(e
-        .join(keep.select(col("node").as("a")), Seq("a"))
+      val keep = deg.crossJoin(broadcast(st))
+        .filter(col("deg") * col("n") > lit(3L) * col("m"))
+        .select(col("src").as("node"))
+      e.join(keep.select(col("node").as("a")), Seq("a"))
         .join(keep.select(col("node").as("b")), Seq("b"))
-        .select("a", "b"))
-      rows += statRow(r, e)
+        .select("a", "b")
     }
-    val curve = rows.reduce(_ unionAll _)
+    val curve = gens.zip(obs).zipWithIndex.map { case ((e, Seq(m)), r) =>
+      e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
+        .agg(countDistinct(col("v")).as("n_nodes"))
+        .selectExpr(s"CAST($r AS BIGINT) AS round", "n_nodes",
+          s"CAST($m AS BIGINT) AS n_edges",
+          "CASE WHEN n_nodes > 0 THEN CAST(floor(1e6 *" +
+            s" CAST($m AS DOUBLE) / n_nodes) AS BIGINT) END AS density_fp")
+    }.reduce(_ unionAll _)
     // 9-row frame: the running max and argmax flag are bounded windows
     val w = Window.orderBy("round")
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -2798,16 +2790,16 @@ object GraphOps {
     * graph (one doc per tight cluster neighborhood), seed distributed
     * graph coloring, thin a crawl frontier.
     * Per round: selected count, running MIS size, removed, alive,
-    * convergence flag — each round's counts are observed on the cuts
-    * of its winner and alive sets, so the report is a LocalRelation of
-    * local longs.
+    * convergence flag — each round's counts are observed on its one
+    * cut, the previous alive set tagged winner / neighbor of a winner /
+    * still alive, so the report is a LocalRelation of local longs.
     *
     * Parity: priorities are 60-bit md5 integers built from identical
     * strings; counts are exact; the oracle unrolls the
     * [[LubyRounds]] rounds as CTEs.
     *
     * Scale (100 TB): rides the shared co-activity artifact. The only
-    * iterated state is the |V|-row alive set (cutLineage per
+    * iterated state is the |V|-row tagged alive set (one cut per
     * generation); the symmetric edge table is cached partitioned on
     * the neighbor key, so BOTH per-round probes — min alive-neighbor
     * priority and neighbors-of-winners — hash-join in place
@@ -2821,32 +2813,32 @@ object GraphOps {
       .unionAll(und.select(col("ub").as("u"), col("ua").as("v")))
       .repartition(np, col("v"))
       .persist()
-    var (alive, Seq(nPrev)) =
-      CurationOps.cutObserved(ed.select("u").distinct(), count(lit(1)))
-    var mis = 0L
-    val rows = (1 to LubyRounds).map { r =>
-      val (sel, Seq(nSel)) =
-        CurationOps.cutObserved(misWinners(ed, alive, r), count(lit(1)))
+    // generation r tags every node alive after round r − 1: 1 joins the
+    // MIS in round r, 2 is a neighbor of a round-r winner, 0 stays alive
+    val (_, obs) = CurationOps.iterateCut(
+      ed.select("u").distinct().withColumn("tag", lit(0)), LubyRounds,
+      count(lit(1)), count(when(col("tag") === 1, true)),
+      count(when(col("tag") === 0, true))) { (g, r) =>
+      val alive = g.filter(col("tag") === 0).select("u")
+      val sel = misWinners(ed, alive, r)
       val nbrSel = ed
         .join(sel.withColumnRenamed("u", "v").hint("shuffle_hash"),
           Seq("v"))
         .select("u").distinct()
-      val (next, Seq(nAlive)) = CurationOps.cutObserved(alive
-        .join(sel, Seq("u"), "left_anti")
-        .join(nbrSel, Seq("u"), "left_anti"), count(lit(1)))
-      val row = (r.toLong, nSel, mis, nPrev, nAlive)
-      mis += nSel
-      nPrev = nAlive
-      alive = next
-      row
+      alive.join(sel.withColumn("is_sel", lit(true)), Seq("u"), "left")
+        .join(nbrSel.withColumn("is_nbr", lit(true)), Seq("u"), "left")
+        .select(col("u"), when(col("is_sel"), 1).when(col("is_nbr"), 2)
+          .otherwise(0).as("tag"))
     }
     ed.unpersist()
     // local rows in round order: the plan folds to a LocalRelation
-    s.createDataFrame(rows).toDF("round", "n_selected", "mis", "n_prev",
-        "n_alive")
-      .selectExpr("round", "n_selected", "mis + n_selected AS mis_size",
-        "n_prev - n_alive AS n_removed", "n_alive",
-        "n_alive = 0 AS converged")
+    val nSel = obs.map(_(1))
+    s.createDataFrame(obs.indices.tail.map { r =>
+        val (nPrev, nAlive) = (obs(r)(0), obs(r)(2))
+        (r.toLong, nSel(r), nSel.take(r + 1).sum, nPrev - nAlive, nAlive,
+          nAlive == 0)
+      }).toDF("round", "n_selected", "mis_size", "n_removed", "n_alive",
+        "converged")
   }
 
   def lubyMisOracle: String = {
@@ -2926,9 +2918,9 @@ object GraphOps {
     * windows over ONE exchange on the node key) and cached; each step
     * is a single hash join of the |walks|-row state against that
     * partitioning (the state side builds the hash map — shuffle_hash,
-    * never a per-step re-sort of |E|) plus |walks|-bounded distinct
-    * maintenance; per-step lineage cuts. Walk state never exceeds
-    * |starts| rows; nothing |E|-sized moves after the build. */
+    * never a per-step re-sort of |E|); one lineage cut per step. Walk
+    * state never exceeds |starts| rows; nothing |E|-sized moves after
+    * the build but the one node count of the report. */
   def randomWalks(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val und = cooccurEdges(s, dir)
@@ -2939,40 +2931,36 @@ object GraphOps {
         Window.partitionBy("node").orderBy("nbr")) - 1)
       .withColumn("deg", count(lit(1)).over(Window.partitionBy("node")))
       .persist()
-    // 1-row cut: the stat rows re-read this after ei is unpersisted
-    val nNodes = CurationOps.cutLineage(
-      ei.agg(countDistinct(col("node")).as("n_nodes")))
-    var walk = CurationOps.cutLineage(ei.select("node").distinct()
+    // generation t is the walk state after step t; the nodes visited by
+    // step t are the distinct `cur` over generations 0..t
+    val (walks, obs) = CurationOps.iterateCut(ei.select("node").distinct()
       .filter(call_function("md5_fp60",
         concat(lit("rws:"), col("node").cast("string")))
         % RwStartMod === 0)
-      .select(col("node").as("w"), col("node").as("cur")))
-    var visited = CurationOps.cutLineage(walk.select("cur").distinct())
-    val rows = scala.collection.mutable.Buffer.empty[DataFrame]
-    (0 to RwSteps).foreach { t =>
-      if (t > 0) {
+      .select(col("node").as("w"), col("node").as("cur")), RwSteps,
+      count(lit(1)), count(when(col("w") === col("cur"), true))) {
+      (walk, t) =>
         val coin = call_function("md5_fp60",
           concat(lit(s"rw:$t:"), col("w").cast("string")))
-        walk = CurationOps.cutLineage(walk.hint("shuffle_hash")
+        walk.hint("shuffle_hash")
           .join(ei, walk("cur") === ei("node") &&
             ei("idx") === coin % ei("deg"))
-          .select(col("w"), col("nbr").as("cur")))
-        visited = CurationOps.cutLineage(
-          visited.unionAll(walk.select("cur")).distinct())
-      }
-      rows += walk.agg(count(lit(1)).as("n_walks"),
-          countDistinct(col("cur")).as("n_distinct_cur"),
-          sum(when(col("w") === col("cur"), 1L).otherwise(0L))
-            .as("n_returned"))
-        .crossJoin(visited.agg(count(lit(1)).as("n_visited_cum")))
-        .crossJoin(nNodes)
-        .selectExpr(s"CAST($t AS BIGINT) AS step", "n_walks",
-          "n_distinct_cur", "n_returned", "n_visited_cum",
-          "CAST(floor(1e6 * CAST(n_visited_cum AS DOUBLE) / n_nodes)" +
-            " AS BIGINT) AS coverage_fp")
+          .select(col("w"), col("nbr").as("cur"))
     }
     ei.unpersist()
-    rows.reduce(_ unionAll _).orderBy("step")
+    val nNodes = ed.agg(countDistinct(col("node")).as("n_nodes"))
+    walks.zip(obs).zipWithIndex.map { case ((walk, Seq(nWalks, nRet)), t) =>
+      walk.agg(countDistinct(col("cur")).as("n_distinct_cur"))
+        .crossJoin(walks.take(t + 1).map(_.select("cur"))
+          .reduce(_ unionAll _)
+          .agg(countDistinct(col("cur")).as("n_visited_cum")))
+        .crossJoin(nNodes)
+        .selectExpr(s"CAST($t AS BIGINT) AS step",
+          s"CAST($nWalks AS BIGINT) AS n_walks", "n_distinct_cur",
+          s"CAST($nRet AS BIGINT) AS n_returned", "n_visited_cum",
+          "CAST(floor(1e6 * CAST(n_visited_cum AS DOUBLE) / n_nodes)" +
+            " AS BIGINT) AS coverage_fp")
+    }.reduce(_ unionAll _).orderBy("step")
   }
 
   def randomWalksOracle: String = {

@@ -1582,7 +1582,7 @@ object MlPrepOps {
     // uncut 8-deep weight chain doubles per iteration (measured 24 s at
     // sf0.1, planning-dominated; 2.4 s cut)
     val (ws, _) = CurationOps.iterateCut(logregStep(feat, logregW0(s)),
-      k - 1)(logregStep(feat, _))
+      k - 1)((w, _) => logregStep(feat, w))
     val pcols = ws.zipWithIndex.map { case (w, i) =>
       feat.crossJoin(broadcast(w))
         .selectExpr("doc_id", "y",

@@ -52,48 +52,31 @@ object ScaleOps {
 
   /** The q114 two-pass global rank as a reusable primitive: 1-based
     * dense `row_number() OVER (ORDER BY sortCols)` semantics WITHOUT
-    * the single-partition window — range partition on the sort key
-    * (pinned partition count), per-partition local rank, per-partition
-    * offsets collected once (#partitions scalars, the documented
-    * metadata-size collect) and joined back via broadcast. Shared by
-    * q114, q42's exact percentiles, q249's conformal order statistic
-    * and q261's decile grid, so every exact global order statistic in
-    * the suite runs through the ONE plan shape that survives 100 TB.
-    * Ties in sortCols get an arbitrary stable rank within their equal
-    * range (RangePartitioner keeps equal keys in one partition), so
-    * rank-k VALUE lookups — every use here — are deterministic. */
+    * the single-partition window — the exclusive [[withGlobalPrefixSum]]
+    * of a column of ones, plus 1. Shared by q114, q42's exact
+    * percentiles, q249's conformal order statistic and q261's decile
+    * grid, so every exact global order statistic in the suite runs
+    * through the ONE plan shape that survives 100 TB. Ties in sortCols
+    * get an arbitrary stable rank within their equal range
+    * (RangePartitioner keeps equal keys in one partition), so rank-k
+    * VALUE lookups — every use here — are deterministic. */
   private[graft] def withGlobalRank(df: DataFrame, rankCol: String,
-      sortCols: Column*): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    val nParts = s.sessionState.conf.numShufflePartitions
-    val parted = df.repartitionByRange(nParts, sortCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .persist()
-    // #partitions rows — the one driver-side scalar pass
-    val counts = parted.groupBy("__pid").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = counts.map(_._1)
-      .zip(counts.map(_._2).scanLeft(0L)(_ + _).init)
-    val offDf = broadcast(offsets.toSeq.toDF("__pid", "__pid_offset"))
-    val localRank = row_number().over(
-      Window.partitionBy("__pid").orderBy(sortCols: _*)).cast("bigint")
-    parted
-      .withColumn("__local", localRank)
-      .join(offDf, "__pid")
-      .withColumn(rankCol, col("__pid_offset") + col("__local"))
-      .drop("__pid", "__pid_offset", "__local")
-  }
+      sortCols: Column*): DataFrame =
+    withGlobalPrefixSum(df.withColumn("__one", lit(1L)), "__one", rankCol,
+        sortCols: _*)
+      .withColumn(rankCol, col(rankCol) + 1L)
+      .drop("__one")
 
   /** Exact EXCLUSIVE global prefix sum of `sumCol` under the
-    * `sortCols` total order — [[withGlobalRank]]'s sibling for
-    * cumulative sums: range partition on the sort key, per-partition
-    * exclusive running sum, per-partition totals collected once
-    * (#partitions scalars) and offset-joined back via broadcast. The
-    * scale-safe replacement for `sum().over(Window.orderBy(...))`,
-    * whose single-task sort is the 100×-scale hazard on any
-    * corpus-scaled frame (q330's |vocab|-row alias table). `sortCols`
-    * must be a total order (unique key) for a deterministic result. */
+    * `sortCols` total order: range partition on the sort key (pinned
+    * partition count), per-partition exclusive running sum,
+    * per-partition totals collected once (#partitions scalars, the
+    * documented metadata-size collect) and offset-joined back via
+    * broadcast. The scale-safe replacement for
+    * `sum().over(Window.orderBy(...))`, whose single-task sort is the
+    * 100×-scale hazard on any corpus-scaled frame (q330's |vocab|-row
+    * alias table). `sortCols` must be a total order (unique key) for a
+    * deterministic result. */
   private[graft] def withGlobalPrefixSum(df: DataFrame, sumCol: String,
       outCol: String, sortCols: Column*): DataFrame = {
     val s = df.sparkSession

@@ -12,8 +12,9 @@ import java.time.{LocalDate, LocalDateTime}
   * upserts happen on the driver only — executors never touch it. The
   * production implementation is a JDBC MERGE against SQL Server; tests
   * and the driver harness use the in-memory/file-backed implementation.
-  * Either way the ingest plan consumes it as a broadcast anti-join input
-  * (SURVEY P10/J4).
+  * Either way `IngestionJob.run` reads `all` once and snapshots it into
+  * a driver-side set of (source, environment, table) keys, which filters
+  * the discovered files before any Spark plan is built (SURVEY P10).
   */
 final case class MarkerEntry(
     parquetSource: String, targetTable: String, environment: String,

@@ -60,9 +60,14 @@ class ObservedCutsSpec extends AnyFunSuite {
 
   test("iterateCut: generations 0..n, each cut, observed longs in round order") {
     import org.apache.spark.sql.functions._
+    val rounds = scala.collection.mutable.Buffer.empty[Int]
     val ((gens, obs), cuts) = CurationOps.auditCuts(spark)(
       CurationOps.iterateCut(spark.range(5).toDF("x"), 2,
-        sum(col("x")), count(lit(1)))(_.select((col("x") + 1).as("x"))))
+        sum(col("x")), count(lit(1))) { (g, r) =>
+        rounds += r
+        g.select((col("x") + 1).as("x"))
+      })
+    assert(rounds == Seq(1, 2), s"step saw rounds $rounds")
     assert(cuts.size == 3)
     assert(obs == IndexedSeq(IndexedSeq(10L, 5L), IndexedSeq(15L, 5L),
       IndexedSeq(20L, 5L)))

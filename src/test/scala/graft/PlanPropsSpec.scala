@@ -1780,6 +1780,20 @@ class PlanPropsSpec extends AnyFunSuite {
       s"seed set re-derived:\n${plans.mkString("\n---\n").take(3000)}")
   }
 
+  test("q387/q388/q390/q392: one cut per round, plus generation 0 and the co-occurrence build") {
+    val rounds = Map("q387_ktruss" -> GraphOps.TrussRounds,
+      "q388_densest_subgraph" -> GraphOps.DsgRounds,
+      "q390_luby_mis" -> GraphOps.LubyRounds,
+      "q392_random_walks" -> GraphOps.RwSteps)
+    val cuts = rounds.map { case (q, _) =>
+      q -> CurationOps.auditCuts(spark)(
+        SparkEntry.queries(q)(spark, dir))._2.size
+    }
+    Bench.resetSharedState(spark)
+    assert(cuts == rounds.map { case (q, n) => q -> (n + 2) },
+      s"cuts per query: $cuts")
+  }
+
   test("q315 edit verify: candidates flow through the cap guard; levenshtein in-row") {
     val p = planWithBuilds(DedupOps.editVerify(spark, dir))
     assert(!p.contains("CartesianProduct"),
