@@ -258,18 +258,19 @@ object GraphOps {
     * cross-community sum; m, m_c, d_c are exact integers, and m is half
     * the degree sum observed on the degree cut.
     *
-    * Scale (100 TB): per iteration ONE hash join of the directed edge
-    * table — cached once, partitioned on `dst`, never re-shuffled —
-    * against the |V|-row label cut plus a (node, label) count collapse
-    * and the argmax aggregate; the q70 iterate-by-join discipline with
-    * a lineage cut per round. The modularity tail is two |E|/|V|-bounded
-    * joins against the final labels. */
+    * Scale (100 TB): per iteration ONE hash join of the session's arcs
+    * ([[cooccurArcs]], partitioned on `dst`, never re-shuffled) against
+    * the |V|-row label cut plus a (node, label) count collapse and the
+    * argmax aggregate; the q70 iterate-by-join discipline with a lineage
+    * cut per round. Degrees group the arcs on `dst` (by symmetry, the
+    * same degrees), also with no exchange. The modularity tail is two
+    * |E|/|V|-bounded joins against the final labels. */
   def lpaCommunities(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val und = cooccurEdges(s, dir).persist()
-    val edges = lpaEdges(und)
+    val und = cooccurEdges(s, dir)
+    val edges = cooccurArcs(s, dir)
     val (deg, Seq(degSum)) = CurationOps.cutObserved(
-      edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
+      edges.groupBy(col("dst").as("node")).agg(count(lit(1)).as("deg")),
       sum(col("deg")))
     val m = degSum / 2 // |undirected edges| — a scalar
     // generation 0 is the first round over the identity labels
@@ -307,14 +308,6 @@ object GraphOps {
         col("intra_edges"), col("n_communities_total"), col("modularity"))
       .orderBy("size_band")
   }
-
-  /** q319's directed edges, cached, partitioned on the join key `dst`. */
-  private[graft] def lpaEdges(und: DataFrame): DataFrame =
-    und.select(col("ua").as("src"), col("ub").as("dst"))
-      .unionAll(und.select(col("ub").as("src"), col("ua").as("dst")))
-      .repartition(und.sparkSession.sessionState.conf.numShufflePartitions,
-        col("dst"))
-      .persist()
 
   /** One synchronous LPA round, exposed for the plan pin. */
   private[graft] def lpaRound(edges: DataFrame, labels: DataFrame)
@@ -894,40 +887,27 @@ object GraphOps {
   /** Degree-band width for the census rows. */
   val TriBandWidth = 5
 
-  /** q307 — triangle census with per-degree-band clustering
-    * coefficients over the user co-activity graph (edges = user pairs
-    * sharing ≥ [[CoocMinCells]] distinct (event_type, hour) activity
-    * cells). Triangles separate genuine communities from hub noise —
-    * a bot herd hitting one endpoint produces stars (degree without
-    * closure) while coordinated accounts close triangles; transitivity
-    * vs degree is the standard first look.
-    *
-    * Counting is the degree-ordered edge-iterator (Schank & Wagner
-    * 2005): every edge orients from lower to higher (degree, id) rank,
-    * each triangle is counted exactly once at its lowest-rank vertex,
-    * and a vertex's oriented out-degree is O(√m) regardless of hub
-    * size — the bound that keeps every adjacency array small at scale.
-    *
-    * Exactness: triangles, degrees and wedge counts are exact
-    * integers; each local coefficient 2·tri/(deg·(deg−1)) is one
-    * double division, band means are rounded sums of those.
-    *
-    * Scale (100 TB): the stream collapses to distinct (cell, user)
-    * rows; pair volume is bounded by cap²·|cells| ([[CoocCellCap]]);
-    * the Θ(Σ wedges) closure work happens INSIDE rows as sorted-array
-    * intersections of O(√m)-bounded neighbor lists — the wedge stream
-    * is never materialized or shuffled; the only exchanges are the
-    * adjacency groupBy and two m-row joins. */
-  /** The artifacts one session's graph queries share: the capped
-    * co-occurrence edges, which every co-activity query reads (q307,
-    * q319, q375, q380, q382, q390, ...), and the HyperBall register
-    * generations, which q382 reads from q380. Each is built on first
-    * use, behind lineage cuts, so the checkpointed blocks outlive the
-    * catalog cache; later queries of the session read them. Oracles
-    * are unchanged: each still states the full build. */
+  /** The artifacts one session's graph queries share, each built on
+    * first use and read by every later query of the session:
+    *  - `cooc`: the capped co-occurrence edges (ua < ub), one lineage
+    *    cut; read by q307, q375/q384, q387, q388 and q319's modularity.
+    *  - `arcs`: `cooc` plus its reverse as (src, dst), partitioned on
+    *    `dst` and persisted; read by q319's rounds, q380, q390 and q392.
+    *  - `hb`: the HyperBall generations over `arcs`; q380 builds them,
+    *    q382 reads them.
+    * Oracles are unchanged: each still states the full build. */
   private final class SessionArtifacts(s: SparkSession, dir: String) {
     lazy val cooc: DataFrame = CurationOps.cutLineage(cooccurEdgesBuild(s, dir))
-    lazy val hb: HbRounds = hbRoundsBuild(s, dir)
+    // persisted, not cut: the cached frame keeps hashpartitioning(dst,
+    // n), so joins and groupBy on `dst` read it with no exchange; a
+    // localCheckpoint reports UnknownPartitioning, and every round's
+    // join would re-shuffle the |E| rows
+    lazy val arcs: DataFrame =
+      cooc.select(col("ua").as("src"), col("ub").as("dst"))
+        .unionAll(cooc.select(col("ub").as("src"), col("ua").as("dst")))
+        .repartition(s.sessionState.conf.numShufflePartitions, col("dst"))
+        .persist()
+    lazy val hb: HbRounds = hbRoundsBuild(arcs)
   }
 
   /** Memo contract: keyed by (session, fixture dir, lineage-cut mode).
@@ -963,6 +943,9 @@ object GraphOps {
   private[graft] def cooccurEdges(s: SparkSession, dir: String): DataFrame =
     artifacts(s, dir).cooc
 
+  private[graft] def cooccurArcs(s: SparkSession, dir: String): DataFrame =
+    artifacts(s, dir).arcs
+
   /** The co-activity edge list (ua < ub) — exposed so the spec can
     * count triangles independently of the oriented wedge join. */
   private[graft] def cooccurEdgesBuild(s: SparkSession, dir: String): DataFrame = {
@@ -988,6 +971,30 @@ object GraphOps {
       .select("ua", "ub")
   }
 
+  /** q307 — triangle census with per-degree-band clustering
+    * coefficients over the user co-activity graph (edges = user pairs
+    * sharing ≥ [[CoocMinCells]] distinct (event_type, hour) activity
+    * cells). Triangles separate genuine communities from hub noise —
+    * a bot herd hitting one endpoint produces stars (degree without
+    * closure) while coordinated accounts close triangles; transitivity
+    * vs degree is the standard first look.
+    *
+    * Counting is the degree-ordered edge-iterator (Schank & Wagner
+    * 2005): every edge orients from lower to higher (degree, id) rank,
+    * each triangle is counted exactly once at its lowest-rank vertex,
+    * and a vertex's oriented out-degree is O(√m) regardless of hub
+    * size — the bound that keeps every adjacency array small at scale.
+    *
+    * Exactness: triangles, degrees and wedge counts are exact
+    * integers; each local coefficient 2·tri/(deg·(deg−1)) is one
+    * double division, band means are rounded sums of those.
+    *
+    * Scale (100 TB): the stream collapses to distinct (cell, user)
+    * rows; pair volume is bounded by cap²·|cells| ([[CoocCellCap]]);
+    * the Θ(Σ wedges) closure work happens INSIDE rows as sorted-array
+    * intersections of O(√m)-bounded neighbor lists — the wedge stream
+    * is never materialized or shuffled; the only exchanges are the
+    * adjacency groupBy and two m-row joins. */
   def triangleCensus(s: SparkSession, dir: String): DataFrame = {
     val edges = cooccurEdges(s, dir).persist()
     val deg = edges.select(col("ua").as("u"))
@@ -2027,35 +2034,6 @@ object GraphOps {
     * reading, not a budget truncation. */
   val HyperBallRounds = 4
 
-  /** q380 — HyperBall / ANF neighborhood function (Boldi & Vigna 2013,
-    * "In-core computation of geometric centralities with HyperBall";
-    * Palmer, Gibbons & Faloutsos 2002 ANF): per node, an HLL sketch of
-    * the ball B(v, t) grown by one hop per round (merge own registers
-    * with every neighbor's), so N̂(t) = Σ_v |B(v, t)| estimates the
-    * number of node pairs within distance t — the distance
-    * distribution, reachable-pair curve and effective-diameter readout
-    * of the co-activity graph, at O(|V|·m) state instead of the
-    * quadratic exact BFS. Complements the wing: q59/q375 count
-    * components (connectivity), q358 weighs them (MSF), THIS measures
-    * how far apart the connected mass sits. One row per round: the
-    * pair estimate, exact changed-node count, reach fraction of the
-    * final round, and the convergence flag.
-    *
-    * Registers are RELATIONAL — (node, bkt, rank) rows, merge = GROUP
-    * BY (node, bkt) MAX(rank) — so the DuckDB oracle rebuilds the
-    * identical state with the identical max-merge (the q224 register
-    * discipline) and every derived double matches bitwise: S' is an
-    * exact DECIMAL(38,0) per node, α and the linear-counting ln table
-    * are build-time integer literals ([[ProfileOps.hllEstSql]]), and
-    * the per-node estimate freezes to floor(est·10³) BIGINT before the
-    * order-free global sum.
-    *
-    * Scale (100 TB): rides [[hbRounds]]: per round ONE edge⋈register
-    * join (edges cached on the join key) and ONE node-keyed merge —
-    * state is |V| register vectors plus R+1 longs per node, never
-    * pairs; per-round lineage cuts (the q338 discipline) whose observed
-    * longs are the report, a LocalRelation. The exact-BFS audit lives
-    * in the spec only; production pays sketch cost. */
   /** The HyperBall rounds — memoized per session ([[SessionArtifacts]])
     * like [[cooccurEdges]], so q380's curve and q382's harmonic
     * centrality read the SAME checkpointed sketch stream and the rounds
@@ -2077,13 +2055,8 @@ object GraphOps {
   private[graft] def hbRounds(s: SparkSession, dir: String): HbRounds =
     artifacts(s, dir).hb
 
-  private def hbRoundsBuild(s: SparkSession, dir: String): HbRounds = {
+  private def hbRoundsBuild(ed: DataFrame): HbRounds = {
     val m = ProfileOps.HllM
-    val und = cooccurEdges(s, dir)
-    val ed = und.select(col("ua").as("src"), col("ub").as("dst"))
-      .unionAll(und.select(col("ub").as("src"), col("ua").as("dst")))
-      .repartition(s.sessionState.conf.numShufflePartitions, col("dst"))
-      .persist()
     // hb_sketch reads (sp, vz) off the packed vector in one native loop;
     // the estimate itself is the SAME shared SQL text as the oracle
     val bfp = "CAST(floor((" +
@@ -2100,7 +2073,7 @@ object GraphOps {
     // are identical (spec-asserted against the hll_* forms); the
     // relational oracle rebuild is unchanged.
     val (gens, obs) = CurationOps.iterateCut(withBall(
-      ed.select(col("src").as("node")).distinct()
+      ed.select(col("dst").as("node")).distinct()
         .withColumn("h", call_function("md5_fp60",
           concat(lit("hb:"), col("node").cast("string"))))
         .withColumn("bkt", col("h") % m)
@@ -2126,11 +2099,39 @@ object GraphOps {
         .select(col("node"), col("regs"), col("bs"),
           (col("regs") =!= col("rp")).as("chg")))
     }
-    // every generation is checkpointed — the edge cache is done
-    ed.unpersist()
     HbRounds(gens.last, obs)
   }
 
+  /** q380 — HyperBall / ANF neighborhood function (Boldi & Vigna 2013,
+    * "In-core computation of geometric centralities with HyperBall";
+    * Palmer, Gibbons & Faloutsos 2002 ANF): per node, an HLL sketch of
+    * the ball B(v, t) grown by one hop per round (merge own registers
+    * with every neighbor's), so N̂(t) = Σ_v |B(v, t)| estimates the
+    * number of node pairs within distance t — the distance
+    * distribution, reachable-pair curve and effective-diameter readout
+    * of the co-activity graph, at O(|V|·m) state instead of the
+    * quadratic exact BFS. Complements the wing: q59/q375 count
+    * components (connectivity), q358 weighs them (MSF), THIS measures
+    * how far apart the connected mass sits. One row per round: the
+    * pair estimate, exact changed-node count, reach fraction of the
+    * final round, and the convergence flag.
+    *
+    * Registers are RELATIONAL — (node, bkt, rank) rows, merge = GROUP
+    * BY (node, bkt) MAX(rank) — so the DuckDB oracle rebuilds the
+    * identical state with the identical max-merge (the q224 register
+    * discipline) and every derived double matches bitwise: S' is an
+    * exact DECIMAL(38,0) per node, α and the linear-counting ln table
+    * are build-time integer literals ([[ProfileOps.hllEstSql]]), and
+    * the per-node estimate freezes to floor(est·10³) BIGINT before the
+    * order-free global sum.
+    *
+    * Scale (100 TB): rides [[hbRounds]]: per round ONE arc⋈register
+    * join (the session's [[cooccurArcs]], partitioned on the join key)
+    * and ONE node-keyed merge — state is |V| register vectors plus R+1
+    * longs per node, never pairs; per-round lineage cuts (the q338
+    * discipline) whose observed longs are the report, a LocalRelation.
+    * The exact-BFS audit lives in the spec only; production pays sketch
+    * cost. */
   def hyperball(s: SparkSession, dir: String): DataFrame = {
     val obs = hbRounds(s, dir).obs
     // R+1 local rows in round order: the plan folds to a LocalRelation
@@ -2760,7 +2761,7 @@ object GraphOps {
     * the alive set under fresh round-r md5 priorities. Exposed so the
     * plan pin can check the round's physical shape: priorities are
     * in-row expressions (never joined), the alive probe hash-joins
-    * against the cached edge partitioning (no sort-merge re-sort of
+    * against the arcs' cached partitioning (no sort-merge re-sort of
     * the |E| side), and the min-priority aggregate is map-combinable. */
   private[graft] def misWinners(ed: DataFrame, alive: DataFrame,
       r: Int): DataFrame = {
@@ -2798,39 +2799,34 @@ object GraphOps {
     * strings; counts are exact; the oracle unrolls the
     * [[LubyRounds]] rounds as CTEs.
     *
-    * Scale (100 TB): rides the shared co-activity artifact. The only
+    * Scale (100 TB): rides the session's co-activity arcs
+    * ([[cooccurArcs]], partitioned on the neighbor key). The only
     * iterated state is the |V|-row tagged alive set (one cut per
-    * generation); the symmetric edge table is cached partitioned on
-    * the neighbor key, so BOTH per-round probes — min alive-neighbor
-    * priority and neighbors-of-winners — hash-join in place
-    * (shuffle_hash on the |V|-bounded side; priorities are computed
-    * in-row, never joined). Nothing |E|-sized ever re-shuffles or
-    * re-materializes. */
+    * generation); BOTH per-round probes — min alive-neighbor priority
+    * and the one winner probe that tags winners and their neighbors —
+    * hash-join the arcs in place (shuffle_hash on the |V|-bounded side;
+    * priorities are computed in-row, never joined). Nothing |E|-sized
+    * ever re-shuffles or re-materializes. */
   def lubyMis(s: SparkSession, dir: String): DataFrame = {
-    val und = cooccurEdges(s, dir)
-    val np = s.sessionState.conf.numShufflePartitions
-    val ed = und.select(col("ua").as("u"), col("ub").as("v"))
-      .unionAll(und.select(col("ub").as("u"), col("ua").as("v")))
-      .repartition(np, col("v"))
-      .persist()
+    val ed = cooccurArcs(s, dir).select(col("src").as("u"), col("dst").as("v"))
     // generation r tags every node alive after round r − 1: 1 joins the
     // MIS in round r, 2 is a neighbor of a round-r winner, 0 stays alive
     val (_, obs) = CurationOps.iterateCut(
-      ed.select("u").distinct().withColumn("tag", lit(0)), LubyRounds,
-      count(lit(1)), count(when(col("tag") === 1, true)),
+      ed.select(col("v").as("u")).distinct().withColumn("tag", lit(0)),
+      LubyRounds, count(lit(1)), count(when(col("tag") === 1, true)),
       count(when(col("tag") === 0, true))) { (g, r) =>
       val alive = g.filter(col("tag") === 0).select("u")
-      val sel = misWinners(ed, alive, r)
-      val nbrSel = ed
-        .join(sel.withColumnRenamed("u", "v").hint("shuffle_hash"),
-          Seq("v"))
-        .select("u").distinct()
-      alive.join(sel.withColumn("is_sel", lit(true)), Seq("u"), "left")
-        .join(nbrSel.withColumn("is_nbr", lit(true)), Seq("u"), "left")
-        .select(col("u"), when(col("is_sel"), 1).when(col("is_nbr"), 2)
-          .otherwise(0).as("tag"))
+      // ONE winner probe: an arc into winner v tags v 1 and u 2; every
+      // alive node has an arc, so the min tag per node is its tag
+      val tags = ed
+        .join(misWinners(ed, alive, r).withColumnRenamed("u", "v")
+          .hint("shuffle_hash"), Seq("v"))
+        .select(inline(array(struct(col("v").as("u"), lit(1).as("tag")),
+          struct(col("u"), lit(2).as("tag")))))
+        .groupBy("u").agg(min(col("tag")).as("tag"))
+      alive.join(tags, Seq("u"), "left")
+        .select(col("u"), coalesce(col("tag"), lit(0)).as("tag"))
     }
-    ed.unpersist()
     // local rows in round order: the plan folds to a LocalRelation
     val nSel = obs.map(_(1))
     s.createDataFrame(obs.indices.tail.map { r =>
@@ -2915,18 +2911,17 @@ object GraphOps {
     * oracle unrolls the [[RwSteps]] steps as CTEs.
     *
     * Scale (100 TB): the neighbor-index table is built once (two
-    * windows over ONE exchange on the node key) and cached; each step
-    * is a single hash join of the |walks|-row state against that
-    * partitioning (the state side builds the hash map — shuffle_hash,
-    * never a per-step re-sort of |E|); one lineage cut per step. Walk
-    * state never exceeds |starts| rows; nothing |E|-sized moves after
-    * the build but the one node count of the report. */
+    * windows over [[cooccurArcs]] read as node := dst, already
+    * partitioned on the node key) and cached; each step is a single
+    * hash join of the |walks|-row state against that partitioning (the
+    * state side builds the hash map — shuffle_hash, never a per-step
+    * re-sort of |E|); one lineage cut per step. Walk state never
+    * exceeds |starts| rows; nothing |E|-sized moves after the build
+    * but the one node count of the report. */
   def randomWalks(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val und = cooccurEdges(s, dir)
-    val ed = und.select(col("ua").as("node"), col("ub").as("nbr"))
-      .unionAll(und.select(col("ub").as("node"), col("ua").as("nbr")))
-    val ei = ed
+    val arcs = cooccurArcs(s, dir)
+    val ei = arcs.select(col("dst").as("node"), col("src").as("nbr"))
       .withColumn("idx", row_number().over(
         Window.partitionBy("node").orderBy("nbr")) - 1)
       .withColumn("deg", count(lit(1)).over(Window.partitionBy("node")))
@@ -2948,7 +2943,7 @@ object GraphOps {
           .select(col("w"), col("nbr").as("cur"))
     }
     ei.unpersist()
-    val nNodes = ed.agg(countDistinct(col("node")).as("n_nodes"))
+    val nNodes = arcs.agg(countDistinct(col("dst")).as("n_nodes"))
     walks.zip(obs).zipWithIndex.map { case ((walk, Seq(nWalks, nRet)), t) =>
       walk.agg(countDistinct(col("cur")).as("n_distinct_cur"))
         .crossJoin(walks.take(t + 1).map(_.select("cur"))

@@ -1830,23 +1830,34 @@ class PlanPropsSpec extends AnyFunSuite {
     val p = plan(GraphOps.lpaCommunities(spark, dir))
     assert(!p.contains("CartesianProduct"),
       s"lpa went cartesian:\n${p.take(1800)}")
-    assert(p.contains("InMemoryTableScan"),
-      s"edge/label generations not cached:\n${p.take(1800)}")
+    assert(p.contains("Scan ExistingRDD"),
+      s"label generations not materialized:\n${p.take(1800)}")
+    // the rounds read the edge table in their cut plans
+    val rounds = planWithBuilds(GraphOps.lpaCommunities(spark, dir))
+    assert(rounds.contains("InMemoryTableScan"),
+      s"edge table not cached:\n${rounds.take(1800)}")
   }
 
-  test("q319 lpa round: struct-max argmax (no Window) over the dst-partitioned edge cache, never re-shuffled") {
+  /** The shuffles of `p` fed by a `cached` table scan with no exchange
+    * or join in between: each re-partitions the cached rows themselves. */
+  private def cacheReshuffles(p: org.apache.spark.sql.execution.SparkPlan)(
+      cached: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+        => Boolean): Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins.BaseJoinExec
-    // a shuffle fed by the edge cache with no join in between
-    // re-partitions the |E| rows themselves
-    def rawCache(n: SparkPlan): Boolean = n match {
-      case _: InMemoryTableScanExec => true
+    def raw(n: SparkPlan): Boolean = n match {
+      case x: InMemoryTableScanExec => cached(x)
       case _: Exchange | _: BaseJoinExec => false
-      case o => o.children.exists(rawCache)
+      case o => o.children.exists(raw)
     }
-    val edges = GraphOps.lpaEdges(GraphOps.cooccurEdges(spark, dir))
+    p.collect { case x: ShuffleExchangeExec if raw(x.child) => x }
+  }
+
+  test("q319 lpa round: struct-max argmax (no Window) over the dst-partitioned edge cache, never re-shuffled") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val edges = GraphOps.cooccurArcs(spark, dir)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val labels = CurationOps.cutLineage(edges.select(col("src").as("node"))
@@ -1855,12 +1866,36 @@ class PlanPropsSpec extends AnyFunSuite {
       assert(!p.toString.contains("Window"), s"round ranks with a window:\n$p")
       assert(p.find(_.isInstanceOf[InMemoryTableScanExec]).isDefined,
         s"round does not read the edge cache:\n$p")
-      val reshuffles = p.collect { case x: ShuffleExchangeExec => x }
-        .filter(x => rawCache(x.child))
-      assert(reshuffles.isEmpty, s"edge cache re-shuffled per round:\n$p")
+      assert(cacheReshuffles(p)(_ => true).isEmpty,
+        s"edge cache re-shuffled per round:\n$p")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("q319/q380/q390: no cut plan re-shuffles the shared co-activity arc cache") {
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation,
+      InMemoryTableScanExec}
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      for (q <- Seq("q319_lpa_communities", "q380_hyperball",
+          "q390_luby_mis")) {
+        val plans = PlanDump.plans(spark)(SparkEntry.queries(q)(spark, dir))
+          .map(_.executedPlan)
+        // the build above made this session's arcs; a scan of them is
+        // a scan of their cache builder
+        val arcs = GraphOps.cooccurArcs(spark, dir).queryExecution
+          .withCachedData.collectFirst { case r: InMemoryRelation =>
+            r.cacheBuilder }.get
+        def isArcs(x: InMemoryTableScanExec) = x.relation.cacheBuilder eq arcs
+        assert(plans.exists(_.exists {
+            case x: InMemoryTableScanExec => isArcs(x)
+            case _ => false
+          }), s"$q reads no shared arcs:\n${plans.mkString("\n---\n")}")
+        for (p <- plans) assert(cacheReshuffles(p)(isArcs).isEmpty,
+          s"$q re-shuffles the arc cache:\n$p")
+      }
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
-      edges.unpersist()
+      Bench.resetSharedState(spark)
     }
   }
 
@@ -2051,11 +2086,8 @@ class PlanPropsSpec extends AnyFunSuite {
   }
 
   test("q390 Luby MIS: the round block probes the pinned edge cache with a hash join and computes priorities in-row") {
-    val np = spark.sessionState.conf.numShufflePartitions
-    val und = GraphOps.cooccurEdges(spark, dir)
-    val ed = und.select(col("ua").as("u"), col("ub").as("v"))
-      .unionAll(und.select(col("ub").as("u"), col("ua").as("v")))
-      .repartition(np, col("v")).persist()
+    val ed = GraphOps.cooccurArcs(spark, dir)
+      .select(col("src").as("u"), col("dst").as("v"))
     val alive = CurationOps.cutLineage(ed.select("u").distinct())
     val p = plan(GraphOps.misWinners(ed, alive, 1))
     assert(p.contains("ShuffledHashJoin") || p.contains("BroadcastHashJoin"),
@@ -2065,7 +2097,6 @@ class PlanPropsSpec extends AnyFunSuite {
       s"MIS round went all-pairs:\n${p.take(1800)}")
     assert(p.contains("md5_fp60"),
       s"priorities not in-row md5 — joined from a table?:\n${p.take(1800)}")
-    ed.unpersist()
   }
 
   test("q380/q390 reports are local rows: the returned plans hold no Exchange and no file scan") {

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
 
 /** The contract of GraphOps' shared-artifact memo, pinned on the
-  * co-occurrence edges: within a session a second read is a lookup,
+  * co-occurrence edges, the arcs built from them and the HyperBall
+  * rounds: within a session a second read is a lookup,
   * `Bench.resetSharedState` forces a rebuild, and the lineage-cut mode
   * is part of the key (a reliable-checkpoint session never receives a
   * localCheckpoint artifact). Cuts are counted with the audit hook:
@@ -43,6 +44,27 @@ class SharedArtifactsSpec extends AnyFunSuite {
       .filter(p => p.getFileName.toString.startsWith("rdd-"))
       .count()
     assert(wrote > 0, s"no rdd checkpoints written under $ckDir")
+    Bench.resetSharedState(spark)
+  }
+
+  test("co-activity arcs: memoized per session, no cut beyond the edges', cached, rebuilt after resetSharedState") {
+    def cached(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    CurationOps.auditCuts(spark) {
+      def recorded = CurationOps.cutAudit.get.size
+      val first = GraphOps.cooccurArcs(spark, dir)
+      assert(recorded == 1, s"reading the arcs ran $recorded cuts")
+      assert(cached(first), "the arcs are not persisted")
+      val second = GraphOps.cooccurArcs(spark, dir)
+      assert(recorded == 1, "a second read in the same session ran a cut")
+      assert(second eq first)
+
+      Bench.resetSharedState(spark)
+      assert(!cached(first), "resetSharedState left the arcs cached")
+      val third = GraphOps.cooccurArcs(spark, dir)
+      assert(recorded == 2, "the read after resetSharedState did not rebuild")
+      assert(!(third eq first) && cached(third))
+    }
     Bench.resetSharedState(spark)
   }
 
